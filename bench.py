@@ -151,30 +151,32 @@ def regressions_vs_previous(times: dict, sf: float, threshold: float = 1.25) -> 
     The stdout line carries only the compact summary (count + the 3
     worst ratios keyed by 12-char name prefixes, inside the 1900-char
     tail budget); bench_detail.json gets every regressed query. None
-    when no comparable artifact exists or the scales differ (ratios
-    would be meaningless)."""
+    when no artifact from the same core count exists or the scales
+    differ (ratios would be meaningless)."""
     import glob
     import importlib.util
 
     here = os.path.dirname(os.path.abspath(__file__))
     prior = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    if not prior:
-        return None
     # Newest artifact from a COMPARABLE run: a driver record taken at a
     # different core count (the r14_c8 8-core control glob-sorts after
     # the 32-core r14 artifact) would flag per-query core-scaling as
     # regression — ratios across core counts are not code deltas.
+    # No such artifact: no gate — an incomparable one would only mislead.
     cpus_now = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
-    prev = prior[-1]
+    prev = None
     for cand in reversed(prior):
         try:
             with open(cand) as fh:
                 cpus_prev = json.load(fh).get("cpus")
-        except (OSError, json.JSONDecodeError):
+            if cpus_prev is not None and int(cpus_prev) != cpus_now:
+                continue
+        except (OSError, ValueError, TypeError):  # unreadable or a garbled "cpus"
             continue
-        if cpus_prev is None or int(cpus_prev) == cpus_now:
-            prev = cand
-            break
+        prev = cand
+        break
+    if prev is None:
+        return None
     try:
         with open(prev) as fh:
             rec = json.load(fh)

@@ -167,7 +167,8 @@ def _attach_robots(df, ctx):
     """Attach each record's host robots policy from the in-batch
     ``/robots.txt`` fetches — a crawl stores the robots responses in
     the same WARC shards as the pages, so the policy table is derived
-    from the window being processed, not a side input. Adds a
+    from the batch being processed (a ledger group's eligible files
+    for this run), not a side input. Adds a
     ``robots`` column (policy text; null when the host published
     none). Scale shape: the policy table is one small text row per
     HOST (domains, not pages), so it broadcast-joins; the groupBy that

@@ -108,7 +108,7 @@ class Target(Resource):
 @dataclass
 class Rollup:
     """Spark-native extension (no reference analogue — meta.go tracks
-    files only): a durable keyed rollup folded per window from the
+    files only): a durable keyed rollup folded per run from the
     transferred records' partial aggregates (operators/incremental_agg).
     ``aggregates`` maps output column -> 'count' | 'sum:<col>' |
     'min:<col>' | 'max:<col>' | 'distinct:<col>'; folds land one epoch
@@ -129,8 +129,9 @@ class DatasheetSpec:
     corpus DATASHEET (operators/datasheet — Gebru et al. per-source
     composition/lang/quality/dup/PII/media rollups) with the transfer's
     output. ``name`` is the JSON report path (<pwd>/date templates
-    expand like Meta.Name; written atomically per window over that
-    window's transferred rows); ``payload_field`` names an optional
+    expand like Meta.Name; one report per distinct expanded path,
+    written atomically over the transferred rows of the windows that
+    expand to it); ``payload_field`` names an optional
     binary column for the media stats (auto-detects 'payload')."""
 
     name: str = ""

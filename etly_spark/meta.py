@@ -24,8 +24,9 @@ error messages) — it is the BOUNDED etly-compatible status surface
 (`/etly/info`, the reference's meta.json shape), not the source of
 truth for skipping. ``resource_status`` stays per-source (reference
 parity, meta.go:48-61): one entry per distinct expanded source URL,
-bounded per meta FILE because each date-templated window writes its
-own ledger (the P3 grouping key) — a window's meta sees one source.
+each adding the records a run landed from it to its previous count —
+bounded per meta FILE by the look-back's window count (windows sharing
+a ledger form one P3 group and one pass per run).
 
 For streaming mode Spark's checkpoint/commit-log supersedes this ledger.
 """

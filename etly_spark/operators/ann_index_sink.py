@@ -16,28 +16,29 @@ config owns a BQ load:
                         "CompactThreshold": 16}
     }
 
-Semantics per window (one scheduled run over newly-arrived shard
-files — the meta ledger's exactly-once file tracking decides what is
-new, unchanged):
+Semantics per batch (one scheduled run of a ledger group — the
+look-back windows sharing a meta URL — over newly-arrived shard files;
+the meta ledger's exactly-once file tracking decides what is new,
+unchanged):
 
 - records need ``vec_id`` (long) + ``embedding`` (array<double>); the
   builtin ``etly.EmbeddingRecord`` schema decodes exactly that from
   ndjson. An optional ``op`` column is CDC ('add'/'del' — malformed
   values fail loudly, the streaming-loop contract);
-- the FIRST window freezes the coarse quantizer from its own adds,
+- the FIRST batch freezes the coarse quantizer from its own adds,
   nlist sized for the ANTICIPATED index (first-shard count x
   ``AnticipatedShards`` — the ivfpq_inc_index rule: a quantizer sized
   for the sample alone measurably caps recall at scale), committed
   with one atomic rename;
-- every window folds its adds as ONE raw epoch partition keyed by the
-  md5 of the window's sorted source-file set — O(window), earlier
-  epochs never read or rewritten, and a crashed-then-retried window
+- every batch folds its adds as ONE raw epoch partition keyed by the
+  md5 of the batch's sorted source-file set — O(batch), earlier
+  epochs never read or rewritten, and a crashed-then-retried batch
   OVERWRITES its own partition (the rollup per-file-epoch idempotence
   rule). A retry that races the encode rung can duplicate rows into a
   fresh raw epoch; those are bit-exact copies healed by the probe's
   candidate dedup — the same crash window the encode manifest already
   documents;
-- deletes fold as the window's tombstone partition (delete-final);
+- deletes fold as the batch's tombstone partition (delete-final);
 - maintenance runs inline, config-owned: ``EncodeEvery`` quantizes the
   raw write buffer into a codes segment once that many loose raw
   epochs accumulate (encode_ivfpq_postings — books topped up from the
@@ -67,8 +68,8 @@ def fold_window_into_index(
     epoch_key: str,
     opts: dict | None = None,
 ) -> list[str]:
-    """Fold one Transfer window's records into the IVFPQ maintenance
-    index at ``index_dir``; returns the paths this window wrote (the
+    """Fold one Transfer batch's records into the IVFPQ maintenance
+    index at ``index_dir``; returns the paths this batch wrote (the
     Transfer result's outputs surface). See the module docstring for
     the full contract."""
     from etly_spark.queries.similarity import (

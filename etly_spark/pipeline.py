@@ -3,11 +3,16 @@
 Reference lifecycle collapse (SURVEY §3): etly's master/worker fan-out
 (per-window goroutines → per-file goroutines → HTTP cluster scatter,
 transfer_service.go:451-477,698-760; transfer_object_service_client.go)
-is replaced by a single declarative plan per time-window:
+is replaced by a single declarative plan per ledger group per run — the
+look-back windows that share one meta URL:
 
     read (S1,S2,S4,S5) → enrich (F2) → filter (F1) → transform (F3)
       → route (R1-R6) → ndjson/gzip sink (K1,B1) → meta ledger (M1,M2)
 
+A group loads its ledger once, lists every window, answers the skip set
+with one sidecar probe over the union of the listings, and runs one plan
+over all windows' eligible files; each file keeps its own window's
+target key, and the sidecar keeps one run_ts partition per window.
 Spark's scheduler provides P1-P4; Catalyst fuses F1-F4 into whole-stage
 codegen. Per-file record counts for the meta ledger come from one extra
 aggregation over the persisted parse stage (the reference counts them
@@ -104,6 +109,19 @@ class TransferResult:
     outputs: list[str] = field(default_factory=list)
 
 
+@dataclass
+class _UrlWindow:
+    """One look-back window of a URL source within its ledger group."""
+
+    ts: datetime
+    src_url: str
+    target_template: str
+    objects: list[tuple[str, int]]  # the source listing: (url, size)
+    eligible: list[str] = field(default_factory=list)
+    pending: int = 0
+    n_rec: int = 0  # records this run landed from the window
+
+
 def _local(url: str) -> str:
     return url[len("file://") :] if url.startswith("file://") else url
 
@@ -185,29 +203,30 @@ class TransferService:
     def _run_windows(self, t: Transfer, windows: list, result: TransferResult) -> None:
         """P3 (transfer_service.go:451-477): windows grouped by their
         meta URL; groups submit CONCURRENTLY from a bounded driver
-        thread pool, windows within a group sequentially — a group owns
-        its ledger file, so ledger writes never race. Spark schedules
-        the concurrent window DAGs across the cluster (a 24-hour
-        look-back no longer runs 24 serial jobs with the cluster idle
-        between DAGs). Each worker wraps ``inheritable_thread_target``
-        so the caller's job-group property propagates: a TimeOut cancel
+        thread pool. A URL-source group runs as ONE pass per run
+        (`_run_url_group`): one ledger load, one skip-set probe, one
+        Spark plan over every window's eligible files, one ledger save
+        — a group owns its ledger file, so ledger writes never race.
+        Datastore windows run one SQL query each, in order within their
+        group. Each worker wraps ``inheritable_thread_target`` so the
+        caller's job-group property propagates: a TimeOut cancel
         (service._run_bounded) still kills exactly this run's jobs.
-        Per-window progress merges under a lock; the first window
-        failure is re-raised after every group finishes (reference
-        parity: goroutines run to completion independently)."""
+        Per-group progress merges under a lock; the first group failure
+        is re-raised after every group finishes (reference parity:
+        goroutines run to completion independently)."""
         merge_lock = threading.Lock()
 
         def run_group(tss: list) -> None:
-            for ts in tss:
-                wres = TransferResult(name=result.name)
-                try:
-                    if t.source.type == "datastore":
-                        self._run_datastore_window(t, ts, wres)
-                    else:
-                        self._run_url_window(t, ts, wres)
-                finally:
-                    with merge_lock:
-                        _merge_result(result, wres)
+            gres = TransferResult(name=result.name)
+            try:
+                if t.source.type == "datastore":
+                    for ts in tss:
+                        self._run_datastore_window(t, ts, gres)
+                else:
+                    self._run_url_group(t, tss, gres)
+            finally:
+                with merge_lock:
+                    _merge_result(result, gres)
 
         groups: dict[str, list] = {}
         for ts in windows:
@@ -236,7 +255,7 @@ class TransferService:
 
     def _meta_url_for(self, t: Transfer, ts: datetime) -> str:
         """The ledger URL a window writes — also the P3 grouping key
-        (windows sharing a ledger must not run concurrently)."""
+        (windows sharing a ledger form one group)."""
         if t.meta:
             return expand_date(expand_env(expand_pwd(t.meta.name, t.base_dir)), ts)
         if t.source.type == "datastore":
@@ -269,141 +288,165 @@ class TransferService:
 
     # ------------------------------------------------------ URL source --
 
-    def _run_url_window(self, t: Transfer, ts: datetime, result: TransferResult) -> None:
+    def _run_url_window(self, t: Transfer, ts: datetime) -> _UrlWindow:
+        """Expand one window's source and target templates and list its
+        source; the rest of the work is shared by the window's ledger
+        group (`_run_url_group`)."""
         src_url = expand_date(expand_env(expand_pwd(t.source.name, t.base_dir)), ts)
-        target_template = expand_date(expand_env(expand_pwd(t.target.name, t.base_dir)), ts)
-        meta_url = self._meta_url_for(t, ts)
-        meta = Meta.load(meta_url)
+        return _UrlWindow(
+            ts=ts,
+            src_url=src_url,
+            target_template=expand_date(expand_env(expand_pwd(t.target.name, t.base_dir)), ts),
+            objects=list_source_objects(src_url, self.spark),
+        )
 
-        objects = list_source_objects(src_url, self.spark)
+    def _run_url_group(self, t: Transfer, tss: list, result: TransferResult) -> None:
+        """One pass over the windows that share a ledger: load the Meta
+        once, list every window, answer the skip set with ONE sidecar
+        probe over the union of the listings, filter each window on its
+        own (MaxTransfers stays per window), transfer every eligible
+        file in one plan, then roll up status per source and save once.
+        A tick that finds nothing starts no transfer job."""
+        meta_url = self._meta_url_for(t, tss[0])
+        meta = Meta.load(meta_url)
+        windows = [self._run_url_window(t, ts) for ts in tss]
         # M1 skip-set at scale: the bounded JSON holds only recent
         # entries; full history is answered by the parquet-sidecar index
-        # scoped to THIS listing (driver memory O(listed), never
+        # scoped to the listings (driver memory O(listed), never
         # O(history)). Union keeps just-written entries visible even
         # before any sidecar exists (and legacy metas keep working).
-        processed_urls = set(meta.processed) | ProcessedIndex(meta_url).processed_among(
-            u for u, _ in objects
+        processed = set(meta.processed) | ProcessedIndex(meta_url).processed_among(
+            u for w in windows for u, _ in w.objects
         )
-        eligible = filter_storage_objects(
-            objects,
-            filter_reg_exp=t.source.filter_reg_exp,
-            processed=processed_urls,
-            max_transfers=t.max_transfers,
-        )
-        # M2 status roll-up even on NOOP (transfer_service.go:547-564).
-        # Hidden files are excluded like zero-byte ones: both classes are
-        # permanently ineligible, so counting them would report pending
-        # work that can never drain.
-        pending = len(
-            [
-                u
-                for u, s in objects
-                if s > 0 and not is_hidden(u) and u not in processed_urls
-            ]
-        ) - len(eligible)
-        if not eligible:
+        claimed: set[str] = set()
+        for w in windows:
+            # a file two windows list (same source, different target)
+            # goes to the first of them, as in a window-by-window run
+            objects = [(u, s) for u, s in w.objects if u not in claimed]
+            w.eligible = filter_storage_objects(
+                objects,
+                filter_reg_exp=t.source.filter_reg_exp,
+                processed=processed,
+                max_transfers=t.max_transfers,
+            )
+            claimed.update(w.eligible)
+            # Hidden files are excluded like zero-byte ones: both classes
+            # are permanently ineligible, so counting them would report
+            # pending work that can never drain.
+            waiting = [u for u, s in objects if s > 0 and not is_hidden(u) and u not in processed]
+            w.pending = max(len(waiting) - len(w.eligible), 0)
+
+        batch = [w for w in windows if w.eligible]
+        if batch:
+            self._transfer_group(t, batch, meta, meta_url, result)
+
+        # M2 status roll-up per source, even on NOOP (transfer_service.go:
+        # 547-564; meta.go:48-61): a source's record count grows by what
+        # this run landed from it. resource_processed is listing-scoped,
+        # so it stays correct after the JSON evicts old entries.
+        done = processed | set(meta.processed)
+        for w in windows:
+            prev = meta.resource_status.get(w.src_url, ProcessingStatus())
             meta.put_status(
-                src_url,
+                w.src_url,
                 ProcessingStatus(
-                    resource_processed=len(processed_urls),
-                    resource_pending=max(pending, 0),
-                    record_processed=meta.status.record_processed,
+                    resource_processed=sum(u in done for u, _ in w.objects),
+                    resource_pending=w.pending,
+                    record_processed=prev.record_processed + w.n_rec,
                 ),
             )
-            meta.save()
-            return
+        meta.save()
 
-        # Per-file fault isolation (transfer_service.go:718-737 parity,
-        # Spark-shaped): the window reads all files in ONE job (the fast
-        # path — no per-file overhead when everything is healthy). If that
-        # job fails, a distributed probe reads each file end-to-end to
-        # attribute the failure: unreadable files (truncated gzip, missing
-        # object, permission) get an error ledger entry — recorded as
-        # processed, so the next run skips them, matching the reference's
-        # "log this to meta so we can skip it next time"
-        # (transfer_service.go:640-648) — and the window retries with the
-        # healthy files. The probe is O(window bytes) but runs ONLY on the
-        # failure path. Divergence from the reference, by design: a file
-        # failing mid-stream contributes ZERO records (the reference keeps
-        # records decoded before a gzip.ErrChecksum, :731, making counts
-        # depend on the truncation point); all-or-nothing per file keeps
-        # the ledger deterministic under replay.
-        n_rec = 0
+    def _transfer_group(
+        self,
+        t: Transfer,
+        batch: list[_UrlWindow],
+        meta: Meta,
+        meta_url: str,
+        result: TransferResult,
+    ) -> None:
+        """Per-file fault isolation (transfer_service.go:718-737 parity,
+        Spark-shaped): the group reads all its files in ONE job (the fast
+        path — no per-file overhead when everything is healthy). If that
+        job fails, a distributed probe reads each file end-to-end to
+        attribute the failure: unreadable files (truncated gzip, missing
+        object, permission) get an error ledger entry in their own
+        window's sidecar partition — recorded as processed, so the next
+        run skips them, matching the reference's "log this to meta so we
+        can skip it next time" (transfer_service.go:640-648) — and the
+        healthy files retry in one plan. The probe is O(batch bytes) but
+        runs ONLY on the failure path. Divergence from the reference, by
+        design: a file failing mid-stream contributes ZERO records (the
+        reference keeps records decoded before a gzip.ErrChecksum, :731,
+        making counts depend on the truncation point); all-or-nothing per
+        file keeps the ledger deterministic under replay."""
         try:
-            n_rec = self._transfer_url_files(
-                t, ts, eligible, target_template, meta, meta_url, result, src_url
-            )
+            self._transfer_url_files(t, batch, meta, meta_url, result)
+            return
         except MaxErrorsExceeded:
             raise
         except Exception:
             from etly_spark.sources.storage import _forced_codec_ext
 
             bad = probe_unreadable(
-                self.spark, eligible, forced_ext=_forced_codec_ext(t.source)
+                self.spark,
+                [u for w in batch for u in w.eligible],
+                forced_ext=_forced_codec_ext(t.source),
             )
             if not bad:
                 raise
-            bad_entries = []
-            for url, perr in sorted(bad.items()):
-                msg = f"failed to read source object {url}: {perr}"
+        for w in batch:
+            entries = []
+            for url in sorted(u for u in w.eligible if u in bad):
+                msg = f"failed to read source object {url}: {bad[url]}"
                 meta.add_error(msg)
                 om = ObjectMeta(source=url, error=msg, message=msg)
                 meta.record(om)
-                bad_entries.append(om)
+                entries.append(om)
                 result.progress.file_processed += 1
             # error entries reach the durable sidecar too — the skip-set
             # source of truth must remember them past the JSON bound
-            _append_ledger_sidecar(sidecar_dir(meta_url), ts.isoformat(), bad_entries)
-            meta.save()  # bad entries survive even if the retry fails too
-            healthy = [u for u in eligible if u not in bad]
-            if healthy:
-                n_rec = self._transfer_url_files(
-                    t, ts, healthy, target_template, meta, meta_url, result, src_url
-                )
-
-        meta.put_status(
-            src_url,
-            ProcessingStatus(
-                # listing-scoped history ∪ this run's records — stays
-                # correct after the JSON evicts old entries
-                resource_processed=len(processed_urls | set(meta.processed)),
-                resource_pending=max(pending, 0),
-                record_processed=meta.status.record_processed + n_rec,
-            ),
-        )
-        meta.save()
+            _append_ledger_sidecar(sidecar_dir(meta_url), w.ts.isoformat(), entries)
+            w.eligible = [u for u in w.eligible if u not in bad]
+        meta.save()  # bad entries survive even if the retry fails too
+        healthy = [w for w in batch if w.eligible]
+        if healthy:
+            self._transfer_url_files(t, healthy, meta, meta_url, result)
 
     def _transfer_url_files(
         self,
         t: Transfer,
-        ts: datetime,
-        eligible: list[str],
-        target_template: str,
+        batch: list[_UrlWindow],
         meta: Meta,
         meta_url: str,
         result: TransferResult,
-        src_url: str,
-    ) -> int:
-        """Transfer one window's eligible files: read → operator chain →
-        routed write → per-file ledger records. Returns records landed."""
-        # R1-R6 master side: per-file target key (template + sourceUrl vars)
+    ) -> None:
+        """Transfer a ledger group's eligible files in one plan: read →
+        operator chain → routed write → per-file ledger records, each
+        under its own window. Batch-scoped stages (DedupLines,
+        RemoveSpans, AttachRobots, the E1 error count, the rollup
+        compaction) see the whole batch. Sets each window's ``n_rec``."""
+        # R1-R6 master side: per-file target key (its window's template
+        # + sourceUrl vars)
         file_keys: dict[str, str] = {}
-        for url in eligible:
-            variables = self._master_variables(t, url)
-            file_keys[_norm_file_url(url)] = expand_target_key(
-                target_template, url, ts, variables, t.base_dir
-            )
+        for w in batch:
+            for url in w.eligible:
+                variables = self._master_variables(t, url)
+                file_keys[_norm_file_url(url)] = expand_target_key(
+                    w.target_template, url, w.ts, variables, t.base_dir
+                )
+        eligible = [u for w in batch for u in w.eligible]
 
         df = read_records(self.spark, t.source, [_local(u) for u in eligible])
-        df = self._enrich(df, t, src_url)
+        df = self._enrich(df, t, batch[0].src_url, [w.src_url for w in batch])
         df = df.withColumn(KEEP, self._keep_column(df, t))
         if t.rollup or t.datasheet:
             # extra consumers beyond the routed write (per-file rollup
             # partials / the datasheet report pass / per-file ledger
-            # stats): cache the decoded window (MEMORY_AND_DISK;
-            # window-bounded by MaxTransfers x MaxAllowedSize) so the
-            # source is read and decoded once, not once per consumer.
-            # Released in the finally below.
+            # stats): cache the decoded batch (MEMORY_AND_DISK; bounded
+            # by MaxTransfers x MaxAllowedSize per window) so the source
+            # is read and decoded once, not once per consumer. Released
+            # in the finally below.
             df = df.persist()
         try:
 
@@ -413,7 +456,7 @@ class TransferService:
             # full pass for global counts. Reference parity: the reference
             # also counts while streaming the transfer (transfer.go:17-25) —
             # an abort happens after work was spent; meta is then NOT
-            # recorded, so the next run reprocesses the window.
+            # recorded, so the next run reprocesses the batch.
             obs = Observation()
             observed = df.observe(
                 obs,
@@ -424,12 +467,12 @@ class TransferService:
             out = observed.filter(~F.col(CORRUPT) & F.col(KEEP))
             out = self._transform(out, t)
             if (t.target.transfer_method or "").lower() == "annindexfold":
-                # config-owned ANN index maintenance (r14): the window
+                # config-owned ANN index maintenance (r14): the batch
                 # folds into the Target index instead of a file sink —
                 # the reference's special-sink dispatch shape
                 # (transfer_service.go:566-663, the BQ load path).
-                # Epoch key = md5 of the window's sorted source set, so
-                # a crashed-then-retried window overwrites its own
+                # Epoch key = md5 of the batch's sorted source set, so
+                # a crashed-then-retried batch overwrites its own
                 # partition (the rollup per-file-epoch idempotence
                 # rule).
                 import hashlib as _hashlib
@@ -438,16 +481,22 @@ class TransferService:
                     fold_window_into_index,
                 )
 
-                epoch_key = _hashlib.md5(
-                    "|".join(sorted(_norm_file_url(u) for u in eligible)).encode()
-                ).hexdigest()[:12]
-                outputs = fold_window_into_index(
-                    self.spark,
-                    out,
-                    _local(target_template),
-                    epoch_key,
-                    t.target.index_options,
-                )
+                outputs = []
+                for target, ws, rows in _window_slices(
+                    out, batch, lambda w: w.target_template
+                ):
+                    epoch_key = _hashlib.md5(
+                        "|".join(
+                            sorted(_norm_file_url(u) for w in ws for u in w.eligible)
+                        ).encode()
+                    ).hexdigest()[:12]
+                    outputs += fold_window_into_index(
+                        self.spark,
+                        rows,
+                        _local(target),
+                        epoch_key,
+                        t.target.index_options,
+                    )
             else:
                 key_col = self._routed_key_column(t, file_keys)
                 outputs = self._write_routed(out, key_col, t)
@@ -465,22 +514,23 @@ class TransferService:
             if t.rollup:
                 self._fold_rollup(t, eligible, out)
             if t.datasheet:
-                self._ship_datasheet(t, ts, out)
+                self._ship_datasheet(t, batch, out)
 
             # M1: per-file ledger (meta.go:6-26; transfer_service.go:739-757).
             # Per-file stats are ONE distributed aggregate collected once —
-            # bounded by this window's ≤ MaxTransfers files, so nothing
-            # per-record ever sits on the driver. The collected rows feed
-            # (a) the BOUNDED JSON ledger (the reference-compatible status
-            # surface — most recent MAX_JSON_PROCESSED entries) and (b) the
-            # run_ts-partitioned parquet sidecar, which is the DURABLE full
-            # history and the skip-set source of truth (meta.ProcessedIndex):
-            # appends are O(this window's files) forever — per-window ledger
-            # cost is flat at any history size, vs the reference's full
-            # Processed-map rewrite per window. The sidecar file itself is
-            # written with Arrow on the driver — the rows are already here
-            # and bounded, so launching a Spark write job (with its per-task
-            # commit protocol) for ≤ MaxTransfers rows is pure overhead.
+            # bounded by the group's ≤ MaxTransfers files per window, so
+            # nothing per-record ever sits on the driver. The collected rows
+            # feed (a) the BOUNDED JSON ledger (the reference-compatible
+            # status surface — most recent MAX_JSON_PROCESSED entries) and
+            # (b) the run_ts-partitioned parquet sidecar, one partition per
+            # window, which is the DURABLE full history and the skip-set
+            # source of truth (meta.ProcessedIndex): appends are O(this
+            # run's files) forever — ledger cost is flat at any history
+            # size, vs the reference's full Processed-map rewrite per
+            # window. The sidecar file itself is written with Arrow on the
+            # driver — the rows are already here and bounded, so launching a
+            # Spark write job (with its per-task commit protocol) for a few
+            # rows is pure overhead.
             per_file_df = df.groupBy(FILE).agg(
                 F.count(F.lit(1)).alias("total"),
                 F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
@@ -489,56 +539,57 @@ class TransferService:
                     "corrupt_sample"
                 ),
             )
-            per_file_rows = per_file_df.collect()
-            per_file = {r[FILE]: r for r in per_file_rows}
+            per_file = {r[FILE]: r for r in per_file_df.collect()}
 
-            n_rec = 0
-            entries: list[ObjectMeta] = []
-            for url in eligible:
-                norm = _norm_file_url(url)
-                r = per_file.get(norm)
-                total = r["total"] if r is not None else 0
-                corrupt = int(r["corrupt"]) if r is not None else 0
-                kept = int(r["kept"]) if r is not None else 0
-                err_msg = ""
-                if corrupt and r is not None and r["corrupt_sample"]:
-                    err_msg = f"failed to decode json ({corrupt} times): {r['corrupt_sample'][:200]}"
-                    meta.add_error(err_msg)
-                om = ObjectMeta(
-                    source=url,
-                    target=file_keys[norm],
-                    record_processed=kept,
-                    record_skipped=total - corrupt - kept,
-                    record_errors=corrupt,
-                    message=err_msg,
-                )
-                meta.record(om)
-                entries.append(om)
-                n_rec += kept
-                result.progress.record_read += total
-                result.progress.record_processed += kept
-                result.progress.record_skipped += total - corrupt - kept
-                result.progress.record_errors += corrupt
-                result.progress.file_processed += 1
-            _append_ledger_sidecar(sidecar_dir(meta_url), ts.isoformat(), entries)
-            return n_rec
+            for w in batch:
+                w.n_rec = 0
+                entries: list[ObjectMeta] = []
+                for url in w.eligible:
+                    norm = _norm_file_url(url)
+                    r = per_file.get(norm)
+                    total = r["total"] if r is not None else 0
+                    corrupt = int(r["corrupt"]) if r is not None else 0
+                    kept = int(r["kept"]) if r is not None else 0
+                    err_msg = ""
+                    if corrupt and r is not None and r["corrupt_sample"]:
+                        err_msg = f"failed to decode json ({corrupt} times): {r['corrupt_sample'][:200]}"
+                        meta.add_error(err_msg)
+                    om = ObjectMeta(
+                        source=url,
+                        target=file_keys[norm],
+                        record_processed=kept,
+                        record_skipped=total - corrupt - kept,
+                        record_errors=corrupt,
+                        message=err_msg,
+                    )
+                    meta.record(om)
+                    entries.append(om)
+                    w.n_rec += kept
+                    result.progress.record_read += total
+                    result.progress.record_processed += kept
+                    result.progress.record_skipped += total - corrupt - kept
+                    result.progress.record_errors += corrupt
+                    result.progress.file_processed += 1
+                _append_ledger_sidecar(sidecar_dir(meta_url), w.ts.isoformat(), entries)
         finally:
             if t.rollup or t.datasheet:
                 df.unpersist()
 
-    def _ship_datasheet(self, t: Transfer, ts, out) -> None:
+    def _ship_datasheet(self, t: Transfer, batch: list[_UrlWindow], out) -> None:
         """Config-addressable datasheet report (r12 — Transfer.Datasheet):
-        compute the per-source datasheet (operators/datasheet) over THIS
-        window's transferred rows (the post-transform kept set) and
-        commit it atomically at the expanded report path — the release
-        documentation ships with the data it documents. One extra
-        aggregate pass over the persisted window; media stats activate
-        when PayloadField (or a 'payload' binary column) is present."""
+        compute the per-source datasheet (operators/datasheet) over the
+        transferred rows (the post-transform kept set) and commit it
+        atomically at the expanded report path — the release
+        documentation ships with the data it documents. One report per
+        distinct expanded path, over the rows of the windows that expand
+        to it; ``window_ts`` is the newest of those windows. One extra
+        aggregate pass per report over the persisted batch; media stats
+        activate when PayloadField (or a 'payload' binary column) is
+        present."""
         from etly_spark.operators.datasheet import build_datasheet, write_datasheet
 
-        path = expand_date(expand_env(expand_pwd(t.datasheet.name, t.base_dir)), ts)
         payload = t.datasheet.payload_field
-        # a configured PayloadField that this window's columns don't
+        # a configured PayloadField that the batch's columns don't
         # carry is a config error, not a silent auto-detect fallback
         # (r13, ADVICE): masking a typo'd field name would quietly drop
         # the media stats or compute them from a different column
@@ -547,10 +598,12 @@ class TransferService:
                 f"Transfer {t.name!r}: Datasheet.PayloadField {payload!r} "
                 f"not among the window's columns {sorted(out.columns)}"
             )
-        sheet = build_datasheet(out.drop(KEEP), payload_col=payload or None)
-        sheet["transfer"] = t.name
-        sheet["window_ts"] = ts.isoformat()
-        write_datasheet(sheet, path)
+        name = expand_env(expand_pwd(t.datasheet.name, t.base_dir))
+        for path, ws, rows in _window_slices(out, batch, lambda w: expand_date(name, w.ts)):
+            sheet = build_datasheet(rows.drop(KEEP), payload_col=payload or None)
+            sheet["transfer"] = t.name
+            sheet["window_ts"] = ws[0].ts.isoformat()
+            write_datasheet(sheet, path)
 
     def _fold_rollup(self, t: Transfer, eligible: list[str], out) -> None:
         """Spark-native Rollup extension (Transfer.Rollup): fold this
@@ -565,7 +618,7 @@ class TransferService:
         {a,b} folded, ledger write fails, retry folds {a,b,c} under a
         new epoch — a and b doubled). The exactly-once ledger guarantees
         no two SUCCESSFUL runs fold the same file. One aggregate job per
-        window computes all per-file partials (bounded by files x key
+        batch computes all per-file partials (bounded by files x key
         cardinality — rollup keys are low-cardinality by contract);
         each partial lands driver-side via pyarrow (the ledger-sidecar
         precedent). One rollup StateDir belongs to ONE transfer.
@@ -675,12 +728,17 @@ class TransferService:
 
     # ------------------------------------------------- operator chain ---
 
-    def _enrich(self, df: DataFrame, t: Transfer, source_url: str) -> DataFrame:
-        """F2 (content_enricher.go:9-30): context-aware column adds."""
+    def _enrich(
+        self, df: DataFrame, t: Transfer, source_url: str, source_urls: list[str] | None = None
+    ) -> DataFrame:
+        """F2 (content_enricher.go:9-30): context-aware column adds.
+        ``source_url`` is the newest window's source; ``source_urls``
+        lists every window whose files are in the batch."""
         if not t.content_enricher:
             return df
         fn = registry.enrichers.get(t.content_enricher)
-        return fn(df, {"source_url": source_url, "transfer": t})
+        ctx = {"source_url": source_url, "source_urls": source_urls or [source_url], "transfer": t}
+        return fn(df, ctx)
 
     def _keep_column(self, df: DataFrame, t: Transfer):
         """F1 (filter.go:11-30): predicate; null-safe (null ⇒ skip)."""
@@ -1022,8 +1080,8 @@ class TransferService:
 
 
 def _merge_result(total: TransferResult, w: TransferResult) -> None:
-    """Fold one window's result into the run total (caller holds the
-    merge lock when windows run concurrently)."""
+    """Fold one group's result into the run total (caller holds the
+    merge lock when groups run concurrently)."""
     total.outputs.extend(w.outputs)
     tp, wp = total.progress, w.progress
     tp.record_read += wp.record_read
@@ -1031,6 +1089,22 @@ def _merge_result(total: TransferResult, w: TransferResult) -> None:
     tp.record_skipped += wp.record_skipped
     tp.record_errors += wp.record_errors
     tp.file_processed += wp.file_processed
+
+
+def _window_slices(out: DataFrame, batch: list[_UrlWindow], path_of):
+    """Split a group batch by a per-window expanded path (a datasheet
+    report, an index dir): yield (path, windows, rows) with the rows of
+    those windows' files — all of ``out`` when every window expands to
+    the same path, so the common case adds no filter."""
+    by_path: dict[str, list[_UrlWindow]] = {}
+    for w in batch:
+        by_path.setdefault(path_of(w), []).append(w)
+    for path, ws in by_path.items():
+        if len(by_path) == 1:
+            yield path, ws, out
+        else:
+            files = [_norm_file_url(u) for w in ws for u in w.eligible]
+            yield path, ws, out.where(F.col(FILE).isin(files))
 
 
 def _unescape_partition_value(value: str) -> str:

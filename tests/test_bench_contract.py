@@ -204,3 +204,44 @@ def test_new_branch_annotation_splits_and_self_expires(tmp_path, monkeypatch):
     (tmp_path / "BENCH_r06.json").write_text(json.dumps(prior))
     out2 = bench.regressions_vs_previous({"a": 2.0, "b": 2.0}, 0.1)
     assert out2["n"] == 2 and "nb" not in out2
+
+
+def _prior_dir(tmp_path, monkeypatch, artifacts: dict) -> None:
+    import os
+    import shutil
+
+    (tmp_path / "tools").mkdir()
+    shutil.copy(
+        os.path.join(os.path.dirname(bench.__file__), "tools", "bench_compare.py"),
+        tmp_path / "tools" / "bench_compare.py",
+    )
+    for name, rec in artifacts.items():
+        (tmp_path / name).write_text(json.dumps(rec))
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
+    )
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+
+
+def test_regression_skips_artifact_with_garbled_cpus(tmp_path, monkeypatch):
+    # an unparsable "cpus" must not crash the gate: that artifact is
+    # skipped and the newest same-core one is the comparand
+    prior = {"sf": 0.1, "queries": {"a": 1.0}}
+    _prior_dir(tmp_path, monkeypatch, {
+        "BENCH_r01.json": {"tail": "", "cpus": 8, "parsed": prior},
+        "BENCH_r02.json": {"tail": "", "cpus": "eight", "parsed": prior},
+        "BENCH_r03.json": {"tail": "", "cpus": [8], "parsed": prior},
+    })
+    out = bench.regressions_vs_previous({"a": 2.0}, 0.1)
+    assert out["vs"] == "r01" and out["n"] == 1
+
+
+def test_regression_gate_off_without_same_core_artifact(tmp_path, monkeypatch):
+    # only artifacts from another core count: no gate (None), never a
+    # comparison against an incomparable run
+    prior = {"sf": 0.1, "queries": {"a": 1.0}}
+    _prior_dir(tmp_path, monkeypatch, {
+        "BENCH_r01.json": {"tail": "", "cpus": 32, "parsed": prior},
+        "BENCH_r02.json": {"tail": "", "cpus": 4, "parsed": prior},
+    })
+    assert bench.regressions_vs_previous({"a": 2.0}, 0.1) is None

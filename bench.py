@@ -32,16 +32,7 @@ def sf_from_dir(sf_dir: str) -> float:
 # (unexplained). Tags are "r<N>:+what"; the annotation only applies when
 # the compared-against artifact predates round N, so entries self-expire
 # once the branch is inside the baseline being compared to.
-NEW_BRANCHES: dict[str, str] = {
-    "dedup_exact": "r11:+byte-offset-excision",
-    "dedup_clusters": "r11:+hot-cell-recursion",
-    "text_quality": "r9:+trained-lr-classifier",
-    "sim_ann_methods": "r14:+filtered+radius+opq",
-    "mm_binary_metadata": "r8:+webp-vp8l+flac+warc-chain",
-    "mm_decode_frames": "r8:+avi-losslessjpeg",
-    "text_top_terms": "r13:+bm25-inc-maintenance-variant",
-    "text_curation_split": "r11:+dsir-importance-resampling",
-}
+NEW_BRANCHES: dict[str, str] = {}
 
 
 def _branch_round(tag: str) -> int:

@@ -927,6 +927,9 @@ def _sorted_book(cent_pdf: pd.DataFrame, m: int):
     order = np.argsort(cent_pdf["cent_id"].to_numpy(dtype="int64"), kind="stable")
     C = _rows(cent_pdf["ce"])[order]
     k, d = C.shape
+    if k > 65535:
+        # the packed-codes kernels store each slot as '<u2'
+        raise ValueError(f"k={k} codewords exceed the uint16 slot range (max 65535)")
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
     return np.ascontiguousarray(C.reshape(k, m, d // m))

@@ -44,15 +44,22 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType
 
 _STAGE_ROOT: str | None = None
 
 # observability (and test hooks): how often a stage was reused vs built,
 # and the cumulative one-time build+commit cost (reported by bench.py so
-# the amortized stage cost is never invisible)
+# the amortized stage cost is never invisible). Pooled branches bump it
+# from many driver threads, so every update holds _STATS_LOCK.
 stats = {"hits": 0, "misses": 0, "build_sec": 0.0}
+_STATS_LOCK = threading.Lock()
+
+
+def _count(key: str, n: float = 1) -> None:
+    with _STATS_LOCK:
+        stats[key] = round(stats[key] + n, 4)
 
 
 def _root() -> str:
@@ -100,10 +107,39 @@ def stage_table(
     use, read the committed parquet afterwards. ``deps`` are the input
     files/dirs whose content the stage derives from (fingerprinted into
     the stage identity)."""
-    path = stage_path(spark, key, build, deps)
+    return _read_stage(spark, stage_path(spark, key, build, deps))
+
+
+def _read_stage(spark: SparkSession, path: str) -> DataFrame:
     with open(os.path.join(path, "_schema.json")) as f:
         schema = StructType.fromJson(json.loads(f.read()))
     return spark.read.schema(schema).parquet(path)
+
+
+# committed stage path -> its collected single row (see stage_row)
+_ROWS: dict[str, Row] = {}
+_ROWS_LOCK = threading.Lock()
+
+
+def stage_row(
+    spark: SparkSession,
+    key: str,
+    build: Callable[[], DataFrame],
+    deps: list[str] | tuple[str, ...] = (),
+) -> Row:
+    """The first row of a one-row staged table (a stats or bounds row
+    the driver needs as Python values). The collected row is memoized
+    by committed stage path: a committed path is content-fingerprinted
+    and never rewritten, so the memo cannot go stale, and later calls
+    run no Spark job."""
+    path = stage_path(spark, key, build, deps)
+    with _ROWS_LOCK:
+        row = _ROWS.get(path)
+    if row is None:
+        row = _read_stage(spark, path).collect()[0]
+        with _ROWS_LOCK:
+            _ROWS[path] = row
+    return row
 
 
 def stage_path(
@@ -136,7 +172,7 @@ def stage_path(
     # in-flight builder holding the lock dict's guard, nor behind a
     # same-fingerprint hit.
     if os.path.exists(path):
-        stats["hits"] += 1
+        _count("hits")
         return path
     # Per-stage build lock (optimization r14): composite queries build
     # branches from a driver thread pool, and two branches sharing a
@@ -178,7 +214,7 @@ def _stage_path_locked(
     partition_by: list[str] | tuple[str, ...] = (),
 ) -> str:
     if not os.path.exists(path):
-        stats["misses"] += 1
+        _count("misses")
         t0 = time.monotonic()
         df = build()
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -188,7 +224,7 @@ def _stage_path_locked(
         w.parquet(tmp)
         with open(os.path.join(tmp, "_schema.json"), "w") as f:
             f.write(df.schema.json())
-        stats["build_sec"] = round(stats["build_sec"] + time.monotonic() - t0, 4)
+        _count("build_sec", time.monotonic() - t0)
         try:
             os.rename(tmp, path)
         except OSError:
@@ -197,5 +233,5 @@ def _stage_path_locked(
             if not os.path.exists(path):
                 raise
     else:
-        stats["hits"] += 1
+        _count("hits")
     return path

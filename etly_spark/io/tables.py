@@ -11,15 +11,26 @@ One place that knows the quirks of `/root/testdata/sf*`:
 
 At scale these loaders are just `spark.read.parquet` — predicate pushdown,
 column pruning and partition pruning all apply; nothing here ever collects.
+
+Schemas are read once per file fingerprint: inferring a parquet schema
+runs a footer-reading Spark job, so ``read_parquet`` caches the
+inferred ``StructType`` under ``staging._dep_sig`` (path, size and
+mtime_ns of every file) and reads with ``spark.read.schema(...)``.
+The file listing still happens on every read, and a rewritten file
+gets a new fingerprint, so its new schema is inferred again.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from etly_spark.io.fs import is_local, strip_file_scheme
+from etly_spark.io.staging import _dep_sig
 from etly_spark.session import tune_session
 
 TABLES = [
@@ -40,10 +51,31 @@ TABLES = [
 BROADCAST_DIMS = {"region", "nation"}
 
 
+# file fingerprint -> inferred schema; shared by pooled driver threads
+_SCHEMAS: dict[str, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    after the first read of the same file contents. A remote URL has no
+    local fingerprint, so Spark infers its schema on every read."""
+    if not is_local(path):
+        return spark.read.parquet(path)
+    sig = _dep_sig(strip_file_scheme(path))
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(sig)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[sig] = schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ns epoch → µs epoch → TIMESTAMP_NTZ (matches DuckDB coercion).
         # Integer division: ns values exceed 2^53, double math would round.

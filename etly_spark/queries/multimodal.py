@@ -336,4 +336,10 @@ def mm_decode_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_frames",
         F.round(F.lit(32.0) / F.greatest("width", "height"), 6).alias("resize_scale"),
     )
-    return stub.unionByName(decoded).orderBy("variant", "doc_id", "frame_no")
+    # the shuffle lets orderBy's range sampler read shuffle files instead
+    # of running both Python decodes a second time
+    return (
+        stub.unionByName(decoded)
+        .repartition("doc_id")
+        .orderBy("variant", "doc_id", "frame_no")
+    )

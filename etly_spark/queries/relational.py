@@ -394,37 +394,28 @@ def q8_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q9_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Bench-wall attribution (r13, after two rounds of sub-second
-    # regression flags): this query's wall is FIXED per-job latency —
-    # two eager persists plus one fan-in job over six shuffle stages
-    # for a 3-row output — so it tracks scheduler/machine state, not
-    # data volume. A same-machine A/B of this exact harness shape on
-    # the r11 tree (git worktree @ b1d5089) measured 0.89-1.24 s
-    # against HEAD's 0.80-1.28 s: no code-level drift; the r11
-    # artifact's 0.57 s was that window's scheduler state.
+    # One scan and one shuffle: each customer key is tagged with whether
+    # it is in either set, and one aggregate counts the three set ops.
+    # NULL keys form one group, as DISTINCT/INTERSECT/EXCEPT treat them.
     o = load_table(spark, sf_dir, "orders")
-    # each deduped key set feeds THREE set ops — persist + eager count or
-    # the orders scan and the distinct shuffle run once per op (6 scans);
-    # scoped: released at the next catalog query (catalog.scoped_persist)
-    big = scoped_persist(
-        o.filter(F.col("o_totalprice") > 300000)
-        .select(F.col("o_custkey").alias("k"))
-        .distinct()
+    big = F.col("o_totalprice") > 300000
+    recent = F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp_ntz")
+    keys = (
+        o.filter(big | recent)
+        .groupBy("o_custkey")
+        .agg(
+            F.max(F.coalesce(big, F.lit(False))).alias("b"),
+            F.max(F.coalesce(recent, F.lit(False))).alias("r"),
+        )
     )
-    recent = scoped_persist(
-        o.filter(F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp_ntz"))
-        .select(F.col("o_custkey").alias("k"))
-        .distinct()
+    b, r = F.col("b"), F.col("r")
+    return keys.agg(
+        F.count(F.when(b & ~r, 1)).alias("except"),
+        F.count(F.when(b & r, 1)).alias("intersect"),
+        F.count(F.when(b | r, 1)).alias("union"),
+    ).selectExpr(
+        "stack(3, 'except', `except`, 'intersect', `intersect`, 'union', `union`) AS (op, n)"
     )
-    rows = [
-        big.intersect(recent).agg(F.count("*").alias("n")).select(F.lit("intersect").alias("op"), "n"),
-        big.exceptAll(recent).distinct().agg(F.count("*").alias("n")).select(F.lit("except").alias("op"), "n"),
-        big.union(recent).distinct().agg(F.count("*").alias("n")).select(F.lit("union").alias("op"), "n"),
-    ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("op")
 
 
 # --------------------------------------------------------------------------

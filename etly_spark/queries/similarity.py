@@ -1469,7 +1469,7 @@ def sim_sq8(
     checks the quantized scores bit-for-bit at 6 dp."""
     import uuid as _uuid
 
-    from etly_spark.io.staging import stage_table
+    from etly_spark.io.staging import stage_row
 
     e = (
         s.select("vec_id", "embedding")
@@ -1477,7 +1477,7 @@ def sim_sq8(
         else load_table(spark, sf_dir, "embeddings")
     )
     tag = corpus_tag if corpus_tag else ("iid" if s is None else _uuid.uuid4().hex)
-    b = stage_table(
+    b = stage_row(
         spark,
         f"sq8-minmax:{sf_dir}:{tag}",
         lambda: e.agg(
@@ -1489,7 +1489,7 @@ def sim_sq8(
             ).alias("hi"),
         ),
         deps=[os.path.join(sf_dir, "embeddings.parquet")],
-    ).collect()[0]
+    )
     lo_arr = F.array(*[F.lit(float(v)) for v in b["lo"]])
     hi_arr = F.array(*[F.lit(float(v)) for v in b["hi"]])
 

@@ -224,7 +224,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass — an index-build cost a pipeline pays once per corpus
     # snapshot, not once per query. DECIMAL sums are exact through the
     # parquet roundtrip, so the staged weights are bit-identical.
-    from etly_spark.io.staging import stage_table
+    from etly_spark.io.staging import stage_row
     from etly_spark.operators.quality import (
         lr_features,
         lr_stats_plan,
@@ -250,12 +250,12 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stats = stats_from_row(
-        stage_table(
+        stage_row(
             spark,
             f"quality-lr-stats:{sf_dir}",
             _stats_plan,
             deps=[os.path.join(sf_dir, "documents.parquet")],
-        ).collect()[0]
+        )
     )
     w0, w1, w2 = solve_weights(stats)
     # scoring features: the postings-derived ratios, rounded at the

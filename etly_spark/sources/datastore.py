@@ -29,6 +29,7 @@ def normalize_sql(text: str) -> str:
 
 def read_datastore(spark: SparkSession, source: Source) -> DataFrame:
     """Dispatch on DsConfig.DriverName: csv | parquet | jdbc."""
+    from etly_spark.io.tables import read_parquet
     from etly_spark.session import tune_session
 
     tune_session(spark)
@@ -49,7 +50,7 @@ def read_datastore(spark: SparkSession, source: Source) -> DataFrame:
         if driver == "csv":
             df = spark.read.option("header", "true").csv(path)
         elif driver == "parquet":
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
         elif driver == "orc":
             df = spark.read.orc(path)
         elif driver == "xml":

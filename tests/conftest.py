@@ -14,6 +14,21 @@ def spark():
     yield s
 
 
+def spark_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group on this thread; return its
+    result and the number of Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # Shared plan-gate pattern (test_plans.py + test_prefix.py): a Window
 # whose ONLY partition key is a given column. In the formatted plan a
 # window spec prints as windowspecdefinition(<partition cols>, <order

@@ -56,9 +56,27 @@ SUBSET = [
 ]
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _shrink_session_jvm():
+    """A second Spark app starts below: shrink this pytest session's JVM
+    first. Cached tables are dropped and repeated full GCs let G1
+    uncommit the heap, which an earlier module may have grown to ~6 GB
+    RSS; the session stays usable for later tests."""
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    if s is not None:
+        s.catalog.clearCache()
+        for _ in range(3):
+            s._jvm.System.gc()
+
+
 def _env() -> dict[str, str]:
     env = dict(os.environ)
     env["SPARK_GRAFT_MASTER"] = MASTER
+    # the subprocess driver plans and collects only (the executor JVMs
+    # run the tasks): the 8g default heap overcommits a 15 GB host
+    env["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     # executor Python workers are forked by SEPARATE worker JVMs and
     # must find the package without the driver's sys.path
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")

@@ -81,6 +81,21 @@ def test_pq_rejects_indivisible_dims(spark):
         pq_reconstruct(df, _cent_pdf(C), m=2)
 
 
+def test_packed_codes_reject_codebooks_past_uint16(spark):
+    """pq_codes_packed/pq_decode store each slot as '<u2': a codebook
+    with more than 65535 codewords must fail at the kernel boundary
+    instead of wrapping slots into wrong vectors."""
+    from etly_spark.functions.vector import _sorted_book, pq_codes_packed, pq_decode
+
+    df = spark.createDataFrame([(0, [1.0, 2.0])], "vec_id long, embedding array<double>")
+    big = _cent_pdf(np.ones((65536, 2)))
+    with pytest.raises(ValueError, match="uint16"):
+        pq_codes_packed(df, big, m=1)
+    with pytest.raises(ValueError, match="uint16"):
+        pq_decode(df.selectExpr("vec_id", "CAST('' AS BINARY) AS codes"), big, m=1)
+    assert _sorted_book(_cent_pdf(np.ones((65535, 2))), 1).shape == (65535, 1, 2)
+
+
 def test_ivfpq_reconstruct_routes_per_cell(spark):
     """r10 kernel pin: each vector must encode against ITS cell's
     codebook only — verified against a per-cell numpy reference, with

@@ -130,3 +130,76 @@ def test_bm25_postings_staged_probe(spark):
         .toString()
     )
     assert "PushedFilters" in plan and "term" in plan and "Scan parquet" in plan
+
+
+def test_stage_row_second_call_runs_no_job(spark, tmp_path):
+    """stage_row memoizes the collected row by committed stage path: the
+    second call still counts a stage hit but submits no Spark job."""
+    from conftest import spark_jobs
+
+    dep = tmp_path / "in.txt"
+    dep.write_text("v1")
+
+    def build():
+        return spark.range(10).agg(F.sum("id").alias("s"), F.max("id").alias("m"))
+
+    first, _ = spark_jobs(spark, lambda: staging.stage_row(spark, "row1", build, [str(dep)]))
+    before = dict(staging.stats)
+    second, jobs = spark_jobs(
+        spark, lambda: staging.stage_row(spark, "row1", build, [str(dep)])
+    )
+    assert (first.s, first.m) == (45, 9) and second == first
+    assert jobs == 0
+    assert staging.stats["hits"] == before["hits"] + 1
+    # a changed input is a new stage path, so the memo is not consulted
+    time.sleep(0.01)
+    dep.write_text("v2-longer")
+    third, jobs = spark_jobs(
+        spark,
+        lambda: staging.stage_row(
+            spark, "row1", lambda: spark.range(4).agg(F.sum("id").alias("s")), [str(dep)]
+        ),
+    )
+    assert third.s == 6 and jobs > 0
+
+
+def test_stage_counters_exact_under_threads(spark, tmp_path):
+    """Pooled driver threads bump staging.stats concurrently; no update
+    may be lost (a tiny switch interval forces interleaving)."""
+    import sys
+    import threading
+
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(1)
+
+    keys = [f"counter-{tmp_path.name}-{i}" for i in range(8)]
+    n_threads, per_thread = 8, 200
+    before = dict(staging.stats)
+    barrier = threading.Barrier(n_threads)
+    errors = []
+
+    def run(t):
+        try:
+            barrier.wait()
+            for i in range(per_thread):
+                staging.stage_path(spark, keys[(t + i) % len(keys)], build)
+        except Exception as e:  # pragma: no cover
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, errors
+    assert len(built) == len(keys)  # one build per fingerprint
+    assert staging.stats["misses"] == before["misses"] + len(keys)
+    assert staging.stats["hits"] == before["hits"] + n_threads * per_thread - len(keys)

@@ -11,13 +11,12 @@ partitions exceed ``threshold`` they fold into a numbered
 so amortized compaction cost per run stays O(that run's rows) and
 directory count stays bounded at any run count.
 
-Crash safety: the segment is written under an underscore-prefixed tmp
-dir (invisible to pyarrow/Spark dataset discovery) together with a
-``_folded.json`` manifest naming every loose dir it absorbed, and
-committed with one rename BEFORE the loose dirs are removed. A crash
-in the window between the rename and the removals leaves DUPLICATE
-rows (the loose dirs' data also lives in the segment). Consumers
-differ on whether that is tolerable:
+Crash safety: ``commit_segment`` publishes the segment through
+``io/commit.publish_dir`` together with a ``_folded.json`` manifest
+naming every loose dir it absorbed, BEFORE the loose dirs are removed.
+A crash in the window between the commit and the removals leaves
+DUPLICATE rows (the loose dirs' data also lives in the segment).
+Consumers differ on whether that is tolerable:
 
 - the meta skip-set and the dedup band index are presence-based /
   distinct-pair shaped — duplicates are harmless there;
@@ -37,7 +36,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
+from collections.abc import Callable
+
+from etly_spark.io.commit import publish_dir
 
 _MANIFEST = "_folded.json"
 
@@ -46,7 +47,7 @@ def partition_marker(pdir: str) -> list[list]:
     """Content marker for one partition dir: sorted [name, size] of its
     parquet parts. Recorded in the ``_folded.json`` manifest at fold
     time so recovery removes a loose dir only when its CONTENT is what
-    the segment absorbed (r13, ADVICE): a name-only manifest would
+    the segment absorbed: a name-only manifest would
     silently delete a FRESH ``epoch=N`` dir whose id was reused after a
     purge (streaming checkpoint reset, refolding the same shard index)
     — data loss, not duplicates."""
@@ -63,10 +64,10 @@ def recover_covered_partitions(root: str, key: str) -> list[str]:
     manifest records as already folded. Returns the removed dir names.
     Safe to call any time — a dir is removed only when its data
     provably lives inside a committed segment: dict-form manifests
-    (r13) carry a per-partition content marker and a loose dir whose
-    current parquet parts differ from the marker is LEFT ALONE (it was
+    carry a per-partition content marker and a loose dir whose current
+    parquet parts differ from the marker is LEFT ALONE (it was
     recreated after the fold — removing it would lose data); legacy
-    list-form manifests (pre-r13 artifacts) remove by name."""
+    list-form manifests remove by name."""
     if not os.path.isdir(root):
         return []
     prefix = f"{key}="
@@ -103,13 +104,13 @@ def recover_covered_partitions(root: str, key: str) -> list[str]:
     return removed
 
 
-def next_segment(root: str, key: str) -> str:
-    """Name of the next compacted segment: max existing number + 1 —
-    NEVER count+1, which would recycle a name after a purge deletes
-    earlier segments and make it collide with a recovery manifest that
-    still covers the old name."""
+def next_segment(root: str, key: str, kind: str = "_compacted") -> str:
+    """Name of the next ``<key>=<kind>-NNNNNN`` segment: max existing
+    number + 1 — NEVER count+1, which would recycle a name after a
+    purge deletes earlier segments and make it collide with a recovery
+    manifest that still covers the old name."""
     hi = 0
-    pre = f"{key}=_compacted-"
+    pre = f"{key}={kind}-"
     if os.path.isdir(root):
         for d in os.listdir(root):
             if d.startswith(pre):
@@ -120,17 +121,46 @@ def next_segment(root: str, key: str) -> str:
     return os.path.join(root, f"{pre}{hi + 1:06d}")
 
 
+def commit_segment(
+    root: str,
+    key: str,
+    write: Callable[[str], object],
+    covered: list[str],
+    kind: str = "_compacted",
+) -> str:
+    """Publish a never-rewritten segment under the next
+    ``<key>=<kind>-NNNNNN`` name: ``write(tmp)`` fills it, the
+    ``_folded.json`` manifest records the content marker of every
+    ``covered`` dir, and the covered dirs are removed only after the
+    commit. A segment number taken by a concurrent committer with a
+    different manifest is retried under the next number, so covered
+    dirs are removed only when a committed manifest names them.
+    Returns the segment path."""
+    markers = {d: partition_marker(os.path.join(root, d)) for d in covered}
+
+    def _write(tmp: str) -> None:
+        write(tmp)
+        with open(os.path.join(tmp, _MANIFEST), "w") as f:
+            json.dump(markers, f)
+
+    while True:
+        seg = publish_dir(next_segment(root, key, kind), _write)
+        with open(os.path.join(seg, _MANIFEST)) as f:
+            if json.load(f) == markers:
+                break
+    for d in covered:
+        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    return seg
+
+
 def compact_partitions(
     root: str, key: str, threshold: int, sort_by: list[str] | None = None
 ) -> None:
     """Fold loose ``<key>=value`` partitions under ``root`` into one
     compacted segment once their count exceeds ``threshold``. Always
     runs crash recovery first (see module docstring). ``sort_by``
-    re-sorts the concatenated segment (r13 — the bm25 postings fold:
-    per-epoch files are term-sorted so row-group stats prune a term
-    probe; a plain concat would interleave sorted runs and forfeit the
-    pruning exactly when compaction makes the file big enough for it
-    to matter)."""
+    re-sorts the concatenated segment (the bm25 postings fold keeps
+    its term order, so row-group stats still prune a term probe)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -146,30 +176,24 @@ def compact_partitions(
     loose = sorted(d for d in names if not d.startswith(f"{prefix}_"))
     if len(loose) <= threshold:
         return
-    tables = []
-    markers: dict[str, list] = {}
-    for d in loose:
-        pdir = os.path.join(root, d)
-        markers[d] = partition_marker(pdir)
-        for f in sorted(os.listdir(pdir)):
-            if f.endswith(".parquet"):
-                tables.append(pq.read_table(os.path.join(pdir, f)))
+    tables = [
+        pq.read_table(os.path.join(root, d, f))
+        for d in loose
+        for f in sorted(os.listdir(os.path.join(root, d)))
+        if f.endswith(".parquet")
+    ]
     if not tables:
         return
-    seg = next_segment(root, key)
-    tmp = os.path.join(root, f"_tmp-{uuid.uuid4().hex[:8]}")
-    os.makedirs(tmp, exist_ok=True)
-    # promote_options unifies ACROSS SCHEMA GENERATIONS (r13, ADVICE):
-    # post-split ANN epochs carry a 5th 'parent' column while pre-split
-    # loose epochs have 4 — a plain concat raises ArrowInvalid the first
-    # time both generations fold together; missing columns null-fill,
-    # exactly how _read_postings' mergeSchema read treats them.
+    # promote_options unifies ACROSS SCHEMA GENERATIONS: post-split ANN
+    # epochs carry a 5th 'parent' column while pre-split loose epochs
+    # have 4 — missing columns null-fill, exactly how _read_postings'
+    # mergeSchema read treats them.
     merged = pa.concat_tables(tables, promote_options="default")
     if sort_by:
         merged = merged.sort_by([(c, "ascending") for c in sort_by])
-    pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
-    with open(os.path.join(tmp, _MANIFEST), "w") as f:
-        json.dump(markers, f)
-    os.rename(tmp, seg)
-    for d in loose:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
+
+    commit_segment(root, key, write, loose)

@@ -10,10 +10,13 @@ a sketch table) and fans consumers out from them — this primitive is
 that contract.
 
 Semantics:
-- the first consumer builds the DataFrame and commits it atomically
-  (write to a tmp dir, then one `os.rename`); every later consumer in
-  the same process — regardless of which SparkSession asks — reads
-  the committed parquet;
+- the first consumer builds the artifact and commits it with
+  ``io/commit.publish_dir``; every later consumer in the same process
+  — regardless of which SparkSession asks — reads the committed dir.
+  ``stage_dir`` is the build-once core (fingerprint, committed fast
+  path, per-fingerprint build lock, stats) for any directory artifact,
+  including the incremental indices that write their own layout;
+  ``stage_path``/``stage_table``/``stage_row`` stage a DataFrame;
 - invalidation is by dependency fingerprint: the stage path hashes the
   logical key plus (path, size, mtime_ns) of every declared input
   file, so a changed input yields a NEW stage directory, never a
@@ -46,6 +49,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType
+
+from etly_spark.io.commit import publish_dir
 
 _STAGE_ROOT: str | None = None
 
@@ -157,81 +162,68 @@ def stage_path(
     mode the stage root must live on storage all executors can read —
     the same contract stage_table's read-back path already has.
 
-    ``partition_by`` hive-partitions the stage (r12 — the ivfpq codes
-    table partitions on the coarse cell, so a probe's cell filter
-    PRUNES directories instead of scanning interleaved row groups;
-    note _staged_pdf's flat glob cannot read a partitioned stage —
-    consume these through spark.read)."""
-    fp = hashlib.sha1(
-        "\n".join([key, *(_dep_sig(d) for d in deps)]).encode()
-    ).hexdigest()[:24]
-    path = os.path.join(_root(), fp)
-    # Committed-stage fast path (r15): the rename commit is atomic, so
-    # an existing path is always a complete stage — readers of a
-    # committed stage must not serialize behind another fingerprint's
-    # in-flight builder holding the lock dict's guard, nor behind a
-    # same-fingerprint hit.
-    if os.path.exists(path):
-        _count("hits")
-        return path
-    # Per-stage build lock (optimization r14): composite queries build
-    # branches from a driver thread pool, and two branches sharing a
-    # stage would otherwise BOTH run build() (the rename keeps it
-    # correct but the duplicate build wastes a full job). Second
-    # arrival blocks until the first commits, then takes the hit path.
-    with _BUILD_LOCKS_GUARD:
-        lock = _BUILD_LOCKS.setdefault(fp, threading.Lock())
-    try:
-        with lock:
-            return _stage_path_locked(path, build, partition_by)
-    finally:
-        # drop the lock entry once the stage is committed — the fast
-        # path above serves all later readers, and the dict would
-        # otherwise grow one entry per fingerprint forever
-        if os.path.exists(path):
-            with _BUILD_LOCKS_GUARD:
-                _BUILD_LOCKS.pop(fp, None)
+    ``partition_by`` hive-partitions the stage (the ivfpq codes table
+    partitions on the coarse cell, so a probe's cell filter PRUNES
+    directories instead of scanning interleaved row groups; note
+    _staged_pdf's flat glob cannot read a partitioned stage — consume
+    these through spark.read)."""
 
-
-_BUILD_LOCKS: dict[str, threading.Lock] = {}
-_BUILD_LOCKS_GUARD = threading.Lock()
-
-
-def build_lock(fp: str) -> threading.Lock:
-    """The per-fingerprint build lock, for index builders that manage
-    their own commit directories (ivf_inc/ivf_split/ivfpq_inc/bm25_inc)
-    instead of going through stage_path: under a driver thread pool two
-    branches sharing an index would otherwise BOTH run the multi-epoch
-    fold (the rename race keeps it correct but wastes the full build's
-    Spark jobs). Callers re-check the committed dir after acquiring."""
-    with _BUILD_LOCKS_GUARD:
-        return _BUILD_LOCKS.setdefault(fp, threading.Lock())
-
-
-def _stage_path_locked(
-    path: str,
-    build: Callable[[], DataFrame],
-    partition_by: list[str] | tuple[str, ...] = (),
-) -> str:
-    if not os.path.exists(path):
-        _count("misses")
-        t0 = time.monotonic()
+    def write(tmp: str) -> None:
         df = build()
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
         with open(os.path.join(tmp, "_schema.json"), "w") as f:
             f.write(df.schema.json())
-        _count("build_sec", time.monotonic() - t0)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # concurrent builder won the rename — use its commit
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(path):
-                raise
-    else:
+
+    return stage_dir(key, deps, write)
+
+
+def _fingerprint(key: str, deps: list[str] | tuple[str, ...]) -> str:
+    return hashlib.sha1(
+        "\n".join([key, *(_dep_sig(d) for d in deps)]).encode()
+    ).hexdigest()[:24]
+
+
+_BUILD_LOCKS: dict[str, threading.Lock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def stage_dir(
+    key: str,
+    deps: list[str] | tuple[str, ...],
+    write: Callable[[str], object],
+) -> str:
+    """The committed stage directory for ``key``: ``write(tmp)`` fills
+    it once per process per dependency fingerprint, later calls return
+    it without building. A committed path is always complete (the
+    publish is one rename), so it is served without a lock; a builder
+    holds the fingerprint's lock, so pooled branches sharing a stage
+    build it once and the second arrival takes the hit path."""
+    fp = _fingerprint(key, deps)
+    path = os.path.join(_root(), fp)
+    if os.path.exists(path):
         _count("hits")
-    return path
+        return path
+    with _BUILD_LOCKS_GUARD:
+        lock = _BUILD_LOCKS.setdefault(fp, threading.Lock())
+    try:
+        with lock:
+            if os.path.exists(path):
+                _count("hits")
+                return path
+            _count("misses")
+            t0 = time.monotonic()
+
+            def timed(tmp: str) -> None:
+                write(tmp)
+                _count("build_sec", time.monotonic() - t0)
+
+            return publish_dir(path, timed)
+    finally:
+        # the fast path serves every later reader, so a committed
+        # fingerprint's lock entry is dropped
+        if os.path.exists(path):
+            with _BUILD_LOCKS_GUARD:
+                _BUILD_LOCKS.pop(fp, None)

@@ -7,9 +7,9 @@ and BigQuery-style failures are remembered and skipped next run
 (transfer_service.go:628-649).
 
 Hardening vs the reference (SURVEY §7.4): the meta write is atomic
-(tmp + rename) and happens only *after* the data commit, so a crash
-between data write and meta write re-processes (at-least-once into an
-overwrite-idempotent target) instead of silently losing files.
+(``io/commit.write_file``) and happens only *after* the data commit, so
+a crash between data write and meta write re-processes (at-least-once
+into an overwrite-idempotent target) instead of silently losing files.
 
 Scale (the 100× design): the reference rewrites its whole Processed map
 every window — O(history) serialization per window, unbounded driver
@@ -35,9 +35,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from dataclasses import asdict, dataclass, field
 from datetime import datetime, timezone
+
+from etly_spark.io.commit import write_file
 
 # JSON ledger bounds: the most recent entries kept in the
 # reference-compatible meta.json; the parquet sidecar holds full history
@@ -110,7 +111,6 @@ class Meta:
 
     def save(self) -> None:
         path = _strip_scheme(self.url)
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         processed = self.processed
         if len(processed) > MAX_JSON_PROCESSED:
             # keep the most recent entries (ISO timestamps sort
@@ -131,14 +131,12 @@ class Meta:
             "ResourceStatus": {k: asdict(v) for k, v in self.resource_status.items()},
             "Status": asdict(self.status),
         }
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".", suffix=".meta.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
+
+        def write(tmp: str) -> None:
+            with open(tmp, "w") as f:
                 json.dump(payload, f, indent=1, sort_keys=True)
-            os.replace(tmp, path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+
+        write_file(path, write)
 
     @classmethod
     def load(cls, url: str) -> Meta:
@@ -196,7 +194,9 @@ class ProcessedIndex:
         # this meta URL) may delete loose partition dirs between our
         # discovery and the scan — re-discovering then sees the
         # committed segment instead (duplicates across the race are
-        # harmless: membership is presence-based)
+        # harmless: membership is presence-based). A second failure is
+        # a broken ledger and raises: an empty answer would re-transfer
+        # every file the bounded JSON no longer lists.
         for attempt in (0, 1):
             try:
                 data = ds.dataset(self.dir, format="parquet", partitioning="hive")
@@ -208,5 +208,4 @@ class ProcessedIndex:
                 return set(table["source"].to_pylist())
             except (OSError, pa.ArrowInvalid):
                 if attempt:
-                    return set()
-        return set()
+                    raise

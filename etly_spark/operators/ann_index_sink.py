@@ -55,10 +55,11 @@ tests/test_ann_index_sink.py.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etly_spark.io.commit import publish_dir
 
 
 def fold_window_into_index(
@@ -121,19 +122,10 @@ def fold_window_into_index(
                     # anticipated index (the ivfpq_inc_index rule)
                     anticipated = int(opts.get("AnticipatedShards", 4) or 4)
                     nlist = _ivfpq_cells(n * max(1, anticipated))
-                    os.makedirs(index_dir, exist_ok=True)
-                    tmp = os.path.join(
-                        index_dir, f"_qtmp-{uuid.uuid4().hex[:8]}"
+                    publish_dir(
+                        qdir,
+                        lambda tmp: centroid_plan(shard, k=nlist).write.parquet(tmp),
                     )
-                    centroid_plan(shard, k=nlist).write.parquet(tmp)
-                    try:
-                        os.rename(tmp, qdir)
-                    except OSError:
-                        import shutil
-
-                        if not os.path.isdir(qdir):
-                            raise
-                        shutil.rmtree(tmp, ignore_errors=True)
                 cent_pdf = V._staged_pdf(qdir)
                 fold_ivfpq_epoch(
                     shard,

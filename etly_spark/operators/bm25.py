@@ -32,24 +32,18 @@ with the maintenance loop a production corpus needs.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etly_spark.io.commit import replace_dir
+
 
 def _commit(df: DataFrame, dest: str, sort_cols: list[str] | None = None) -> None:
-    """Write one epoch partition atomically (tmp + one rename — the
-    fold_ivf_epoch crash contract): a replayed epoch overwrites only
-    its own directory, never a neighbor's."""
-    tmp = f"{dest}.tmp-{uuid.uuid4().hex[:8]}"
+    """Write one epoch partition: a replayed epoch replaces only its own
+    directory, never a neighbor's."""
     w = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    w.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(dest):
-        import shutil
-
-        shutil.rmtree(dest)
-    os.rename(tmp, dest)
+    replace_dir(dest, lambda tmp: w.write.parquet(tmp))
 
 
 def fold_bm25_epoch(docs: DataFrame, index_dir: str, epoch: int) -> None:
@@ -217,14 +211,9 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
 
     Returns {"live_docs", "purged_docs", "bytes_before", "bytes_after"}.
     """
-    import json as _json
     import shutil
 
-    from etly_spark.io.compact import (
-        next_segment,
-        partition_marker,
-        recover_covered_partitions,
-    )
+    from etly_spark.io.compact import commit_segment, recover_covered_partitions
 
     post = os.path.join(index_dir, "postings")
     dlen = os.path.join(index_dir, "doclen")
@@ -252,22 +241,13 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
 
     def _swap(root: str, live_df, sort_cols=None) -> None:
         superseded = [x for x in os.listdir(root) if x.startswith("epoch=")]
-        tmp = os.path.join(root, f"_purge-tmp-{uuid.uuid4().hex[:8]}")
         # consolidate to ~the superseded partition count: the purge IS
         # a compaction — spraying default-parallelism part files would
         # swap dead rows for per-file overhead
         w = live_df.coalesce(max(1, len(superseded)))
         if sort_cols:
             w = w.sortWithinPartitions(*sort_cols)
-        w.write.parquet(tmp)
-        with open(os.path.join(tmp, "_folded.json"), "w") as f:
-            _json.dump(
-                {x: partition_marker(os.path.join(root, x)) for x in superseded},
-                f,
-            )
-        os.rename(tmp, next_segment(root, "epoch"))
-        for x in superseded:
-            shutil.rmtree(os.path.join(root, x), ignore_errors=True)
+        commit_segment(root, "epoch", lambda tmp: w.write.parquet(tmp), superseded)
 
     posts = spark.read.parquet(post)
     dls = spark.read.parquet(dlen)

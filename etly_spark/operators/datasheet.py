@@ -21,13 +21,14 @@ ships.
 from __future__ import annotations
 
 import json
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from etly_spark.io.commit import write_file
 
 
 def sniff_media_format(b: "bytes | None") -> str:
@@ -217,14 +218,11 @@ def build_datasheet(
 
 
 def write_datasheet(sheet: dict, path: str) -> str:
-    """Commit the datasheet JSON atomically (tmp + rename — the report
-    ships beside a transfer's output, so readers must never see a
-    half-written document)."""
-    import uuid
+    """Commit the datasheet JSON atomically: the report ships beside a
+    transfer's output, so readers must never see a half-written
+    document."""
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            json.dump(sheet, fh, indent=1, default=str)
 
-    os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(sheet, fh, indent=1, default=str)
-    os.replace(tmp, path)
-    return path
+    return write_file(path, write)

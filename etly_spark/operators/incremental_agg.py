@@ -43,17 +43,16 @@ import os
 import shutil
 import threading
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# One lock per state dir (process-level): P3 runs a transfer's windows
-# from concurrent driver threads, and those windows share one rollup
-# state — two unsynchronized compact() calls would race the base-N
-# rename (second os.rename onto the existing dir fails, erroring the
-# window). Folds of distinct epochs are write-disjoint but cheap to
-# serialize alongside.
+from etly_spark.io.commit import publish_dir, replace_dir
+
+# One lock per state dir (process-level): concurrent driver threads may
+# share one rollup state, and two unsynchronized compact() calls would
+# race for the same base-N name. Folds of distinct epochs are
+# write-disjoint but cheap to serialize alongside.
 _STATE_LOCKS: dict[str, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
 
@@ -129,31 +128,10 @@ def fold(
         if epoch in _covered(state_dir):
             return False
         cols = list(keys) + list(merges)
-        os.makedirs(state_dir, exist_ok=True)
-        # tmp + rename (mirroring fold_rows): a crash mid-write must
-        # not leave a torn epoch= dir that read() — e.g. the
-        # /etly/rollup endpoint before a streaming replay re-folds —
-        # would read as partial data or fail on
-        tmp = os.path.join(state_dir, f"_tmp-{uuid.uuid4().hex[:8]}")
-        partial.select(*cols).write.mode("overwrite").parquet(tmp)
-        final = os.path.join(state_dir, f"epoch={epoch}")
-        # Replay path: rename the existing epoch ASIDE (never rmtree it
-        # in place). This NARROWS — not closes — the window where a
-        # cross-process reader (e.g. /etly/rollup, which shares only the
-        # filesystem, not this process lock) can observe the epoch dir
-        # absent: from rmtree-duration down to the two rename syscalls.
-        # Closing it entirely needs renameat2(RENAME_EXCHANGE) or
-        # reader-side retry; a crash between the renames leaves the
-        # epoch recoverable in _old-* (vs destroyed under rmtree), and
-        # the worst steady-state outcome is a leaked _old-* dir,
-        # reclaimed by the same sweep that handles _tmp-*.
-        aside = None
-        if os.path.isdir(final):
-            aside = os.path.join(state_dir, f"_old-{uuid.uuid4().hex[:8]}")
-            os.rename(final, aside)
-        os.rename(tmp, final)
-        if aside is not None:
-            shutil.rmtree(aside, ignore_errors=True)
+        replace_dir(
+            os.path.join(state_dir, f"epoch={epoch}"),
+            lambda tmp: partial.select(*cols).write.parquet(tmp),
+        )
         return True
 
 
@@ -191,8 +169,8 @@ def compact(
 ) -> bool:
     """Merge base + loose epochs into one new base segment once loose
     epochs exceed ``threshold``. Aggregate rows are key-cardinality
-    sized, so full re-merge is cheap; the new base commits with one
-    rename BEFORE old dirs are removed, and the reader's
+    sized, so full re-merge is cheap; the new base is published BEFORE
+    old dirs are removed, and the reader's
     highest-base-wins rule makes the worst crash outcome some
     un-reclaimed disk, never a double count."""
     with _state_lock(state_dir):
@@ -204,12 +182,18 @@ def compact(
         merged = read(spark, state_dir, keys=keys, merges=merges)
         bases = _bases(state_dir)
         n_next = (int(bases[-1].split("-")[1]) + 1) if bases else 1
-        tmp = os.path.join(state_dir, f"_tmp-{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-        with open(os.path.join(tmp, "_covered.json"), "w") as fh:
-            json.dump({"epochs": sorted(covered | set(fresh))}, fh)
-        final = os.path.join(state_dir, f"base-{n_next:06d}")
-        os.rename(tmp, final)
+        epochs = covered | set(fresh)
+
+        def write(tmp: str) -> None:
+            merged.write.parquet(os.path.join(tmp, "data"))
+            with open(os.path.join(tmp, "_covered.json"), "w") as fh:
+                json.dump({"epochs": sorted(epochs)}, fh)
+
+        final = publish_dir(os.path.join(state_dir, f"base-{n_next:06d}"), write)
+        if _covered(state_dir) != epochs:
+            # another process committed this base first: its coverage
+            # differs, so the loose epochs below are not ours to drop
+            raise RuntimeError(f"{final}: committed by a concurrent compaction")
         # cleanup (best-effort: reader ignores superseded dirs
         # regardless); loose dirs of already-covered epochs are crash
         # leftovers — sweep
@@ -217,19 +201,10 @@ def compact(
             shutil.rmtree(os.path.join(state_dir, b), ignore_errors=True)
         for e in loose:
             shutil.rmtree(os.path.join(state_dir, f"epoch={e}"), ignore_errors=True)
-        # _tmp-*/_old-* dirs (a crash between a tmp write and its
-        # rename, or mid-replay in fold) leak disk unboundedly if never
-        # swept, but the state lock is only PROCESS-level: a _tmp from
-        # another process sharing this state_dir (cron overlap, a
-        # separate service) may be a live in-flight write whose deletion
-        # would fail that writer's rename. Staleness therefore keys on
-        # the NEWEST mtime found recursively under the dir — a Spark
-        # parquet job writes under _temporary/... subdirs, so the top
-        # dir's own mtime stays at job start for the whole write and
-        # would mark a long-running legitimate fold stale; any file the
-        # job is still producing keeps the recursive mtime fresh. The
-        # day-long cutoff on top makes a sweep of a live write require
-        # a writer fully wedged for 24h with no file progress.
+        # sweep crash leftovers (_tmp-*/_old-*, see io/commit). Another
+        # process sharing this state_dir may still be writing its _tmp,
+        # so only dirs with no file newer than a day go: a Spark write's
+        # _temporary/ files keep a live tmp's recursive mtime fresh.
         cutoff = time.time() - 86400
         for d in os.listdir(state_dir):
             if d.startswith(("_tmp-", "_old-")):
@@ -339,7 +314,7 @@ def fold_rows(
     cardinality) — the ledger-sidecar precedent; launching a Spark
     write (with its per-task commit protocol) per tiny partial would be
     pure overhead. Same epoch semantics as ``fold`` (covered refusal,
-    replay overwrites its own dir atomically via tmp+rename).
+    replay replaces its own dir).
 
     ``schema`` (a Spark StructType covering at least keys+merges, or a
     pyarrow Schema in cols order) pins the parquet types. Without it a
@@ -356,7 +331,6 @@ def fold_rows(
     with _state_lock(state_dir):
         if epoch in _covered(state_dir):
             return False
-        os.makedirs(state_dir, exist_ok=True)
         cols = list(keys) + list(merges)
         arrow_schema = None
         if schema is not None:
@@ -372,11 +346,10 @@ def fold_rows(
         table = pa.Table.from_pandas(
             pdf[cols], schema=arrow_schema, preserve_index=False
         )
-        tmp = os.path.join(state_dir, f"_tmp-{uuid.uuid4().hex[:8]}")
-        os.makedirs(tmp)
-        pq.write_table(table, os.path.join(tmp, "part-0.parquet"))
-        final = os.path.join(state_dir, f"epoch={epoch}")
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+
+        def write(tmp: str) -> None:
+            os.makedirs(tmp)
+            pq.write_table(table, os.path.join(tmp, "part-0.parquet"))
+
+        replace_dir(os.path.join(state_dir, f"epoch={epoch}"), write)
         return True

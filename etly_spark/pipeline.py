@@ -49,6 +49,7 @@ from etly_spark import registry
 from etly_spark import builtins as _builtins  # noqa: F401  (registers etly.* names)
 from etly_spark.config import Transfer
 from etly_spark.io import fs as fsio
+from etly_spark.io.commit import write_file
 from etly_spark.meta import Meta, ObjectMeta, ProcessedIndex, ProcessingStatus, sidecar_dir
 from etly_spark.sources.datastore import read_datastore
 from etly_spark.sources.storage import (
@@ -1180,7 +1181,6 @@ def _append_ledger_sidecar(
     if not entries:
         return
     part_dir = os.path.join(stats_dir, f"run_ts={_escape_partition_value(run_ts)}")
-    os.makedirs(part_dir, exist_ok=True)
     str_cols = ["source", "target", "error", "message", "timestamp"]
     int_cols = ["record_processed", "record_skipped", "record_errors"]
     table = pa.table(
@@ -1189,6 +1189,9 @@ def _append_ledger_sidecar(
             **{c: pa.array([getattr(e, c) for e in entries], pa.int64()) for c in int_cols},
         }
     )
-    pq.write_table(table, os.path.join(part_dir, f"part-{uuid.uuid4().hex[:12]}.parquet"))
+    write_file(
+        os.path.join(part_dir, f"part-{uuid.uuid4().hex[:12]}.parquet"),
+        lambda tmp: pq.write_table(table, tmp),
+    )
     # threshold read at call time so tests/operators can tune the module global
     compact_ledger_sidecar(stats_dir, threshold=COMPACT_THRESHOLD)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etly_spark.functions import vector as V
+from etly_spark.io.commit import publish_dir, replace_dir, write_file
 from etly_spark.io.staging import run_scratch_dir, stage_table
 from etly_spark.io.tables import load_table
 from etly_spark.queries.catalog import (
@@ -411,7 +412,6 @@ def sim_ivf_ann(
 # quantizer — the oracle computes that batch form, so hash equality
 # proves the append-only maintenance loses nothing.
 _IVFINC_EPOCHS = 4
-_IVFINC_CACHE: dict[str, str] = {}
 
 # the checked row's deterministic deletion batch (arrives AFTER the
 # postings epochs): residue chosen so the tombstoned set provably
@@ -552,7 +552,9 @@ def fold_ivf_epoch(
     ~log(growth) (sqrt-scaled sub-cell counts)."""
     asn = V.assign_nearest(shard.select("vec_id", "embedding", "nrm"), cent_pdf)
     asn = _route_through_splits(asn, splits_dir)
-    asn.write.mode("overwrite").parquet(os.path.join(postings_dir, f"epoch={epoch}"))
+    replace_dir(
+        os.path.join(postings_dir, f"epoch={epoch}"), lambda tmp: asn.write.parquet(tmp)
+    )
 
 
 def _splits_depth(splits_pdf) -> int:
@@ -639,8 +641,9 @@ def fold_ivf_tombstones(deleted: DataFrame, tombstones_dir: str, epoch: int) -> 
     rewrites the posting lists in place; at 100 TB the log-structured
     answer is a tombstone side-table anti-joined at probe time, folded
     away at the next compaction)."""
-    deleted.select("vec_id").write.mode("overwrite").parquet(
-        os.path.join(tombstones_dir, f"epoch={epoch}")
+    replace_dir(
+        os.path.join(tombstones_dir, f"epoch={epoch}"),
+        lambda tmp: deleted.select("vec_id").write.parquet(tmp),
     )
 
 
@@ -768,10 +771,12 @@ def record_fold_drift(index_dir: str, epoch) -> dict:
             "cell": stats["max_cell"],
             "share": stats["max_share"],
         }
-    tmp = f"{sc_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(state, f)
-    os.replace(tmp, sc_path)
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            _json.dump(state, f)
+
+    write_file(sc_path, write)
     stats["alert"] = state.get("alert")
     return stats
 
@@ -826,15 +831,7 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
 
     Returns {"live_rows", "purged_rows", "bytes_before", "bytes_after"}.
     """
-    import json as _json
-    import shutil
-    import uuid
-
-    from etly_spark.io.compact import (
-        next_segment,
-        partition_marker,
-        recover_covered_partitions,
-    )
+    from etly_spark.io.compact import commit_segment, recover_covered_partitions
 
     post = os.path.join(index_dir, "postings")
     tomb = os.path.join(index_dir, "tombstones")
@@ -874,18 +871,7 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
         )
     # one distributed write, cluster parallelism preserved (an EMPTY
     # live set still writes a schema-carrying part file — SPARK-23271)
-    tmp = os.path.join(post, f"_purge-tmp-{uuid.uuid4().hex[:8]}")
-    live.write.parquet(tmp)
-    # dict-form manifest with content markers (r13): recovery after a
-    # crash removes a superseded dir only if its parts still match —
-    # a reused epoch id written later survives (io/compact docstring)
-    with open(os.path.join(tmp, "_folded.json"), "w") as f:
-        _json.dump(
-            {d: partition_marker(os.path.join(post, d)) for d in superseded}, f
-        )
-    os.rename(tmp, next_segment(post, "epoch"))
-    for d in superseded:
-        shutil.rmtree(os.path.join(post, d), ignore_errors=True)
+    commit_segment(post, "epoch", lambda tmp: live.write.parquet(tmp), superseded)
     if os.path.isdir(tomb):
         shutil.rmtree(tomb, ignore_errors=True)
     try:  # purged rows invalidate the drift sidecar's counts
@@ -998,8 +984,6 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
         return {"split": [], "cap": cap, "sub_cells": 0, "gen0_cells": k}
     import glob as _glob
     import hashlib
-    import shutil
-    import uuid as _uuid
 
     from etly_spark.operators.prefix import banded_row_number
 
@@ -1101,9 +1085,7 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
                 }
             )
             sub_df = sub_df.unionByName(spark.createDataFrame(neg, sub_df.schema))
-        tmp = os.path.join(index_dir, f"_splittmp-{_uuid.uuid4().hex[:8]}")
-        sub_df.coalesce(1).write.parquet(tmp)
-        os.rename(tmp, pend)
+        publish_dir(pend, lambda tmp: sub_df.coalesce(1).write.parquet(tmp))
 
     # 2. reassignment SEGMENT: one grouped-assign of the hot leaves'
     # rows against the pending table (executor-side, cached per batch)
@@ -1127,21 +1109,18 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
             out = routed.select(
                 "vec_id", "embedding", "nrm", F.col("sub").alias("cent_id"), "parent"
             )
-        tmp = os.path.join(index_dir, f"_splittmp-{_uuid.uuid4().hex[:8]}")
-        out.write.parquet(tmp)
-        os.rename(tmp, seg)
+        publish_dir(seg, lambda tmp: out.write.parquet(tmp))
 
-    # 3. ACTIVATE: move the single pending parquet into
-    # quantizer_splits/ — one rename; before it the segment is inert
+    # 3. ACTIVATE: commit the single pending parquet as
+    # quantizer_splits/<batch>.parquet; before it the segment is inert
     # (liveness keys on the split-node cells the table names), after it
     # the superseded leaf rows stop matching.
-    os.makedirs(splits_dir, exist_ok=True)
     entry = os.path.join(splits_dir, f"{batch}.parquet")
     if not os.path.exists(entry):
         parts = sorted(_glob.glob(os.path.join(pend, "*.parquet")))
         if len(parts) != 1:
             raise RuntimeError(f"expected 1 pending splits part, got {parts}")
-        os.rename(parts[0], entry)
+        write_file(entry, lambda tmp: os.link(parts[0], tmp))
     shutil.rmtree(pend, ignore_errors=True)
     # topology changed: the fold-time drift sidecar's counts refer to
     # leaves that no longer exist — drop it; the next fold re-baselines
@@ -1154,64 +1133,41 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
 
 
 def ivf_inc_index(spark: SparkSession, sf_dir: str) -> str:
-    """The incrementally-maintained IVF index for ``sf_dir``, built
-    once per process (the staged-artifact contract, fingerprinted on
-    the embeddings input): epoch shards (vec_id % _IVFINC_EPOCHS — the
-    deterministic stand-in for arrival order) folded one at a time via
-    fold_ivf_epoch, then one deletion batch (_IVFINC_DEL) folded as a
-    tombstone partition. Returns the committed directory holding
-    ``quantizer/`` (the frozen coarse-centroid table — selected from
-    the FIRST shard only, K_CENTROIDS rows at any corpus size),
-    ``postings/epoch=e/`` (one append-only partition per arrival) and
-    ``tombstones/epoch=e/`` (one per deletion batch)."""
-    import hashlib
-    import uuid
+    """The incrementally-maintained IVF index for ``sf_dir``, staged
+    once per process (fingerprinted on the embeddings input): epoch
+    shards (vec_id % _IVFINC_EPOCHS — the deterministic stand-in for
+    arrival order) folded one at a time via fold_ivf_epoch, then one
+    deletion batch (_IVFINC_DEL) folded as a tombstone partition.
+    Returns the committed directory holding ``quantizer/`` (the frozen
+    coarse-centroid table — selected from the FIRST shard only,
+    K_CENTROIDS rows at any corpus size), ``postings/epoch=e/`` (one
+    append-only partition per arrival) and ``tombstones/epoch=e/``
+    (one per deletion batch)."""
+    from etly_spark.io.staging import stage_dir
 
-    from etly_spark.io import staging as _st
-
-    dep = _st._dep_sig(os.path.join(sf_dir, "embeddings.parquet"))
-    fp = hashlib.sha1(f"ivf-inc::{dep}".encode()).hexdigest()[:24]
-    if fp in _IVFINC_CACHE:
-        return _IVFINC_CACHE[fp]
-    final = os.path.join(_st._root(), f"ivfinc-{fp}")
-    # per-fingerprint build lock (r15 advice): the now-concurrent
-    # ivf_inc/ivf_split branches share this index — without the lock
-    # both pool workers cold-build the full multi-epoch fold (rename
-    # keeps it correct, but the loser's build is wasted Spark jobs)
-    with _st.build_lock(fp):
-        if not os.path.isdir(final):
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            s = _normed(load_table(spark, sf_dir, "embeddings"))
-            shard0 = s.where(F.col("vec_id") % _IVFINC_EPOCHS == 0)
-            # the frozen quantizer: hash-selected from shard 0 alone —
-            # the only part of the index later arrivals depend on
-            centroid_plan(shard0).write.parquet(os.path.join(tmp, "quantizer"))
-            cent_pdf = V._staged_pdf(os.path.join(tmp, "quantizer"))
-            for e in range(_IVFINC_EPOCHS):
-                fold_ivf_epoch(
-                    s.where(F.col("vec_id") % _IVFINC_EPOCHS == e),
-                    cent_pdf,
-                    os.path.join(tmp, "postings"),
-                    e,
-                )
-            # a deletion batch arrives after the inserts (the checked
-            # row's deterministic stand-in for a takedown/expiry feed)
-            fold_ivf_tombstones(
-                s.where(F.expr(_IVFINC_DEL)), os.path.join(tmp, "tombstones"), 0
+    def build(tmp: str) -> None:
+        s = _normed(load_table(spark, sf_dir, "embeddings"))
+        shard0 = s.where(F.col("vec_id") % _IVFINC_EPOCHS == 0)
+        # the frozen quantizer: hash-selected from shard 0 alone — the
+        # only part of the index later arrivals depend on
+        centroid_plan(shard0).write.parquet(os.path.join(tmp, "quantizer"))
+        cent_pdf = V._staged_pdf(os.path.join(tmp, "quantizer"))
+        for e in range(_IVFINC_EPOCHS):
+            fold_ivf_epoch(
+                s.where(F.col("vec_id") % _IVFINC_EPOCHS == e),
+                cent_pdf,
+                os.path.join(tmp, "postings"),
+                e,
             )
-            try:
-                os.rename(tmp, final)
-            except OSError:
-                # concurrent-builder race (the stage_path contract):
-                # another PROCESS committed first — its artifact is
-                # equivalent; drop ours
-                import shutil
+        # a deletion batch arrives after the inserts (the checked row's
+        # deterministic stand-in for a takedown/expiry feed)
+        fold_ivf_tombstones(
+            s.where(F.expr(_IVFINC_DEL)), os.path.join(tmp, "tombstones"), 0
+        )
 
-                if not os.path.isdir(final):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-    _IVFINC_CACHE[fp] = final
-    return final
+    return stage_dir(
+        "ivf-inc", [os.path.join(sf_dir, "embeddings.parquet")], build
+    )
 
 
 def sim_ivf_inc(
@@ -1229,40 +1185,23 @@ def sim_ivf_inc(
     return _probe_ivf_index(spark, ivf_inc_index(spark, sf_dir), qwhere, q_pdf)
 
 
-_IVFSPLIT_CACHE: dict[str, str] = {}
-
-
 def ivf_split_index(spark: SparkSession, sf_dir: str) -> str:
-    """The ivf_inc index AFTER the hot-cell split rung (r12): a copy of
-    the incrementally-folded artifact with split_hot_cells applied at
-    the default cap (ceil(N/nlist) — every above-average cell splits,
-    so the gate provably exercises splitting at every SF). Built once
-    per process, same fingerprint contract as ivf_inc_index."""
-    import hashlib
-    import shutil
-    import uuid
+    """The ivf_inc index AFTER the hot-cell split rung: a copy of the
+    incrementally-folded artifact with split_hot_cells applied at the
+    default cap (ceil(N/nlist) — every above-average cell splits, so
+    the gate provably exercises splitting at every SF). Staged once per
+    process, same fingerprint contract as ivf_inc_index."""
+    from etly_spark.io.staging import stage_dir
 
-    from etly_spark.io import staging as _st
+    base = ivf_inc_index(spark, sf_dir)
 
-    dep = _st._dep_sig(os.path.join(sf_dir, "embeddings.parquet"))
-    fp = hashlib.sha1(f"ivf-split::{dep}".encode()).hexdigest()[:24]
-    if fp in _IVFSPLIT_CACHE:
-        return _IVFSPLIT_CACHE[fp]
-    final = os.path.join(_st._root(), f"ivfsplit-{fp}")
-    with _st.build_lock(fp):
-        if not os.path.isdir(final):
-            base = ivf_inc_index(spark, sf_dir)
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            shutil.copytree(base, tmp)
-            split_hot_cells(spark, tmp)
-            try:
-                os.rename(tmp, final)
-            except OSError:
-                if not os.path.isdir(final):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-    _IVFSPLIT_CACHE[fp] = final
-    return final
+    def build(tmp: str) -> None:
+        shutil.copytree(base, tmp)
+        split_hot_cells(spark, tmp)
+
+    return stage_dir(
+        "ivf-split", [os.path.join(sf_dir, "embeddings.parquet")], build
+    )
 
 
 def sim_ivf_split(
@@ -1893,12 +1832,13 @@ def sim_pq(
     # codes stages must share one identity — an untagged custom frame
     # gets a single-use uuid keying BOTH
     tag = corpus_tag if corpus_tag else ("iid" if s is None else _uuid.uuid4().hex)
-    cent_pdf = V._staged_pdf(_pq_codebook_path(spark, sf_dir, nsrc, n, tag))
+    cb_path = _pq_codebook_path(spark, sf_dir, nsrc, n, tag)
+    cent_pdf = V._staged_pdf(cb_path)
     codes = stage_table(
         spark,
         f"pq-codes:{sf_dir}:{tag}",
         lambda: V.pq_codes_packed(base, cent_pdf, m=_PQ_M),
-        deps=[os.path.join(sf_dir, "embeddings.parquet")],
+        deps=[os.path.join(sf_dir, "embeddings.parquet"), cb_path],
     )
     sq = scoped_persist(
         _normed(V.pq_decode(codes, cent_pdf, m=_PQ_M)), eager=False
@@ -2308,7 +2248,9 @@ def _ivfpq_codes_path(
     """The STAGED codes table (vec_id, cell, codes) — built once per
     process per corpus, shared by the decode-probe and ADC scorers.
     ``tag`` is the tag _ivfpq_index RESOLVED (never re-derived here —
-    a custom frame's fresh uuid must key its own codes stage)."""
+    a custom frame's fresh uuid must key its own codes stage). The
+    committed codebook dir is a dependency: codes are only valid
+    against the books they were encoded with."""
     from etly_spark.io.staging import stage_path
 
     return stage_path(
@@ -2332,7 +2274,7 @@ def _ivfpq_codes_path(
         lambda: V.ivfpq_codes(asn, cb_path, m=_PQ_M, cell_col="cell")
         .withColumn("mb", _mb_col())
         .repartition("cell"),
-        deps=[os.path.join(sf_dir, "embeddings.parquet")],
+        deps=[os.path.join(sf_dir, "embeddings.parquet"), cb_path],
         # hive-partitioned on the coarse cell: the probe's cell filter
         # prunes DIRECTORIES (PartitionFilters in the scan) — an
         # unpartitioned write interleaves cells across every row group,
@@ -3038,7 +2980,6 @@ def sim_ivfpq_probe(
 # frozen shard-0 quantizer + frozen shard-0 per-cell codebooks, encode
 # the union, ADC-score minus deletions — so hash equality proves the
 # fold-by-fold index answers exactly like the batch build it implies.
-_IVFPQINC_CACHE: dict[str, str] = {}
 
 
 def _ivfpq_inc_sql(
@@ -3255,11 +3196,7 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
 
     Offline contract like compact/purge: NO active writer. Returns
     {"encoded_rows", "book_rows_added", "segments", "raw_dirs"}."""
-    import json as _json
-    import shutil
-    import uuid as _uuid
-
-    from etly_spark.io.compact import partition_marker, recover_covered_partitions
+    from etly_spark.io.compact import commit_segment, recover_covered_partitions
     from etly_spark.operators.prefix import banded_row_number
 
     post = os.path.join(index_dir, "postings")
@@ -3346,12 +3283,10 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
                 F.col("embedding").alias("ce"),
             )
         )
-        bdir = os.path.join(cb_dir, f"batch={nxt}")
-        if not os.path.isdir(bdir):
-            os.makedirs(cb_dir, exist_ok=True)
-            tmp = os.path.join(index_dir, f"_booktmp-{_uuid.uuid4().hex[:8]}")
-            batch_df.coalesce(1).write.parquet(tmp)
-            os.rename(tmp, bdir)
+        bdir = publish_dir(
+            os.path.join(cb_dir, f"batch={nxt}"),
+            lambda tmp: batch_df.coalesce(1).write.parquet(tmp),
+        )
         added = spark.read.parquet(bdir).count()
         _cb, token, _have, _nxt = _book_state(index_dir)
 
@@ -3359,33 +3294,23 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
     codes = V.ivfpq_codes(
         base, cb_dir, m=_PQ_M, cell_col="_root", keep=("_leaf",), cb_token=token
     ).select("vec_id", F.col("_leaf").alias("cent_id"), "codes")
-    n_enc = None
-    segs = [
-        int(d.rsplit("-", 1)[1])
-        for d in os.listdir(post)
-        if d.startswith("epoch=_codes-")
-    ]
-    seg = os.path.join(post, f"epoch=_codes-{(max(segs) + 1) if segs else 1:06d}")
-    tmp = os.path.join(post, f"_codes-tmp-{_uuid.uuid4().hex[:8]}")
-    codes.sortWithinPartitions("cent_id").write.parquet(tmp)
-    with open(os.path.join(tmp, "_folded.json"), "w") as f:
-        _json.dump(
-            {d: partition_marker(os.path.join(post, d)) for d in raw_dirs}, f
-        )
-    os.rename(tmp, seg)
-    for d in raw_dirs:
-        shutil.rmtree(os.path.join(post, d), ignore_errors=True)
-    n_enc = spark.read.parquet(seg).count()
+    seg = commit_segment(
+        post,
+        "epoch",
+        lambda tmp: codes.sortWithinPartitions("cent_id").write.parquet(tmp),
+        raw_dirs,
+        kind="_codes",
+    )
     return {
-        "encoded_rows": n_enc,
+        "encoded_rows": spark.read.parquet(seg).count(),
         "book_rows_added": added,
-        "segments": len(segs) + 1,
+        "segments": sum(d.startswith("epoch=_codes-") for d in os.listdir(post)),
         "raw_dirs": len(raw_dirs),
     }
 
 
 def ivfpq_inc_index(spark: SparkSession, sf_dir: str) -> str:
-    """The incrementally-maintained IVFPQ index for ``sf_dir`` (built
+    """The incrementally-maintained IVFPQ index for ``sf_dir`` (staged
     once per process, the ivf_inc_index contract): ``quantizer/`` (the
     frozen shard-0 coarse centroids, nlist sized for the ANTICIPATED
     index — shard0_n * epochs), raw epochs folded O(shard) as the
@@ -3395,47 +3320,29 @@ def ivfpq_inc_index(spark: SparkSession, sf_dir: str) -> str:
     lands as a tombstone partition. The steady-state payload is
     ``codebooks/batch=N`` + ``postings/epoch=_codes-N`` — codes-sized,
     not corpus-sized."""
-    import hashlib
-    import uuid
+    from etly_spark.io.staging import stage_dir
 
-    from etly_spark.io import staging as _st
-
-    dep = _st._dep_sig(os.path.join(sf_dir, "embeddings.parquet"))
-    fp = hashlib.sha1(f"ivfpq-inc::{dep}".encode()).hexdigest()[:24]
-    if fp in _IVFPQINC_CACHE:
-        return _IVFPQINC_CACHE[fp]
-    final = os.path.join(_st._root(), f"ivfpqinc-{fp}")
-    with _st.build_lock(fp):
-        if not os.path.isdir(final):
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            s = _normed(load_table(spark, sf_dir, "embeddings"))
-            shard0 = s.where(F.col("vec_id") % _IVFINC_EPOCHS == 0)
-            nlist = _ivfpq_cells(shard0.count() * _IVFINC_EPOCHS)
-            centroid_plan(shard0, k=nlist).write.parquet(
-                os.path.join(tmp, "quantizer")
+    def build(tmp: str) -> None:
+        s = _normed(load_table(spark, sf_dir, "embeddings"))
+        shard0 = s.where(F.col("vec_id") % _IVFINC_EPOCHS == 0)
+        nlist = _ivfpq_cells(shard0.count() * _IVFINC_EPOCHS)
+        centroid_plan(shard0, k=nlist).write.parquet(os.path.join(tmp, "quantizer"))
+        cent_pdf = V._staged_pdf(os.path.join(tmp, "quantizer"))
+        for e in range(_IVFINC_EPOCHS):
+            fold_ivfpq_epoch(
+                s.where(F.col("vec_id") % _IVFINC_EPOCHS == e),
+                cent_pdf,
+                os.path.join(tmp, "postings"),
+                e,
             )
-            cent_pdf = V._staged_pdf(os.path.join(tmp, "quantizer"))
-            for e in range(_IVFINC_EPOCHS):
-                fold_ivfpq_epoch(
-                    s.where(F.col("vec_id") % _IVFINC_EPOCHS == e),
-                    cent_pdf,
-                    os.path.join(tmp, "postings"),
-                    e,
-                )
-            encode_ivfpq_postings(spark, tmp)
-            fold_ivf_tombstones(
-                s.where(F.expr(_IVFINC_DEL)), os.path.join(tmp, "tombstones"), 0
-            )
-            try:
-                os.rename(tmp, final)
-            except OSError:
-                import shutil
+        encode_ivfpq_postings(spark, tmp)
+        fold_ivf_tombstones(
+            s.where(F.expr(_IVFINC_DEL)), os.path.join(tmp, "tombstones"), 0
+        )
 
-                if not os.path.isdir(final):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-    _IVFPQINC_CACHE[fp] = final
-    return final
+    return stage_dir(
+        "ivfpq-inc", [os.path.join(sf_dir, "embeddings.parquet")], build
+    )
 
 
 def _probe_ivfpq_index(

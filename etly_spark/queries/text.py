@@ -388,7 +388,7 @@ _BM25INC_DEL = "doc_id % 10 = 7"  # the checked deletion batch
 
 
 def bm25_inc_index(spark: SparkSession, sf_dir: str) -> str:
-    """The incrementally-maintained BM25 index for ``sf_dir`` (built
+    """The incrementally-maintained BM25 index for ``sf_dir`` (staged
     once per process — the ivfpq_inc_index contract): the corpus
     arrives as _BM25INC_EPOCHS shards, each folded O(shard) as its own
     postings/doclen/stats epoch partitions (operators/bm25.
@@ -398,41 +398,16 @@ def bm25_inc_index(spark: SparkSession, sf_dir: str) -> str:
     to freeze: the folded index minus tombstones equals the batch
     build over the live docs exactly — the gated 'bm25_inc' variant of
     text_top_terms proves that cross-engine."""
-    import hashlib
-    import uuid
-
-    from etly_spark.io import staging as _st
+    from etly_spark.io.staging import stage_dir
     from etly_spark.operators.bm25 import fold_bm25_epoch, fold_bm25_tombstones
 
-    dep = _st._dep_sig(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.sha1(f"bm25-inc::{dep}".encode()).hexdigest()[:24]
-    if fp in _BM25INC_CACHE:
-        return _BM25INC_CACHE[fp]
-    final = os.path.join(_st._root(), f"bm25inc-{fp}")
-    # per-fingerprint build lock (r15 advice): concurrent pool branches
-    # sharing the index build it once, not twice
-    with _st.build_lock(fp):
-        if not os.path.isdir(final):
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-            for e in range(_BM25INC_EPOCHS):
-                fold_bm25_epoch(
-                    d.where(F.col("doc_id") % _BM25INC_EPOCHS == e), tmp, e
-                )
-            fold_bm25_tombstones(d.where(F.expr(_BM25INC_DEL)), tmp, 0)
-            try:
-                os.rename(tmp, final)
-            except OSError:
-                import shutil
+    def build(tmp: str) -> None:
+        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        for e in range(_BM25INC_EPOCHS):
+            fold_bm25_epoch(d.where(F.col("doc_id") % _BM25INC_EPOCHS == e), tmp, e)
+        fold_bm25_tombstones(d.where(F.expr(_BM25INC_DEL)), tmp, 0)
 
-                if not os.path.isdir(final):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-    _BM25INC_CACHE[fp] = final
-    return final
-
-
-_BM25INC_CACHE: dict[str, str] = {}
+    return stage_dir("bm25-inc", [os.path.join(sf_dir, "documents.parquet")], build)
 
 
 def bm25_df_table(spark: SparkSession, sf_dir: str) -> DataFrame:

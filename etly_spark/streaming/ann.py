@@ -8,9 +8,9 @@ search index current without ever rebuilding it:
 
 - the FIRST micro-batch freezes the quantizer: hash-selected
   centroids from that batch alone (queries/similarity.centroid_plan —
-  K_CENTROIDS rows at any corpus size), committed atomically
-  (tmp + one rename) so a crash can never leave a half-written
-  centroid set;
+  K_CENTROIDS rows at any corpus size), committed with
+  ``io/commit.publish_dir`` so a crash never leaves a half-written
+  centroid set and a second writer adopts the first one's;
 - EVERY micro-batch folds its vectors as its own postings partition
   keyed by the epoch id (fold_ivf_epoch) — O(batch) work, no earlier
   epoch read or rewritten. Replay-safe: a replayed epoch re-assigns
@@ -32,9 +32,10 @@ builds (pinned equal in tests/test_sim_inc.py).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
+
+from etly_spark.io.commit import publish_dir
 
 
 def start_ivf_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
@@ -89,9 +90,7 @@ def start_ivf_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
             "vec_id", "embedding", V.l2_norm_pd(F.col("embedding")).alias("nrm")
         )
         if not os.path.isdir(qdir) and has_adds:
-            tmp = f"{qdir}.tmp-{uuid.uuid4().hex[:8]}"
-            centroid_plan(s).write.parquet(tmp)
-            os.rename(tmp, qdir)
+            publish_dir(qdir, lambda tmp: centroid_plan(s).write.parquet(tmp))
         if has_adds:
             # (a deletes-only stream before any add has no quantizer to
             # assign against — adds are skipped only when there are none)

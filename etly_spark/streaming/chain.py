@@ -11,12 +11,12 @@ crawl→corpus batch pipeline:
                                     → per-host rollup state
 
 Exactly-once under replay, by construction: all three sinks are keyed
-by the query's epoch_id with mode("overwrite") (the established
-epoch-fold contract), and the dedup probe reads the index RESTRICTED
-to epoch < current — so a replayed micro-batch never sees its own
-failed attempt's index contribution (which would mark every line
-"already seen" and empty the replayed docs). Partition pruning makes
-the epoch filter free.
+by the query's epoch_id and a replay replaces its own epoch dir
+(``io/commit.replace_dir``, the epoch-fold contract), and the dedup
+probe reads the index RESTRICTED to epoch < current — so a replayed
+micro-batch never sees its own failed attempt's index contribution
+(which would mark every line "already seen" and empty the replayed
+docs). Partition pruning makes the epoch filter free.
 
 Scale: per-trigger work is O(batch) — one warc parse task per shard,
 one map-side-combinable line aggregate, one keyed rollup fold; the
@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from etly_spark.io.commit import replace_dir
 
 ROLLUP_SPEC = {"n_docs": "count", "kept_chars": "sum:n_chars"}
 
@@ -124,8 +126,9 @@ def fold_epoch(
     idx = read_line_index_before(sp, index_dir, epoch_id)
     dd = dedup_lines_incremental(docs, idx).persist()
     try:
-        dd.withColumn("n_chars", F.length("text")).write.mode("overwrite").parquet(
-            f"{docs_dir}/epoch={epoch_id}"
+        replace_dir(
+            f"{docs_dir}/epoch={epoch_id}",
+            lambda tmp: dd.withColumn("n_chars", F.length("text")).write.parquet(tmp),
         )
         # this epoch's line contribution comes from the ORIGINAL batch
         # lines (first occurrences the corpus now owns), anti-joined
@@ -136,14 +139,18 @@ def fold_epoch(
         # the duplicated rows forever. Membership-safe: consumers only
         # test first_ord IS NULL, and a replayed epoch recomputes the
         # same anti-join against the same epoch-< index.
-        docs.select(
-            F.posexplode(F.split("text", "\n")).alias("_ln", "_line"),
-            F.col("doc_id").alias("_id"),
-        ).groupBy(F.md5(F.col("_line").cast("binary")).alias("line_h")).agg(
-            F.min(F.col("_id") * 1000000 + F.col("_ln")).alias("first_ord")
-        ).join(idx.select("line_h"), "line_h", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/epoch={epoch_id}")
+        new_lines = (
+            docs.select(
+                F.posexplode(F.split("text", "\n")).alias("_ln", "_line"),
+                F.col("doc_id").alias("_id"),
+            )
+            .groupBy(F.md5(F.col("_line").cast("binary")).alias("line_h"))
+            .agg(F.min(F.col("_id") * 1000000 + F.col("_ln")).alias("first_ord"))
+            .join(idx.select("line_h"), "line_h", "left_anti")
+        )
+        replace_dir(
+            f"{index_dir}/epoch={epoch_id}", lambda tmp: new_lines.write.parquet(tmp)
+        )
         IA.fold(
             state_dir,
             dd.withColumn("host", url_host(F.col("uri")))

@@ -7,7 +7,7 @@ two pieces:
 
 - ``start_signature_index`` — a Structured Streaming query that folds
   each micro-batch into a parquet minhash-signature index. Each epoch
-  writes its own ``epoch=N`` directory with ``mode("overwrite")``, so a
+  writes its own ``epoch=N`` directory (``io/commit.replace_dir``), so a
   replayed micro-batch (crash between write and checkpoint commit)
   overwrites its own output instead of duplicating it — the standard
   idempotent-foreachBatch pattern; exactly-once lands on the
@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from etly_spark.io.commit import replace_dir
 from etly_spark.operators.sketch import minhash_signatures
 
 
@@ -43,13 +44,15 @@ def start_feature_index(
 ) -> StreamingQuery:
     """Maintain ANY per-record feature index from a stream: each
     micro-batch runs ``transform`` (DataFrame -> DataFrame) and lands
-    in its own ``epoch=N`` dir with mode("overwrite") — the idempotent
+    in its own ``epoch=N`` dir, replaced on replay — the idempotent
     fold shared by every modality's index (text sketches, image
     perceptual hashes, ...). ``available_now=True`` drains the backlog
     then stops; otherwise the query runs continuously."""
 
     def fold_batch(bdf: DataFrame, epoch_id: int) -> None:
-        transform(bdf).write.mode("overwrite").parquet(f"{index_dir}/epoch={epoch_id}")
+        replace_dir(
+            f"{index_dir}/epoch={epoch_id}", lambda tmp: transform(bdf).write.parquet(tmp)
+        )
 
     writer = stream.writeStream.foreachBatch(fold_batch).option(
         "checkpointLocation", checkpoint

@@ -5,6 +5,7 @@ avg-via-two-partials pattern."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -700,3 +701,35 @@ def test_fold_commits_epoch_dir_atomically(spark, tmp_path):
     entries = sorted(os.listdir(state))
     assert entries == ["epoch=1"], entries
     assert _current(spark, state)["a"] == (1, 3, 3, 3)
+
+
+def test_compact_lost_race_keeps_loose_epochs(spark, tmp_path, monkeypatch):
+    """Another process publishing the same base-N with a different
+    coverage wins the name: compact must fail and keep the loose epochs
+    its base does not cover, not drop them."""
+    import json
+
+    from etly_spark.io import commit
+
+    state = str(tmp_path / "state")
+    for i, rows in enumerate(BATCHES):
+        IA.fold(state, _partial(_batch(spark, rows)), i, keys=KEYS, merges=MERGES)
+    before = _current(spark, state)
+
+    def rival_first(final, write):
+        def rival(tmp):
+            os.makedirs(os.path.join(tmp, "data"))
+            with open(os.path.join(tmp, "_covered.json"), "w") as fh:
+                json.dump({"epochs": ["0"]}, fh)
+
+        commit.publish_dir(final, rival)
+        return commit.publish_dir(final, write)
+
+    monkeypatch.setattr(IA, "publish_dir", rival_first)
+    with pytest.raises(RuntimeError, match="concurrent compaction"):
+        IA.compact(spark, state, keys=KEYS, merges=MERGES, threshold=1)
+    loose = {d for d in os.listdir(state) if d.startswith("epoch=")}
+    assert loose == {f"epoch={i}" for i in range(len(BATCHES))}
+    monkeypatch.undo()
+    shutil.rmtree(os.path.join(state, "base-000001"))
+    assert _current(spark, state) == before

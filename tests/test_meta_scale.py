@@ -120,6 +120,47 @@ def test_sidecar_compaction_bounds_directory_count(tmp_path, monkeypatch):
     }
 
 
+def _ledger_with_two_runs(tmp_path) -> str:
+    meta_url = str(tmp_path / "meta.json")
+    for w in range(2):
+        _append_ledger_sidecar(
+            sidecar_dir(meta_url),
+            f"2024-01-01T0{w}:00:00",
+            [ObjectMeta(source=f"file:///s/w{w}/f{i}.log") for i in range(3)],
+        )
+    return meta_url
+
+
+def test_skip_set_raises_on_torn_sidecar_part(tmp_path):
+    """A half-written part file is a broken ledger: the skip-set must
+    fail loudly, not answer 'nothing processed' (which would re-transfer
+    every file the bounded JSON no longer lists)."""
+    meta_url = _ledger_with_two_runs(tmp_path)
+    run = os.path.join(sidecar_dir(meta_url), sorted(os.listdir(sidecar_dir(meta_url)))[0])
+    good = os.path.join(run, os.listdir(run)[0])
+    with open(good, "rb") as f:
+        head = f.read(40)
+    with open(os.path.join(run, "part-torn.parquet"), "wb") as f:
+        f.write(head)
+    import pyarrow as pa
+
+    with pytest.raises((OSError, pa.ArrowInvalid)):
+        ProcessedIndex(meta_url).processed_among({"file:///s/w1/f0.log"})
+
+
+def test_skip_set_ignores_tmp_leftover(tmp_path):
+    """A crash before a sidecar part's commit leaves a `_tmp-*` file;
+    the skip-set's answer is unchanged by it."""
+    meta_url = _ledger_with_two_runs(tmp_path)
+    probe = {"file:///s/w0/f1.log", "file:///s/w1/f2.log", "file:///nope"}
+    before = ProcessedIndex(meta_url).processed_among(probe)
+    run = os.path.join(sidecar_dir(meta_url), sorted(os.listdir(sidecar_dir(meta_url)))[1])
+    with open(os.path.join(run, "_tmp-0123456789ab"), "wb") as f:
+        f.write(b"PAR1 torn")
+    assert ProcessedIndex(meta_url).processed_among(probe) == before
+    assert before == probe - {"file:///nope"}
+
+
 @pytest.fixture()
 def many_files_cfg(tmp_path):
     src = tmp_path / "in"

@@ -345,3 +345,51 @@ def test_sim_pq_codes_are_staged_and_reused(spark):
     assert staging.stats["misses"] == misses  # nothing rebuilt
     assert staging.stats["hits"] == hits + 2  # codebook + codes stages hit
     assert first == second
+
+
+def test_codes_stages_declare_their_codebook(spark, tmp_path, monkeypatch):
+    """The pq-codes and ivfpq-codes stages fingerprint the committed
+    codebook dir they encode against: two different codebooks give two
+    different codes stages, so a rebuilt codebook never serves codes
+    encoded against the old one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etly_spark.io import staging
+    from etly_spark.queries import similarity as S
+
+    (tmp_path / "embeddings.parquet").write_bytes(b"corpus")
+    books = []
+    for i in range(2):
+        d = tmp_path / f"cb{i}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({"cent_id": [0], "ce": [[float(i + 1)] * 64]}),
+            str(d / "part-0.parquet"),
+        )
+        books.append(str(d))
+
+    class Stop(Exception):
+        pass
+
+    seen: dict[str, list[str]] = {"pq": [], "ivfpq": []}
+
+    def spy(key, deps, write):
+        seen["pq" if key.startswith("pq-codes") else "ivfpq"].append(
+            staging._fingerprint(key, deps)
+        )
+        raise Stop
+
+    monkeypatch.setattr(staging, "stage_dir", spy)
+    s = spark.createDataFrame(
+        [(0, [1.0] * 64, 8.0)], "vec_id long, embedding array<double>, nrm double"
+    )
+    for cb in books:
+        monkeypatch.setattr(S, "_pq_codebook_path", lambda *a, cb=cb: cb)
+        with pytest.raises(Stop):
+            S.sim_pq(spark, str(tmp_path), s=s, corpus_tag="cb-deps")
+        with pytest.raises(Stop):
+            S._ivfpq_codes_path(spark, str(tmp_path), s, cb, "cb-deps")
+    assert len(seen["pq"]) == len(seen["ivfpq"]) == 2
+    assert seen["pq"][0] != seen["pq"][1]
+    assert seen["ivfpq"][0] != seen["ivfpq"][1]

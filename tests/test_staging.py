@@ -5,6 +5,7 @@ schema round-trip."""
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from etly_spark.io import staging
@@ -60,42 +61,48 @@ def test_empty_stage_round_trips_schema(spark):
     assert out2.schema == out.schema
 
 
-def test_concurrent_builders_one_commit(spark):
-    """Two threads racing to build the same stage: exactly one commit
-    wins the os.rename, the loser adopts it, both read identical rows —
-    the P3 parallel-window world where two window DAGs want the same
-    staged artifact."""
+@pytest.mark.parametrize("api", ["stage_path", "stage_dir"])
+def test_concurrent_builders_one_commit(spark, api):
+    """Threads racing to build the same stage: exactly one build and one
+    commit, every caller gets the committed dir with identical rows, and
+    no tmp is left behind — two pooled branches wanting the same staged
+    artifact (a DataFrame stage or an index that writes its own dir)."""
     import threading
 
-    from etly_spark.io import staging
+    key = f"race-{api}"
+    n = 4
+    builds, results, errors = [], [], []
+    barrier = threading.Barrier(n)
 
-    key = "race-stage"
-    results = []
-    errors = []
-    barrier = threading.Barrier(2)
-
-    def build():
+    def df():
+        builds.append(1)
         return spark.range(100).selectExpr("id", "id * 2 as v")
+
+    def stage() -> str:
+        if api == "stage_path":
+            return staging.stage_path(spark, key, df)
+        return staging.stage_dir(key, (), lambda tmp: df().write.parquet(tmp))
 
     def run():
         try:
             barrier.wait()
-            df = staging.stage_table(spark, key, build)
-            results.append(sorted((r.id, r.v) for r in df.collect()))
+            results.append(sorted((r.id, r.v) for r in spark.read.parquet(stage()).collect()))
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
-    threads = [threading.Thread(target=run) for _ in range(2)]
+    threads = [threading.Thread(target=run) for _ in range(n)]
     for th in threads:
         th.start()
     for th in threads:
         th.join(120)
     assert not errors, errors
-    assert len(results) == 2 and results[0] == results[1]
+    assert len(builds) == 1
+    assert len(results) == n and all(r == results[0] for r in results)
     assert results[0][0] == (0, 0) and len(results[0]) == 100
+    assert not [d for d in os.listdir(staging._root()) if d.startswith("_tmp-")]
     # later consumers hit the single commit
     before = dict(staging.stats)
-    staging.stage_table(spark, key, build).count()
+    stage()
     assert staging.stats["hits"] == before["hits"] + 1
 
 

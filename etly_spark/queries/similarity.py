@@ -22,10 +22,10 @@ once per vector; ranking ties broken by vec_id.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
-import sys
-import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,10 +47,6 @@ from etly_spark.queries.catalog import (
 # so the prior run's parquet is dead by then; bounds tmp growth to one
 # invocation's ~35 tiny files)
 _ANN_SCRATCH: str | None = None
-
-# opt-in stderr timing of each pooled branch build (profiling only)
-_ANN_PROFILE = os.environ.get("ETLY_ANN_PROFILE", "0") == "1"
-
 
 def _sql_dot(a: str, b: str) -> str:
     return (
@@ -99,9 +95,6 @@ SELECT query_id, neighbor_id, rank, round(cos_sim, 6) AS cos_sim
 FROM ranked WHERE rank <= 5
 ORDER BY query_id, rank
 """
-
-
-_BF_SQL = _bf_sql()
 
 
 def _query_pdf(s: DataFrame, qwhere: str = "vec_id < 8"):
@@ -167,9 +160,6 @@ SELECT query_id, neighbor_id, rank, round(cos_sim, 6) AS cos_sim
 FROM ranked WHERE rank <= 5
 ORDER BY query_id, rank
 """
-
-
-_LSH_SQL = _lsh_sql()
 
 
 def _sign_bucket() -> F.Column:
@@ -273,9 +263,6 @@ SELECT query_id, neighbor_id, rank, round(cos_sim, 6) AS cos_sim
 FROM ranked WHERE rank <= 5
 ORDER BY query_id, rank
 """
-
-
-_IVF_SQL = _ivf_sql()
 
 
 def centroid_plan(s: DataFrame, k: int = K_CENTROIDS) -> DataFrame:
@@ -1488,9 +1475,6 @@ ORDER BY query_id, rank
 """
 
 
-_SQ8_SQL = _sq8_sql()
-
-
 # Product quantization (FAISS's other compression axis, r9; r10
 # re-dimensioned for scale): d=64 splits into _PQ_M=16 subspaces of 4
 # dims; each subvector snaps to its most cosine-similar slice of a
@@ -2299,7 +2283,7 @@ def sim_ivfpq_adc(
     (functions/vector.ivfpq_adc_scores) — no reconstruction at all, so
     scoring work is O(k_c·m + candidates·m) per probed cell instead of
     O(candidates·d). HASH-GATED since the r12 closing amendment
-    (_ANN_METHODS['ivfpq_adc']): the kernel accumulates the per-m
+    (the ivfpq_adc row of ANN_TABLE): the kernel accumulates the per-m
     partial dots and squared slice norms in ASCENDING m order from a
     0.0 seed — exactly the oracle's ``list_reduce([0.0] || list(dm
     ORDER BY m), +)`` twin in _ivfpq_adc_sql — so ADC scores are
@@ -2875,25 +2859,6 @@ def sim_ivfpq_radius(
         spark, sf_dir, s, qwhere, corpus_tag, q_pdf, nprobe
     )
     return _exact_threshold(spark, scored, adc_thr, tau, nsrc, q_pdf)
-
-
-def _radius_recall_sql(tag: str, approx_sql: str, bf_sql: str) -> str:
-    """Radius accounting row: per query, how many of the exact
-    threshold-brute's tau-neighbors the index path recovered.
-    neighbor_id = hits, rank = the TRUE neighbor count (the density
-    denominator — radius has no fixed k), cos_sim = the fraction."""
-    return f"""
-SELECT 'recall_{tag}' AS method, query_id,
-       CAST(COUNT(hit) AS BIGINT) AS neighbor_id,
-       CAST(COUNT(*) AS INTEGER) AS rank,
-       round(COUNT(hit) / CAST(COUNT(*) AS DOUBLE), 6) AS cos_sim
-FROM (
-  SELECT b.query_id, a.neighbor_id AS hit
-  FROM ({bf_sql}) b
-  LEFT JOIN ({approx_sql}) a
-    ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-) GROUP BY query_id
-"""
 
 
 def sim_ivfpq_probe(
@@ -3472,19 +3437,29 @@ def sim_ivfpq_inc(
     return _probe_ivfpq_index(spark, d, q_pdf)
 
 
-def _recall_sql(tag: str, approx_sql: str, bf_sql: str | None = None) -> str:
-    """recall@5 accounting row: per query, how many of brute's exact
-    top-5 the approximate method recovered. neighbor_id carries the hit
-    count, rank the k, cos_sim the recall fraction (schema reuse keeps
-    the union uniform under the 50-entry registry cap)."""
+TOP5, RADIUS = "top5", "radius"  # recall kinds
+
+
+def _recall_sql(tag: str, approx_sql: str, base_sql: str, kind: str = TOP5) -> str:
+    """Recall accounting row: per query, how many of the exact base's
+    neighbors the approximate method recovered. neighbor_id carries the
+    hit count, rank the denominator (k for top-5; the TRUE tau-neighbor
+    count for radius, which has no fixed k), cos_sim the fraction
+    (schema reuse keeps the union uniform under the 50-entry registry
+    cap)."""
+    rank, den = (
+        ("5", "5.0")
+        if kind == TOP5
+        else ("CAST(COUNT(*) AS INTEGER)", "CAST(COUNT(*) AS DOUBLE)")
+    )
     return f"""
 SELECT 'recall_{tag}' AS method, query_id,
        CAST(COUNT(hit) AS BIGINT) AS neighbor_id,
-       5 AS rank,
-       round(COUNT(hit) / 5.0, 6) AS cos_sim
+       {rank} AS rank,
+       round(COUNT(hit) / {den}, 6) AS cos_sim
 FROM (
   SELECT b.query_id, a.neighbor_id AS hit
-  FROM ({bf_sql or _BF_SQL}) b
+  FROM ({base_sql}) b
   LEFT JOIN ({approx_sql}) a
     ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
 ) GROUP BY query_id
@@ -3721,73 +3696,213 @@ def sim_opq(
     )
 
 
-# Each method's result is computed ONCE as a MATERIALIZED CTE and
-# consumed by both its tagged rows and its recall accounting (r11).
-# The previous form embedded each method's full SQL textually per
-# consumer, and DuckDB inlines — with the trained-PQ chain in, pq8
-# alone would execute its three-assignment pipeline several times per
-# run (the Spark side always shared these via _keep/persist; this
-# brings the oracle to the same execution shape). Rows are identical.
-_ANN_METHODS = {
-    "brute": _BF_SQL,
-    "lsh": _LSH_SQL,
-    "ivf": _IVF_SQL,
-    "ivf_inc": _IVFINC_SQL,
-    "ivf_split": _IVFSPLIT_SQL,
-    "ivfpq_inc": _IVFPQINC_SQL,
-    "hardneg": _HN_SQL,
-    "sq8": _SQ8_SQL,
-    "pq8": _pq_sql(),
-    "ivfpq": _ivfpq_sql(),
-    "ivfpq_probe": _ivfpq_probe_sql(),
-    "ivfpq_adc": _ivfpq_adc_sql(),
-    "ivfpq_rerank": _ivfpq_rerank_sql(),
-    "brute_f": _bf_filtered_sql(),
-    "ivfpq_filtered": _ivfpq_filtered_sql(),
-    "brute_c": _bf_sql(_CEMB_SQL, _QC_WHERE),
-    "lsh_c": _lsh_sql(_CEMB_SQL, _QC_WHERE),
-    "ivf_c": _ivf_sql(_CEMB_SQL, _QC_WHERE),
-    "sq8_c": _sq8_sql(_CEMB_SQL, _QC_WHERE),
-    "pq8_c": _pq_sql(_CEMB_SQL, _QC_WHERE),
-    "ivfpq_c": _ivfpq_sql(_CEMB_SQL, _QC_WHERE),
-    "ivfpq_probe_c": _ivfpq_probe_sql(_CEMB_SQL, _QC_WHERE),
-    "ivfpq_adc_c": _ivfpq_adc_sql(_CEMB_SQL, _QC_WHERE),
-    "ivfpq_rerank_c": _ivfpq_rerank_sql(_CEMB_SQL, _QC_WHERE),
-    "brute_r_c": _bf_radius_sql(_CEMB_SQL, _QC_WHERE),
-    "ivfpq_radius_c": _ivfpq_radius_sql(_CEMB_SQL, _QC_WHERE),
-    "brute_a": _bf_sql(_AEMB_SQL, _QC_WHERE),
-    "pq8_a": _pq_sql(_AEMB_SQL, _QC_WHERE),
-    "opq_a": _pq_sql(_AOPQ_SRC_SQL, _QC_WHERE),
+# ------------------------------------------------------- method table
+# sim_ann_methods is driven by two tables. A fixture is one corpus
+# variant: its embedding column (None = the stored one), its query
+# predicate, and the oracle's source relation for the same vectors.
+class AnnFixture(NamedTuple):
+    embedding: Callable[[], F.Column] | None
+    qwhere: str
+    src_sql: str
+
+
+ANN_FIXTURES = {
+    "iid": AnnFixture(None, "vec_id < 8", "embeddings"),
+    "clustered": AnnFixture(clustered_embedding, _QC_WHERE, _CEMB_SQL),
+    "aniso": AnnFixture(aniso_embedding, _QC_WHERE, _AEMB_SQL),
 }
 
-_ANN_SQL = (
-    "WITH "
-    + ",\n".join(f"m_{k} AS MATERIALIZED ({sql})" for k, sql in _ANN_METHODS.items())
-    + "\n"
-    + "\nUNION ALL\n".join(
-        [f"SELECT '{k}' AS method, * FROM m_{k}"
-         for k in ("brute", "lsh", "ivf", "ivf_inc", "ivf_split", "ivfpq_inc",
-                   "hardneg", "sq8", "pq8", "ivfpq", "ivfpq_probe",
-                   "ivfpq_adc", "ivfpq_rerank", "brute_f", "ivfpq_filtered",
-                   "brute_r_c", "ivfpq_radius_c", "brute_a", "pq8_a",
-                   "opq_a")]
-        + [_recall_sql(k, f"SELECT * FROM m_{k}", "SELECT * FROM m_brute")
-           for k in ("lsh", "ivf", "ivf_inc", "ivf_split", "ivfpq_inc", "sq8",
-                     "pq8", "ivfpq", "ivfpq_probe", "ivfpq_adc",
-                     "ivfpq_rerank")]
-        + [_recall_sql("ivfpq_filtered", "SELECT * FROM m_ivfpq_filtered",
-                       "SELECT * FROM m_brute_f")]
-        + [_recall_sql(k, f"SELECT * FROM m_{k}", "SELECT * FROM m_brute_c")
-           for k in ("lsh_c", "ivf_c", "sq8_c", "pq8_c", "ivfpq_c",
-                     "ivfpq_probe_c", "ivfpq_adc_c", "ivfpq_rerank_c")]
-        + [_radius_recall_sql("ivfpq_radius_c",
-                              "SELECT * FROM m_ivfpq_radius_c",
-                              "SELECT * FROM m_brute_r_c")]
-        + [_recall_sql(k, f"SELECT * FROM m_{k}", "SELECT * FROM m_brute_a")
-           for k in ("pq8_a", "opq_a")]
+
+class BuiltFixture(NamedTuple):
+    tag: str
+    s: DataFrame  # persisted, normed corpus
+    q_pdf: object  # its query panel, collected once
+    qwhere: str
+
+
+def ann_fixture(spark: SparkSession, sf_dir: str, tag: str) -> BuiltFixture:
+    """One scan + norm pass, persisted: the common input of every
+    method on this fixture."""
+    fx = ANN_FIXTURES[tag]
+    e = load_table(spark, sf_dir, "embeddings")
+    if fx.embedding is not None:
+        e = e.select("vec_id", fx.embedding().alias("embedding"))
+    s = scoped_persist(_normed(e))
+    return BuiltFixture(tag, s, _query_pdf(s, fx.qwhere), fx.qwhere)
+
+
+def _scan(fn):
+    """Builder for fn(spark, sf_dir, s, q_pdf): the exact scans."""
+    return lambda spark, sf_dir, fx: fn(spark, sf_dir, fx.s, fx.q_pdf)
+
+
+def _staged(fn, with_q: bool = True):
+    """Builder for the staged-index methods, keyed by fixture tag."""
+
+    def build(spark, sf_dir, fx):
+        kw = {"q_pdf": fx.q_pdf} if with_q else {}
+        return fn(spark, sf_dir, fx.s, qwhere=fx.qwhere, corpus_tag=fx.tag, **kw)
+
+    return build
+
+
+_BRUTE = _scan(sim_topk_bruteforce)
+_SQ8 = _staged(sim_sq8, with_q=False)
+_PQ = _staged(sim_pq, with_q=False)
+_IVFPQ = _staged(sim_ivfpq, with_q=False)
+_IVFPQ_PROBE = _staged(sim_ivfpq_probe)
+_IVFPQ_ADC = _staged(sim_ivfpq_adc)
+_IVFPQ_RERANK = _staged(sim_ivfpq_rerank)
+
+
+class AnnMethod(NamedTuple):
+    tag: str  # output tag; recall rows are tagged recall_<tag>
+    fixture: str  # ANN_FIXTURES key
+    build: Callable  # (spark, sf_dir, BuiltFixture) -> top-k DataFrame
+    sql: Callable[[str, str], str]  # (oracle source, qwhere) -> oracle SQL
+    emit: bool  # the method's own rows enter the output
+    base: str | None = None  # exact method it is recall-accounted against
+    kind: str = TOP5  # recall kind
+
+
+# One row per method, in pool submit order: longest first (measured
+# per-branch wall at sf0.1), so short branches back-fill the heavy ones.
+# Rows differing only in fixture share a builder. The clustered rows
+# emit only recall (their neighbor lists would double the output for
+# no extra signal).
+ANN_TABLE = [
+    AnnMethod("ivfpq_rerank", "iid", _IVFPQ_RERANK, _ivfpq_rerank_sql, True, "brute"),
+    AnnMethod(
+        "ivfpq_filtered", "iid", _staged(sim_ivfpq_filtered),
+        _ivfpq_filtered_sql, True, "brute_f",
+    ),
+    AnnMethod(
+        "ivfpq_radius_c", "clustered", _staged(sim_ivfpq_radius),
+        _ivfpq_radius_sql, True, "brute_r_c", RADIUS,
+    ),
+    AnnMethod("ivfpq", "iid", _IVFPQ, _ivfpq_sql, True, "brute"),
+    AnnMethod(
+        "ivfpq_rerank_c", "clustered", _IVFPQ_RERANK, _ivfpq_rerank_sql,
+        False, "brute_c",
+    ),
+    AnnMethod(
+        "ivf_split", "iid", lambda sp, d, fx: sim_ivf_split(sp, d, q_pdf=fx.q_pdf),
+        lambda *_: _IVFSPLIT_SQL, True, "brute",
+    ),
+    AnnMethod(
+        "ivfpq_inc", "iid", lambda sp, d, fx: sim_ivfpq_inc(sp, d, q_pdf=fx.q_pdf),
+        lambda *_: _IVFPQINC_SQL, True, "brute",
+    ),
+    AnnMethod(
+        "ivf_inc", "iid", lambda sp, d, fx: sim_ivf_inc(sp, d, q_pdf=fx.q_pdf),
+        lambda *_: _IVFINC_SQL, True, "brute",
+    ),
+    AnnMethod(
+        "ivf", "iid", lambda sp, d, fx: sim_ivf_ann(sp, d, fx.q_pdf),
+        _ivf_sql, True, "brute",
+    ),
+    # iid LSH keeps its own 32-query default
+    AnnMethod(
+        "lsh", "iid", lambda sp, d, fx: sim_lsh_ann(sp, d, fx.s),
+        lambda src, _q: _lsh_sql(src), True, "brute",
+    ),
+    AnnMethod("sq8", "iid", _SQ8, _sq8_sql, True, "brute"),
+    AnnMethod("ivfpq_probe", "iid", _IVFPQ_PROBE, _ivfpq_probe_sql, True, "brute"),
+    AnnMethod("ivfpq_adc", "iid", _IVFPQ_ADC, _ivfpq_adc_sql, True, "brute"),
+    AnnMethod(
+        "ivfpq_probe_c", "clustered", _IVFPQ_PROBE, _ivfpq_probe_sql,
+        False, "brute_c",
+    ),
+    AnnMethod(
+        "ivfpq_adc_c", "clustered", _IVFPQ_ADC, _ivfpq_adc_sql, False, "brute_c"
+    ),
+    AnnMethod("ivfpq_c", "clustered", _IVFPQ, _ivfpq_sql, False, "brute_c"),
+    AnnMethod(
+        "lsh_c", "clustered",
+        lambda sp, d, fx: sim_lsh_ann(sp, d, fx.s, qwhere=fx.qwhere),
+        _lsh_sql, False, "brute_c",
+    ),
+    AnnMethod(
+        "ivf_c", "clustered",
+        lambda sp, d, fx: sim_ivf_ann(
+            sp, d, fx.q_pdf, assign=ivf_assignments_clustered(sp, d),
+            qwhere=fx.qwhere,
+        ),
+        _ivf_sql, False, "brute_c",
+    ),
+    AnnMethod("sq8_c", "clustered", _SQ8, _sq8_sql, False, "brute_c"),
+    AnnMethod("pq8", "iid", _PQ, _pq_sql, True, "brute"),
+    AnnMethod("pq8_c", "clustered", _PQ, _pq_sql, False, "brute_c"),
+    AnnMethod("pq8_a", "aniso", _PQ, _pq_sql, True, "brute_a"),
+    AnnMethod(
+        "opq_a", "aniso", _staged(sim_opq, with_q=False),
+        lambda _src, qw: _pq_sql(_AOPQ_SRC_SQL, qw), True, "brute_a",
+    ),
+    AnnMethod("brute", "iid", _BRUTE, _bf_sql, True),
+    AnnMethod(
+        "hardneg", "iid", _scan(sim_hard_negatives), lambda *_: _HN_SQL, True
+    ),
+    AnnMethod(
+        "brute_f", "iid", _scan(sim_topk_brute_filtered), _bf_filtered_sql, True
+    ),
+    AnnMethod("brute_c", "clustered", _BRUTE, _bf_sql, False),
+    AnnMethod("brute_a", "aniso", _BRUTE, _bf_sql, True),
+    AnnMethod(
+        "brute_r_c", "clustered", _scan(sim_brute_radius), _bf_radius_sql, True
+    ),
+]
+
+
+def _recall_rows(approx: DataFrame, tag: str, base: DataFrame, kind: str) -> DataFrame:
+    """Spark twin of _recall_sql. Both sides are Q·k rows (result-
+    density rows for radius), so the join is trivially broadcastable at
+    any corpus size."""
+    b = base.select("query_id", "neighbor_id")
+    a = approx.select(F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n"))
+    counts = (
+        b.join(a, (b.query_id == a._q) & (b.neighbor_id == a._n), "left")
+        .groupBy("query_id")
+        .agg(F.count("_n").alias("_nh"), F.count(F.lit(1)).alias("_nt"))
     )
-    + "\nORDER BY method, query_id, rank\n"
-)
+    den = F.lit(5) if kind == TOP5 else F.col("_nt").cast("int")
+    return counts.select(
+        F.lit(f"recall_{tag}").alias("method"),
+        "query_id",
+        F.col("_nh").alias("neighbor_id"),
+        den.alias("rank"),
+        F.round(F.col("_nh") / den.cast("double"), 6).alias("cos_sim"),
+    )
+
+
+def _ann_sql() -> str:
+    """The oracle: each method's result is one MATERIALIZED CTE (DuckDB
+    would otherwise inline and re-run it per consumer), consumed by its
+    tagged rows and its recall accounting."""
+
+    def cte(m: AnnMethod) -> str:
+        fx = ANN_FIXTURES[m.fixture]
+        return f"m_{m.tag} AS MATERIALIZED ({m.sql(fx.src_sql, fx.qwhere)})"
+
+    selects = [
+        f"SELECT '{m.tag}' AS method, * FROM m_{m.tag}" for m in ANN_TABLE if m.emit
+    ]
+    selects += [
+        _recall_sql(
+            m.tag, f"SELECT * FROM m_{m.tag}", f"SELECT * FROM m_{m.base}", m.kind
+        )
+        for m in ANN_TABLE
+        if m.base
+    ]
+    return (
+        "WITH "
+        + ",\n".join(map(cte, ANN_TABLE))
+        + "\n"
+        + "\nUNION ALL\n".join(selects)
+        + "\nORDER BY method, query_id, rank\n"
+    )
+
+
+_ANN_SQL = _ann_sql()
 
 
 @query(
@@ -3943,351 +4058,71 @@ _ANN_SQL = (
     "in STRESS.md.",
 )
 def sim_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Branch construction runs on a driver THREAD POOL (optimization
-    # r14, guide §2.6 "overlap independent jobs"): building this
-    # DataFrame issues ~50 small driver jobs (query-panel collects,
-    # staged-index reads, probe-cell picks, eager persists) that are
-    # independent across method branches, and running them sequentially
-    # measured 24-36 s of build wall vs 13-17 s of execution at sf0.1
-    # (cProfile: 21 s in py4j socket waits). Pooling the builders
-    # overlaps those jobs; each branch's PLAN is byte-identical, the
-    # union order below is fixed, so results are unchanged. The scope
-    # machinery (catalog.py) and stage builds (io/staging.py) are
-    # thread-aware: per-thread scope stacks, per-stage build locks.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Each method's Q·k output is MATERIALIZED to parquet once per
-    # invocation (r15, guide §1.2 don't-compute-twice / §2.4). Before:
-    # every output was consumed twice (its tagged rows + the recall
-    # join's probe side) and the recall BASES far more (brute 13x,
-    # brute_c 9x) — each consumer re-ran the full scorer subtree, so
-    # the final union job executed ~2x the method work. The r8/r14
-    # persist A/B (ETLY_ANN_PERSIST_TOPK, retired r15) lost because
-    # .persist() inserts InMemoryRelation barriers into the one big
-    # union job (53-94 s vs 41-67 s recompute at sf0.1); writing the
-    # Q·k rows (~40/method) to parquet DURING the pooled construction
-    # instead runs each scorer EXACTLY ONCE — in its branch's own
-    # labelled write job, overlapped on the pool — and the final plan
-    # is a union of tiny columnar scans. At 100 TB this is strictly
-    # dominant: the materialized output is Q·k rows on the cluster FS,
-    # vs either a second full corpus scan per consumer (recompute) or
-    # an executor-memory barrier (persist).
+    # Every method branch is built on a driver thread pool: each issues
+    # small driver jobs (query-panel collects, staged-index reads,
+    # probe-cell picks, eager persists) that are independent across
+    # branches, so pooling overlaps them. The scope machinery
+    # (catalog.py) and stage builds (io/staging.py) are thread-aware.
     #
-    # NOT result caching: the scratch dir is per-INVOCATION (uuid-named
-    # via run_scratch_dir, never fingerprinted on the inputs), so every
-    # bench/oracle run recomputes every method from the parquet inputs;
-    # the previous invocation's scratch is deleted on entry (catalog
-    # queries are sequential by contract) and the stage root dies with
-    # the process.
+    # Each branch writes its Q·k output to parquet in its own labelled
+    # job, so its scorer runs exactly once; its tagged rows and every
+    # recall join that reads it scan the tiny files. Persisting instead
+    # would put InMemoryRelation barriers into the final union job. The
+    # scratch dir is per invocation (never a result cache) and the
+    # previous invocation's is deleted on entry.
+    from concurrent.futures import ThreadPoolExecutor, as_completed
+
     global _ANN_SCRATCH
     if _ANN_SCRATCH is not None:
         shutil.rmtree(_ANN_SCRATCH, ignore_errors=True)
     _ANN_SCRATCH = out_root = run_scratch_dir("annout")
     _out_schema = "query_id long, neighbor_id long, rank int, cos_sim double"
 
-    def _run(name: str, fn) -> DataFrame:
-        # job descriptions are thread-local (guide §1.5): each pooled
-        # branch's construction + write job is attributable/cancellable
+    def _labelled(name: str, fn, *args):
+        # job descriptions are thread-local: each pooled branch's jobs
+        # are attributable and cancellable
         spark.sparkContext.setJobDescription(f"sim_ann_methods: {name}")
         try:
-            t0 = time.monotonic()
-            df = fn().select("query_id", "neighbor_id", "rank", "cos_sim")
-            t1 = time.monotonic()
-            path = os.path.join(out_root, name)
-            df.write.parquet(path)
-            if _ANN_PROFILE:
-                print(
-                    f"# ann-branch {name}: construct={t1 - t0:.2f}s "
-                    f"write={time.monotonic() - t1:.2f}s",
-                    file=sys.stderr,
-                )
-            return spark.read.schema(_out_schema).parquet(path)
+            return fn(*args)
         finally:
             spark.sparkContext.setJobDescription(None)
 
-    # Phase 1 — the three corpus fixtures (one scan + norm pass each,
-    # persisted; the common input of every branch on that fixture) and
-    # their tiny query panels, built concurrently.
-    def _fix_iid():
-        s = scoped_persist(_normed(load_table(spark, sf_dir, "embeddings")))
-        return s, _query_pdf(s)
-
-    def _fix_clu():
-        cb = scoped_persist(
-            _normed(
-                load_table(spark, sf_dir, "embeddings").select(
-                    "vec_id", clustered_embedding().alias("embedding")
-                )
-            )
-        )
-        return cb, _query_pdf(cb, _QC_WHERE)
-
-    def _fix_ani():
-        ab = scoped_persist(
-            _normed(
-                load_table(spark, sf_dir, "embeddings").select(
-                    "vec_id", aniso_embedding().alias("embedding")
-                )
-            )
-        )
-        return ab, _query_pdf(ab, _QC_WHERE)
-
-    def _label(name: str, fn):
-        spark.sparkContext.setJobDescription(f"sim_ann_methods: {name}")
-        try:
-            return fn()
-        finally:
-            spark.sparkContext.setJobDescription(None)
+    def _materialize(m: AnnMethod) -> DataFrame:
+        df = m.build(spark, sf_dir, fixtures[m.fixture])
+        path = os.path.join(out_root, m.tag)
+        df.select("query_id", "neighbor_id", "rank", "cos_sim").write.parquet(path)
+        return spark.read.schema(_out_schema).parquet(path)
 
     pool = ThreadPoolExecutor(max_workers=8)
     try:
-        f_iid = pool.submit(_label, "fixture iid", _fix_iid)
-        f_clu = pool.submit(_label, "fixture clustered", _fix_clu)
-        f_ani = pool.submit(_label, "fixture aniso", _fix_ani)
-        s, q_pdf = f_iid.result()
-        cb, qc_pdf = f_clu.result()
-        ab, qa_pdf = f_ani.result()
-
-        # Phase 2 — every method branch, concurrently (same builders,
-        # same arguments as the sequential form; slot names fix the
-        # union order below).
-        fns = {
-            "brute": lambda: sim_topk_bruteforce(spark, sf_dir, s, q_pdf),
-            "lsh": lambda: sim_lsh_ann(spark, sf_dir, s),
-            "ivf": lambda: sim_ivf_ann(spark, sf_dir, q_pdf),
-            "ivf_inc": lambda: sim_ivf_inc(spark, sf_dir, q_pdf=q_pdf),
-            "ivf_split": lambda: sim_ivf_split(spark, sf_dir, q_pdf=q_pdf),
-            "ivfpq_i": lambda: sim_ivfpq_inc(spark, sf_dir, q_pdf=q_pdf),
-            "hardneg": lambda: sim_hard_negatives(spark, sf_dir, s, q_pdf),
-            "sq8": lambda: sim_sq8(spark, sf_dir, s, corpus_tag="iid"),
-            "pq8": lambda: sim_pq(spark, sf_dir, s, corpus_tag="iid"),
-            "ivfpq": lambda: sim_ivfpq(spark, sf_dir, s, corpus_tag="iid"),
-            "ivfpq_p": lambda: sim_ivfpq_probe(
-                spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-            ),
-            "ivfpq_a": lambda: sim_ivfpq_adc(
-                spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-            ),
-            "ivfpq_r": lambda: sim_ivfpq_rerank(
-                spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-            ),
-            # filtered search (r14): the predicate-restricted exact
-            # baseline and the pushed-predicate probe
-            "brute_f": lambda: sim_topk_brute_filtered(spark, sf_dir, s, q_pdf),
-            "ivfpq_f": lambda: sim_ivfpq_filtered(
-                spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-            ),
-            # clustered-fixture branch (r9): same bucketed methods on
-            # the planted-cluster corpus; only recall rows are emitted
-            "brute_c": lambda: sim_topk_bruteforce(spark, sf_dir, cb, qc_pdf),
-            "lsh_c": lambda: sim_lsh_ann(spark, sf_dir, cb, qwhere=_QC_WHERE),
-            "ivf_c": lambda: sim_ivf_ann(
-                spark,
-                sf_dir,
-                qc_pdf,
-                assign=ivf_assignments_clustered(spark, sf_dir),
-                qwhere=_QC_WHERE,
-            ),
-            "sq8_c": lambda: sim_sq8(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered"
-            ),
-            "pq8_c": lambda: sim_pq(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered"
-            ),
-            "ivfpq_c": lambda: sim_ivfpq(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered"
-            ),
-            "ivfpq_pc": lambda: sim_ivfpq_probe(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered",
-                q_pdf=qc_pdf,
-            ),
-            "ivfpq_ac": lambda: sim_ivfpq_adc(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered",
-                q_pdf=qc_pdf,
-            ),
-            "ivfpq_rc": lambda: sim_ivfpq_rerank(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered",
-                q_pdf=qc_pdf,
-            ),
-            # OPQ branch (r14): plain vs permuted PQ on the aniso
-            # fixture, recall-accounted vs its own exact brute
-            "brute_a": lambda: sim_topk_bruteforce(spark, sf_dir, ab, qa_pdf),
-            "pq8_a": lambda: sim_pq(
-                spark, sf_dir, ab, qwhere=_QC_WHERE, corpus_tag="aniso"
-            ),
-            "opq_a": lambda: sim_opq(
-                spark, sf_dir, ab, qwhere=_QC_WHERE, corpus_tag="aniso"
-            ),
-            # radius search (r14): clustered fixture, tau = 0.7
-            "brute_rc": lambda: sim_brute_radius(spark, sf_dir, cb, qc_pdf),
-            "ivfpq_radc": lambda: sim_ivfpq_radius(
-                spark, sf_dir, cb, qwhere=_QC_WHERE, corpus_tag="clustered",
-                q_pdf=qc_pdf,
-            ),
+        fx_futs = {
+            t: pool.submit(_labelled, f"fixture {t}", ann_fixture, spark, sf_dir, t)
+            for t in ANN_FIXTURES
         }
-        # Submission order is LONGEST-FIRST (r15, guide §2.6: the pool
-        # is a makespan problem — dict order submitted the heavy
-        # probe/maintenance branches last, so the run's tail was one
-        # worker finishing a ~6 s branch while seven idled; ordering by
-        # the measured per-branch wall at sf0.1 lets short branches
-        # back-fill the heavy ones). Purely a scheduling hint: results
-        # are keyed by name and the union order below is fixed.
-        heavy_first = [
-            "ivfpq_r", "ivfpq_f", "ivfpq_radc", "ivfpq", "ivfpq_rc",
-            "ivf_split", "ivfpq_i", "ivf_inc", "ivf", "lsh", "sq8",
-            "ivfpq_p", "ivfpq_a", "ivfpq_pc", "ivfpq_ac", "ivfpq_c",
-            "lsh_c", "ivf_c", "sq8_c", "pq8", "pq8_c", "pq8_a", "opq_a",
-        ]
-        order = heavy_first + [n for n in fns if n not in heavy_first]
-        futs = {name: pool.submit(_run, name, fns[name]) for name in order}
-        b = {name: fut.result() for name, fut in futs.items()}
+        fixtures = {t: f.result() for t, f in fx_futs.items()}
+        futs = {
+            m.tag: pool.submit(_labelled, m.tag, _materialize, m) for m in ANN_TABLE
+        }
+        for f in as_completed(futs.values()):
+            f.result()  # the first failing branch raises here
+        out = {tag: f.result() for tag, f in futs.items()}
     finally:
-        pool.shutdown(wait=True)
-    # Every branch is parquet-committed now: the fixture/sketch persists
-    # are dead weight for the returned plan (tiny columnar scans only) —
-    # free the executor memory immediately instead of at the next
-    # catalog invocation.
-    release_cache()
+        # on failure, queued branches never start; either way the
+        # fixture persists are dead weight once every branch is
+        # committed (or abandoned)
+        pool.shutdown(wait=True, cancel_futures=True)
+        release_cache()
 
-    brute = b["brute"]
-    lsh = b["lsh"]
-    ivf = b["ivf"]
-    ivf_inc = b["ivf_inc"]
-    ivf_split = b["ivf_split"]
-    ivfpq_i = b["ivfpq_i"]
-    sq8 = b["sq8"]
-    pq8 = b["pq8"]
-    ivfpq = b["ivfpq"]
-    ivfpq_p = b["ivfpq_p"]
-    ivfpq_a = b["ivfpq_a"]
-    ivfpq_r = b["ivfpq_r"]
-    brute_f = b["brute_f"]
-    ivfpq_f = b["ivfpq_f"]
-
-    def recall_rows(approx: DataFrame, tag: str, base: DataFrame | None = None) -> DataFrame:
-        # recall@5 vs the exact brute rows, inside the same DAG: both
-        # sides are Q*k rows (40 here; Q is small by construction at
-        # any corpus size), so this is a trivially broadcastable join
-        # — the accounting the quantized/bucketed paths need at 100 TB,
-        # where they are the only runnable plans and their quality must
-        # be a recorded number, not an assumption.
-        b = (base if base is not None else brute).select("query_id", "neighbor_id")
-        a = approx.select(
-            F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n")
-        )
-        joined = b.join(
-            a, (b.query_id == a._q) & (b.neighbor_id == a._n), "left"
-        )
-        return (
-            joined.groupBy("query_id")
-            .agg(F.count("_n").alias("_nh"))
-            .select(
-                F.lit(f"recall_{tag}").alias("method"),
-                "query_id",
-                F.col("_nh").alias("neighbor_id"),
-                F.lit(5).alias("rank"),
-                F.round(F.col("_nh") / F.lit(5.0), 6).alias("cos_sim"),
-            )
-        )
-
-    # clustered-fixture branch (r9): the SAME three bucketed methods
-    # probed against the planted-cluster corpus (clustered_embedding —
-    # integer-derived, bit-identical cross-engine), recall@5 vs that
-    # corpus's own brute top-5. Only the recall accounting rows enter
-    # the output (the per-neighbor lists would double the row count for
-    # no extra signal). The fixture's IVF index is STAGED like the
-    # i.i.d. one (ivf_assignments_clustered — built once per process);
-    # OPQ rides the anisotropic fixture, radius the clustered one.
-    # All built in phase 2 above; unpacked here for the fixed union.
-    brute_c = b["brute_c"]
-    lsh_c = b["lsh_c"]
-    ivf_c = b["ivf_c"]
-    sq8_c = b["sq8_c"]
-    pq8_c = b["pq8_c"]
-    ivfpq_c = b["ivfpq_c"]
-    ivfpq_pc = b["ivfpq_pc"]
-    ivfpq_ac = b["ivfpq_ac"]
-    ivfpq_rc = b["ivfpq_rc"]
-    brute_a = b["brute_a"]
-    pq8_a = b["pq8_a"]
-    opq_a = b["opq_a"]
-    brute_rc = b["brute_rc"]
-    ivfpq_radc = b["ivfpq_radc"]
-
-    def radius_recall_rows(approx: DataFrame, tag: str, base: DataFrame) -> DataFrame:
-        # density accounting: hits / TRUE tau-neighbor count per query
-        # (rank carries the denominator — radius has no fixed k); both
-        # sides are result-density-sized, a broadcastable join
-        b = base.select("query_id", "neighbor_id")
-        a = approx.select(
-            F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n")
-        )
-        joined = b.join(
-            a, (b.query_id == a._q) & (b.neighbor_id == a._n), "left"
-        )
-        return (
-            joined.groupBy("query_id")
-            .agg(
-                F.count("_n").alias("_nh"),
-                F.count(F.lit(1)).alias("_nt"),
-            )
-            .select(
-                F.lit(f"recall_{tag}").alias("method"),
-                "query_id",
-                F.col("_nh").alias("neighbor_id"),
-                F.col("_nt").cast("int").alias("rank"),
-                F.round(
-                    F.col("_nh") / F.col("_nt").cast("double"), 6
-                ).alias("cos_sim"),
-            )
-        )
-
-    tagged = [
-        brute.select(F.lit("brute").alias("method"), "*"),
-        lsh.select(F.lit("lsh").alias("method"), "*"),
-        ivf.select(F.lit("ivf").alias("method"), "*"),
-        ivf_inc.select(F.lit("ivf_inc").alias("method"), "*"),
-        ivf_split.select(F.lit("ivf_split").alias("method"), "*"),
-        ivfpq_i.select(F.lit("ivfpq_inc").alias("method"), "*"),
-        b["hardneg"].select(F.lit("hardneg").alias("method"), "*"),
-        sq8.select(F.lit("sq8").alias("method"), "*"),
-        pq8.select(F.lit("pq8").alias("method"), "*"),
-        ivfpq.select(F.lit("ivfpq").alias("method"), "*"),
-        ivfpq_p.select(F.lit("ivfpq_probe").alias("method"), "*"),
-        ivfpq_a.select(F.lit("ivfpq_adc").alias("method"), "*"),
-        ivfpq_r.select(F.lit("ivfpq_rerank").alias("method"), "*"),
-        brute_f.select(F.lit("brute_f").alias("method"), "*"),
-        ivfpq_f.select(F.lit("ivfpq_filtered").alias("method"), "*"),
-        brute_rc.select(F.lit("brute_r_c").alias("method"), "*"),
-        ivfpq_radc.select(F.lit("ivfpq_radius_c").alias("method"), "*"),
-        brute_a.select(F.lit("brute_a").alias("method"), "*"),
-        pq8_a.select(F.lit("pq8_a").alias("method"), "*"),
-        opq_a.select(F.lit("opq_a").alias("method"), "*"),
-        recall_rows(lsh, "lsh"),
-        recall_rows(ivf, "ivf"),
-        recall_rows(ivf_inc, "ivf_inc"),
-        recall_rows(ivf_split, "ivf_split"),
-        recall_rows(ivfpq_i, "ivfpq_inc"),
-        recall_rows(sq8, "sq8"),
-        recall_rows(pq8, "pq8"),
-        recall_rows(ivfpq, "ivfpq"),
-        recall_rows(ivfpq_p, "ivfpq_probe"),
-        recall_rows(ivfpq_a, "ivfpq_adc"),
-        recall_rows(ivfpq_r, "ivfpq_rerank"),
-        recall_rows(ivfpq_f, "ivfpq_filtered", brute_f),
-        recall_rows(lsh_c, "lsh_c", brute_c),
-        recall_rows(ivf_c, "ivf_c", brute_c),
-        recall_rows(sq8_c, "sq8_c", brute_c),
-        recall_rows(pq8_c, "pq8_c", brute_c),
-        recall_rows(ivfpq_c, "ivfpq_c", brute_c),
-        recall_rows(ivfpq_pc, "ivfpq_probe_c", brute_c),
-        recall_rows(ivfpq_ac, "ivfpq_adc_c", brute_c),
-        recall_rows(ivfpq_rc, "ivfpq_rerank_c", brute_c),
-        radius_recall_rows(ivfpq_radc, "ivfpq_radius_c", brute_rc),
-        recall_rows(pq8_a, "pq8_a", brute_a),
-        recall_rows(opq_a, "opq_a", brute_a),
+    parts = [
+        out[m.tag].select(F.lit(m.tag).alias("method"), "*")
+        for m in ANN_TABLE
+        if m.emit
     ]
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.unionByName(t)
-    return out.orderBy("method", "query_id", "rank")
+    parts += [
+        _recall_rows(out[m.tag], m.tag, out[m.base], m.kind)
+        for m in ANN_TABLE
+        if m.base
+    ]
+    return functools.reduce(DataFrame.unionByName, parts).orderBy(
+        "method", "query_id", "rank"
+    )

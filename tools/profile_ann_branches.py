@@ -1,9 +1,10 @@
-"""Per-branch wall-clock profile of sim_ann_methods (optimization r14).
+"""Per-branch wall-clock profile of sim_ann_methods.
 
 Times each method branch of the composite query in isolation with the
 noop sink, pre-building the staged artifacts first (one throwaway full
 run) so branch numbers measure the probe/scoring work, not index
-builds. Usage:
+builds. Fixtures and branches come from the query's own method table
+(similarity.ANN_FIXTURES / ANN_TABLE), keyed by output tag. Usage:
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/profile_ann_branches.py
 """
@@ -17,11 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from etly_spark.queries import REGISTRY  # noqa: E402
-from etly_spark.queries.catalog import release_cache, scoped_persist  # noqa: E402
-from etly_spark.io.tables import load_table  # noqa: E402
+from etly_spark.queries.catalog import release_cache  # noqa: E402
 from etly_spark.session import get_spark  # noqa: E402
 import etly_spark.queries.similarity as sim  # noqa: E402
 
@@ -56,98 +54,18 @@ def main() -> int:
 
     out: dict[str, float] = {"_full_cold": full_cold, "_full_warm": full_warm}
 
-    s = scoped_persist(sim._normed(load_table(spark, sf_dir, "embeddings")))
-    q_pdf = sim._query_pdf(s)
-    cb = scoped_persist(
-        sim._normed(
-            load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", sim.clustered_embedding().alias("embedding")
-            )
-        )
-    )
-    qc_pdf = sim._query_pdf(cb, sim._QC_WHERE)
-    ab = scoped_persist(
-        sim._normed(
-            load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", sim.aniso_embedding().alias("embedding")
-            )
-        )
-    )
-    qa_pdf = sim._query_pdf(ab, sim._QC_WHERE)
-
-    branches = {
-        "brute": lambda: sim.sim_topk_bruteforce(spark, sf_dir, s, q_pdf),
-        "lsh": lambda: sim.sim_lsh_ann(spark, sf_dir, s),
-        "ivf": lambda: sim.sim_ivf_ann(spark, sf_dir, q_pdf),
-        "ivf_inc": lambda: sim.sim_ivf_inc(spark, sf_dir, q_pdf=q_pdf),
-        "ivf_split": lambda: sim.sim_ivf_split(spark, sf_dir, q_pdf=q_pdf),
-        "ivfpq_inc": lambda: sim.sim_ivfpq_inc(spark, sf_dir, q_pdf=q_pdf),
-        "hardneg": lambda: sim.sim_hard_negatives(spark, sf_dir, s, q_pdf),
-        "sq8": lambda: sim.sim_sq8(spark, sf_dir, s, corpus_tag="iid"),
-        "pq8": lambda: sim.sim_pq(spark, sf_dir, s, corpus_tag="iid"),
-        "ivfpq": lambda: sim.sim_ivfpq(spark, sf_dir, s, corpus_tag="iid"),
-        "ivfpq_probe": lambda: sim.sim_ivfpq_probe(
-            spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-        ),
-        "ivfpq_adc": lambda: sim.sim_ivfpq_adc(
-            spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-        ),
-        "ivfpq_rerank": lambda: sim.sim_ivfpq_rerank(
-            spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-        ),
-        "brute_f": lambda: sim.sim_topk_brute_filtered(spark, sf_dir, s, q_pdf),
-        "ivfpq_filtered": lambda: sim.sim_ivfpq_filtered(
-            spark, sf_dir, s, corpus_tag="iid", q_pdf=q_pdf
-        ),
-        "brute_c": lambda: sim.sim_topk_bruteforce(spark, sf_dir, cb, qc_pdf),
-        "lsh_c": lambda: sim.sim_lsh_ann(spark, sf_dir, cb, qwhere=sim._QC_WHERE),
-        "ivf_c": lambda: sim.sim_ivf_ann(
-            spark,
-            sf_dir,
-            qc_pdf,
-            assign=sim.ivf_assignments_clustered(spark, sf_dir),
-            qwhere=sim._QC_WHERE,
-        ),
-        "sq8_c": lambda: sim.sim_sq8(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered"
-        ),
-        "pq8_c": lambda: sim.sim_pq(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered"
-        ),
-        "ivfpq_c": lambda: sim.sim_ivfpq(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered"
-        ),
-        "ivfpq_probe_c": lambda: sim.sim_ivfpq_probe(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered", q_pdf=qc_pdf
-        ),
-        "ivfpq_adc_c": lambda: sim.sim_ivfpq_adc(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered", q_pdf=qc_pdf
-        ),
-        "ivfpq_rerank_c": lambda: sim.sim_ivfpq_rerank(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered", q_pdf=qc_pdf
-        ),
-        "brute_a": lambda: sim.sim_topk_bruteforce(spark, sf_dir, ab, qa_pdf),
-        "pq8_a": lambda: sim.sim_pq(
-            spark, sf_dir, ab, qwhere=sim._QC_WHERE, corpus_tag="aniso"
-        ),
-        "opq_a": lambda: sim.sim_opq(
-            spark, sf_dir, ab, qwhere=sim._QC_WHERE, corpus_tag="aniso"
-        ),
-        "brute_r_c": lambda: sim.sim_brute_radius(spark, sf_dir, cb, qc_pdf),
-        "ivfpq_radius_c": lambda: sim.sim_ivfpq_radius(
-            spark, sf_dir, cb, qwhere=sim._QC_WHERE, corpus_tag="clustered", q_pdf=qc_pdf
-        ),
-    }
-    for name, build in branches.items():
+    fixtures = {tag: sim.ann_fixture(spark, sf_dir, tag) for tag in sim.ANN_FIXTURES}
+    for m in sim.ANN_TABLE:
         secs = []
         for _ in range(2):
             try:
-                secs.append(t(spark, f"branch:{name}", build()))
+                df = m.build(spark, sf_dir, fixtures[m.fixture])
+                secs.append(t(spark, f"branch:{m.tag}", df))
             except Exception as exc:
-                print(f"# FAIL {name}: {exc}", file=sys.stderr)
+                print(f"# FAIL {m.tag}: {exc}", file=sys.stderr)
                 secs.append(-1.0)
                 break
-        out[name] = min(secs)
+        out[m.tag] = min(secs)
 
     total = round(sum(v for k, v in out.items() if not k.startswith("_") and v > 0), 3)
     out["_branch_sum"] = total

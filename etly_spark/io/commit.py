@@ -12,9 +12,10 @@ target's own directory:
 - the same directory keeps the rename on one filesystem, so it is
   atomic.
 
-Replaced content goes aside as ``_old-<uuid>`` for the duration of the
-swap. Tmp files carry no ``.parquet`` suffix, so flat-dir globs skip
-them too. Object-store targets commit through ``io/fs.move`` instead.
+Replaced or removed content goes aside as ``_old-<uuid>`` before it is
+deleted, so no reader sees a half-deleted directory. Tmp files carry no
+``.parquet`` suffix, so flat-dir globs skip them too. Object-store
+targets commit through ``io/fs.move`` instead.
 """
 
 from __future__ import annotations
@@ -93,6 +94,17 @@ def replace_dir(final: str, write: Callable[[str], object]) -> str:
         if aside is not None:
             shutil.rmtree(aside, ignore_errors=True)
     return final
+
+
+def remove_dir(path: str) -> None:
+    """Retract a directory: it leaves its name with one rename, then is
+    deleted, so a crash mid-delete leaves only ``_old-*`` garbage."""
+    aside = _sibling(path, "_old")
+    try:
+        os.rename(path, aside)
+    except FileNotFoundError:
+        return
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 def write_file(path: str, write: Callable[[str], object]) -> str:

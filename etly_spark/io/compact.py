@@ -1,123 +1,136 @@
 """Log-structured compaction for append-per-run hive-partitioned dirs.
 
 Shared by the meta ledger sidecar (one ``run_ts=…`` partition per
-window, pipeline.py), the streaming signature index (one ``epoch=…``
-partition per micro-batch, streaming/dedup.py) and the incremental ANN
-postings index (queries/similarity.compact_ivf_postings): all append
-one small partition per unit of work — the write pattern that is
-O(new) per run but accumulates directories forever. When loose
-partitions exceed ``threshold`` they fold into a numbered
+window, pipeline.py), the streaming indices (one ``epoch=…`` partition
+per micro-batch, streaming/dedup.py) and the incremental ANN and BM25
+indices (queries/similarity.py, operators/bm25.py): all append one
+small partition per unit of work — the write pattern that is O(new)
+per run but accumulates directories forever. When loose partitions
+exceed ``threshold`` they fold into a numbered
 ``<key>=_compacted-NNNNNN`` segment that is NEVER rewritten (tiered),
 so amortized compaction cost per run stays O(that run's rows) and
 directory count stays bounded at any run count.
 
-Crash safety: ``commit_segment`` publishes the segment through
-``io/commit.publish_dir`` together with a ``_folded.json`` manifest
-naming every loose dir it absorbed, BEFORE the loose dirs are removed.
-A crash in the window between the commit and the removals leaves
-DUPLICATE rows (the loose dirs' data also lives in the segment).
-Consumers differ on whether that is tolerable:
-
-- the meta skip-set and the dedup band index are presence-based /
-  distinct-pair shaped — duplicates are harmless there;
-- the ANN probe is NOT duplicate-tolerant (its row_number top-k would
-  rank the same neighbor twice), so queries/similarity._probe_ivf_index
-  dedupes its candidate set defensively.
-
-Every later ``compact_partitions`` call heals the window first: it
-reads each committed segment's manifest and removes any loose dir the
-manifest says is already folded (idempotent — removing them again is
-the exact action the crashed run failed to finish), so duplicates
-never reach a second segment.
+Visibility rule: ``commit_segment`` publishes a segment together with
+a ``_folded.json`` manifest recording the content marker of every dir
+it absorbed. A ``<key>=…`` dir is LIVE unless a committed manifest
+covers it with the marker its parquet parts still carry
+(``live_partitions``). Every reader and every fold-candidate picker
+lists through that rule (``read_live`` for Spark), so the rows of a
+covered dir are seen once, inside its segment, from the instant the
+segment commits. Removing covered dirs is storage cleanup that
+``commit_segment`` and ``compact_partitions`` do; no reader waits for
+it.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from collections.abc import Callable
 
-from etly_spark.io.commit import publish_dir
+from etly_spark.io.commit import publish_dir, remove_dir
 
 _MANIFEST = "_folded.json"
 
 
-def partition_marker(pdir: str) -> list[list]:
-    """Content marker for one partition dir: sorted [name, size] of its
-    parquet parts. Recorded in the ``_folded.json`` manifest at fold
-    time so recovery removes a loose dir only when its CONTENT is what
-    the segment absorbed: a name-only manifest would
-    silently delete a FRESH ``epoch=N`` dir whose id was reused after a
-    purge (streaming checkpoint reset, refolding the same shard index)
-    — data loss, not duplicates."""
-    return sorted(
-        [f, os.path.getsize(os.path.join(pdir, f))]
-        for f in os.listdir(pdir)
-        if f.endswith(".parquet")
+def parquet_parts(pdir: str) -> list[str]:
+    """Sorted names of the parquet parts in one partition dir."""
+    return sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+
+
+def dir_bytes(*roots: str) -> int:
+    """Total size of every file under ``roots`` (absent roots count 0)."""
+    return sum(
+        os.path.getsize(os.path.join(dp, f))
+        for root in roots
+        for dp, _dd, ff in os.walk(root)
+        for f in ff
     )
 
 
-def recover_covered_partitions(root: str, key: str) -> list[str]:
-    """Finish any crashed compaction under ``root``: remove loose
-    ``<key>=value`` dirs that a committed segment's ``_folded.json``
-    manifest records as already folded. Returns the removed dir names.
-    Safe to call any time — a dir is removed only when its data
-    provably lives inside a committed segment: dict-form manifests
-    carry a per-partition content marker and a loose dir whose current
-    parquet parts differ from the marker is LEFT ALONE (it was
-    recreated after the fold — removing it would lose data); legacy
-    list-form manifests remove by name."""
+def partition_marker(pdir: str) -> list[list]:
+    """Content marker for one partition dir: sorted [name, size] of its
+    parquet parts. A name-only manifest would hide (and remove) a FRESH
+    ``epoch=N`` dir whose id was reused after a fold (streaming
+    checkpoint reset, refolding the same shard index) — data loss, not
+    duplicates."""
+    return [[f, os.path.getsize(os.path.join(pdir, f))] for f in parquet_parts(pdir)]
+
+
+def _partitions(root: str, key: str) -> list[str]:
     if not os.path.isdir(root):
         return []
-    prefix = f"{key}="
-    covered: dict[str, object] = {}
-    for d in os.listdir(root):
-        # any special (underscore-valued) segment may carry a manifest:
-        # _compacted-* (this module), _codes-* (the ANN encode rung)
-        if not d.startswith(f"{prefix}_"):
-            continue
-        mf = os.path.join(root, d, _MANIFEST)
-        if os.path.isfile(mf):
+    return sorted(d for d in os.listdir(root) if d.startswith(f"{key}="))
+
+
+def _covered(root: str, key: str, names: list[str]) -> dict[str, list]:
+    """{dir name: content marker} over every committed manifest. Any
+    special (underscore-valued) segment may carry one — ``_compacted-*``
+    here, ``_codes-*`` from the ANN encode rung — and a manifest may
+    cover segments too (a purge supersedes earlier ones; numbering is
+    max+1, so a covered segment name never comes back)."""
+    covered: dict[str, list] = {}
+    for d in names:
+        if d.startswith(f"{key}=_"):
             try:
-                with open(mf) as f:
-                    m = json.load(f)
-            except (OSError, ValueError):
-                continue  # unreadable manifest: leave the loose dirs be
-            if isinstance(m, dict):
-                covered.update(m)
-            else:  # legacy list manifest: name-only coverage
-                covered.update({n: None for n in m})
-    removed = []
-    for d in sorted(covered):
-        p = os.path.join(root, d)
-        # a manifest may cover SEGMENTS too (the tombstone-purge rewrite
-        # supersedes earlier _compacted-* dirs); segment numbering is
-        # max+1 so a covered name is never legitimately recreated
-        if not d.startswith(prefix) or not os.path.isdir(p):
-            continue
-        marker = covered[d]
-        if marker is not None and partition_marker(p) != marker:
-            continue  # same name, DIFFERENT content: a reused id, keep it
-        shutil.rmtree(p, ignore_errors=True)
-        removed.append(d)
+                with open(os.path.join(root, d, _MANIFEST)) as f:
+                    covered.update(json.load(f))
+            except FileNotFoundError:
+                continue
+    return covered
+
+
+def folded_partitions(root: str, key: str) -> set[str]:
+    """Names whose rows a committed segment holds, whether or not the
+    dir is still on disk."""
+    return set(_covered(root, key, _partitions(root, key)))
+
+
+def live_partitions(root: str, key: str) -> list[str]:
+    """Sorted names of the ``<key>=value`` dirs of ``root`` that no
+    committed manifest covers with their current content marker."""
+    names = _partitions(root, key)
+    covered = _covered(root, key, names)
+    return [
+        d
+        for d in names
+        if d not in covered or partition_marker(os.path.join(root, d)) != covered[d]
+    ]
+
+
+def read_live(spark, root: str, key: str, merge_schema: bool = False):
+    """Spark read of ``root``'s live partitions. ``basePath`` keeps the
+    partition column, as a read of ``root`` itself would."""
+    reader = spark.read.option("basePath", root)
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*(os.path.join(root, d) for d in live_partitions(root, key)))
+
+
+def recover_covered_partitions(root: str, key: str) -> list[str]:
+    """Remove every ``<key>=value`` dir of ``root`` that is not live (a
+    committed segment holds its rows). Returns the removed names."""
+    live = set(live_partitions(root, key))
+    removed = [d for d in _partitions(root, key) if d not in live]
+    for d in removed:
+        remove_dir(os.path.join(root, d))
     return removed
 
 
 def next_segment(root: str, key: str, kind: str = "_compacted") -> str:
     """Name of the next ``<key>=<kind>-NNNNNN`` segment: max existing
     number + 1 — NEVER count+1, which would recycle a name after a
-    purge deletes earlier segments and make it collide with a recovery
-    manifest that still covers the old name."""
+    purge deletes earlier segments and make it collide with a manifest
+    that still covers the old name."""
     hi = 0
     pre = f"{key}={kind}-"
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d.startswith(pre):
-                try:
-                    hi = max(hi, int(d[len(pre):]))
-                except ValueError:
-                    continue
+    for d in _partitions(root, key):
+        if d.startswith(pre):
+            try:
+                hi = max(hi, int(d[len(pre):]))
+            except ValueError:
+                continue
     return os.path.join(root, f"{pre}{hi + 1:06d}")
 
 
@@ -131,11 +144,15 @@ def commit_segment(
     """Publish a never-rewritten segment under the next
     ``<key>=<kind>-NNNNNN`` name: ``write(tmp)`` fills it, the
     ``_folded.json`` manifest records the content marker of every
-    ``covered`` dir, and the covered dirs are removed only after the
-    commit. A segment number taken by a concurrent committer with a
-    different manifest is retried under the next number, so covered
-    dirs are removed only when a committed manifest names them.
-    Returns the segment path."""
+    ``covered`` dir, and the covered dirs are removed after the commit.
+    Dirs an earlier segment already covers are removed first, so
+    removing a covered segment never uncovers anything.
+
+    A rival committer that took the number first: an identical manifest
+    is our commit; a disjoint one means we take the next number; an
+    overlapping one raises RuntimeError and removes nothing (its
+    segment already holds some of our rows). Returns the segment path."""
+    recover_covered_partitions(root, key)
     markers = {d: partition_marker(os.path.join(root, d)) for d in covered}
 
     def _write(tmp: str) -> None:
@@ -146,41 +163,49 @@ def commit_segment(
     while True:
         seg = publish_dir(next_segment(root, key, kind), _write)
         with open(os.path.join(seg, _MANIFEST)) as f:
-            if json.load(f) == markers:
-                break
+            theirs = json.load(f)
+        if theirs == markers:
+            break
+        if theirs.keys() & markers.keys():
+            raise RuntimeError(f"{seg}: overlapping segment committed concurrently")
     for d in covered:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        remove_dir(os.path.join(root, d))
     return seg
+
+
+def supersede_partitions(
+    root: str, key: str, write: Callable[[str, int], object]
+) -> str:
+    """Commit one segment covering every live partition of ``root``
+    (the tombstone purge's rewrite). ``write(tmp, n)`` fills it from
+    those ``n`` partitions' rows."""
+    covered = live_partitions(root, key)
+    return commit_segment(root, key, lambda tmp: write(tmp, len(covered)), covered)
 
 
 def compact_partitions(
     root: str, key: str, threshold: int, sort_by: list[str] | None = None
 ) -> None:
     """Fold loose ``<key>=value`` partitions under ``root`` into one
-    compacted segment once their count exceeds ``threshold``. Always
-    runs crash recovery first (see module docstring). ``sort_by``
-    re-sorts the concatenated segment (the bm25 postings fold keeps
-    its term order, so row-group stats still prune a term probe)."""
+    compacted segment once their count exceeds ``threshold``; covered
+    dirs are removed on every call. ``sort_by`` re-sorts the
+    concatenated segment (the bm25 postings fold keeps its term order,
+    so row-group stats still prune a term probe)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if not os.path.isdir(root):
-        return
     recover_covered_partitions(root, key)
-    prefix = f"{key}="
-    names = [d for d in os.listdir(root) if d.startswith(prefix)]
     # underscore partition VALUES are reserved for special segments
     # (_compacted-* here; the ANN index's _split-* reassignment
     # segments, whose wider schema must never be concat-folded with
     # gen-0 epochs) — only plain loose partitions fold
-    loose = sorted(d for d in names if not d.startswith(f"{prefix}_"))
+    loose = [d for d in live_partitions(root, key) if not d.startswith(f"{key}=_")]
     if len(loose) <= threshold:
         return
     tables = [
         pq.read_table(os.path.join(root, d, f))
         for d in loose
-        for f in sorted(os.listdir(os.path.join(root, d)))
-        if f.endswith(".parquet")
+        for f in parquet_parts(os.path.join(root, d))
     ]
     if not tables:
         return

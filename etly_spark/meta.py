@@ -190,16 +190,24 @@ class ProcessedIndex:
         import pyarrow as pa
         import pyarrow.dataset as ds
 
+        from etly_spark.io.compact import live_partitions, parquet_parts
+
         # one retry: a concurrent compaction (another transfer sharing
-        # this meta URL) may delete loose partition dirs between our
-        # discovery and the scan — re-discovering then sees the
-        # committed segment instead (duplicates across the race are
-        # harmless: membership is presence-based). A second failure is
-        # a broken ledger and raises: an empty answer would re-transfer
-        # every file the bounded JSON no longer lists.
+        # this meta URL) may remove partition dirs between our listing
+        # and the scan — re-listing then sees the committed segment
+        # instead. A second failure is a broken ledger and raises: an
+        # empty answer would re-transfer every file the bounded JSON no
+        # longer lists.
         for attempt in (0, 1):
             try:
-                data = ds.dataset(self.dir, format="parquet", partitioning="hive")
+                files = [
+                    os.path.join(self.dir, d, f)
+                    for d in live_partitions(self.dir, "run_ts")
+                    for f in parquet_parts(os.path.join(self.dir, d))
+                ]
+                if not files:
+                    return set()
+                data = ds.dataset(files, format="parquet")
                 if "source" not in data.schema.names:
                     return set()  # pre-r6 stats-only sidecar: no skip info
                 table = data.to_table(

@@ -34,10 +34,7 @@ unchanged):
   md5 of the batch's sorted source-file set — O(batch), earlier
   epochs never read or rewritten, and a crashed-then-retried batch
   OVERWRITES its own partition (the rollup per-file-epoch idempotence
-  rule). A retry that races the encode rung can duplicate rows into a
-  fresh raw epoch; those are bit-exact copies healed by the probe's
-  candidate dedup — the same crash window the encode manifest already
-  documents;
+  rule) or, once a segment holds that partition's rows, folds no adds;
 - deletes fold as the batch's tombstone partition (delete-final);
 - maintenance runs inline, config-owned: ``EncodeEvery`` quantizes the
   raw write buffer into a codes segment once that many loose raw
@@ -60,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etly_spark.io.commit import publish_dir
+from etly_spark.io.compact import folded_partitions, live_partitions
 
 
 def fold_window_into_index(
@@ -116,7 +114,7 @@ def fold_window_into_index(
         shard = _normed(adds.select("vec_id", "embedding")).persist()
         try:
             n = shard.count()
-            if n:
+            if n and f"epoch={epoch_key}" not in folded_partitions(post, "epoch"):
                 if not os.path.isdir(qdir):
                     # freeze on the first window, sized for the
                     # anticipated index (the ivfpq_inc_index rule)
@@ -161,11 +159,7 @@ def _maintain(spark: SparkSession, index_dir: str, opts: dict) -> None:
         return
     encode_every = int(opts.get("EncodeEvery", 0) or 0)
     if encode_every:
-        raw = [
-            d
-            for d in os.listdir(post)
-            if d.startswith("epoch=") and not d.startswith("epoch=_")
-        ]
+        raw = [d for d in live_partitions(post, "epoch") if not d.startswith("epoch=_")]
         if len(raw) >= encode_every:
             encode_ivfpq_postings(spark, index_dir)
     compact_at = int(opts.get("CompactThreshold", 0) or 0)

@@ -37,6 +37,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etly_spark.io.commit import replace_dir
+from etly_spark.io.compact import (
+    compact_partitions,
+    dir_bytes,
+    read_live,
+    supersede_partitions,
+)
 
 
 def _commit(df: DataFrame, dest: str, sort_cols: list[str] | None = None) -> None:
@@ -101,15 +107,15 @@ def probe_bm25_index(
     build-minus-deletes bit-for-bit at 6 dp — BM25's statistics are
     linear, so the fold IS the batch result (the gated 'bm25_inc'
     variant of text_top_terms proves it cross-engine)."""
-    posts = spark.read.parquet(os.path.join(index_dir, "postings"))
-    dl = spark.read.parquet(os.path.join(index_dir, "doclen"))
-    stats = spark.read.parquet(os.path.join(index_dir, "stats"))
+    posts = read_live(spark, os.path.join(index_dir, "postings"), "epoch")
+    dl = read_live(spark, os.path.join(index_dir, "doclen"), "epoch")
+    stats = read_live(spark, os.path.join(index_dir, "stats"), "epoch")
     tomb_dir = os.path.join(index_dir, "tombstones")
     tot = stats.agg(
         F.sum("n_docs").alias("_n"), F.sum("sum_dl").alias("_s")
     )
     if os.path.isdir(tomb_dir):
-        doomed = spark.read.parquet(tomb_dir).select("doc_id").distinct()
+        doomed = read_live(spark, tomb_dir, "epoch").select("doc_id").distinct()
         dead = dl.join(F.broadcast(doomed), "doc_id").agg(
             F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("_dn"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("_ds"),
@@ -180,10 +186,7 @@ def compact_bm25_index(index_dir: str, threshold: int = 16) -> None:
     rung, payload-agnostic): postings re-sort by term at the merge so
     the compacted segment keeps the row-group pruning the per-epoch
     sort bought; doclen/stats fold as plain concats (their consumers
-    aggregate, order-free). Offline contract: no active writer.
-    Crash-safe via the shared manifest machinery (io/compact)."""
-    from etly_spark.io.compact import compact_partitions
-
+    aggregate, order-free). Offline contract: no active writer."""
     compact_partitions(
         os.path.join(index_dir, "postings"), "epoch", threshold,
         sort_by=["term"],
@@ -204,59 +207,45 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
     three-table swap cannot be atomic, so the crash rule is
     RE-RUN-TO-HEAL: each step is individually idempotent (re-purging
     already-purged postings anti-joins nothing; stats always recompute
-    from the current doclen), so a half-finished purge is healed by
-    calling purge again — the compact_partitions
-    recover-on-next-call contract. A probe in a crash window
-    over-counts avgdl by at most the dead fraction, transiently.
+    from the current doclen). A probe between the swaps over-counts
+    avgdl by at most the dead fraction, transiently.
 
     Returns {"live_docs", "purged_docs", "bytes_before", "bytes_after"}.
     """
     import shutil
 
-    from etly_spark.io.compact import commit_segment, recover_covered_partitions
-
     post = os.path.join(index_dir, "postings")
     dlen = os.path.join(index_dir, "doclen")
     stat = os.path.join(index_dir, "stats")
     tomb = os.path.join(index_dir, "tombstones")
-    for root in (post, dlen, stat):
-        recover_covered_partitions(root, "epoch")
-
-    def _bytes(root: str) -> int:
-        if not os.path.isdir(root):
-            return 0
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dd, ff in os.walk(root)
-            for f in ff
-        )
-
-    bytes_before = sum(_bytes(r) for r in (post, dlen, stat, tomb))
+    bytes_before = dir_bytes(post, dlen, stat, tomb)
     doomed = (
-        spark.read.parquet(tomb).select("doc_id").distinct()
+        read_live(spark, tomb, "epoch").select("doc_id").distinct()
         if os.path.isdir(tomb)
         else None
     )
-    n_docs_before = spark.read.parquet(dlen).count()
+    n_docs_before = read_live(spark, dlen, "epoch").count()
 
     def _swap(root: str, live_df, sort_cols=None) -> None:
-        superseded = [x for x in os.listdir(root) if x.startswith("epoch=")]
         # consolidate to ~the superseded partition count: the purge IS
         # a compaction — spraying default-parallelism part files would
         # swap dead rows for per-file overhead
-        w = live_df.coalesce(max(1, len(superseded)))
-        if sort_cols:
-            w = w.sortWithinPartitions(*sort_cols)
-        commit_segment(root, "epoch", lambda tmp: w.write.parquet(tmp), superseded)
+        def write(tmp: str, n: int) -> None:
+            w = live_df.coalesce(max(1, n))
+            if sort_cols:
+                w = w.sortWithinPartitions(*sort_cols)
+            w.write.parquet(tmp)
 
-    posts = spark.read.parquet(post)
-    dls = spark.read.parquet(dlen)
+        supersede_partitions(root, "epoch", write)
+
+    posts = read_live(spark, post, "epoch")
+    dls = read_live(spark, dlen, "epoch")
     if doomed is not None:
         posts = posts.join(F.broadcast(doomed), "doc_id", "left_anti")
         dls = dls.join(F.broadcast(doomed), "doc_id", "left_anti")
     _swap(post, posts, sort_cols=["term"])
     _swap(dlen, dls)
-    live_dl = spark.read.parquet(dlen)
+    live_dl = read_live(spark, dlen, "epoch")
     _swap(
         stat,
         live_dl.agg(
@@ -265,10 +254,10 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
     )
     if os.path.isdir(tomb):
         shutil.rmtree(tomb, ignore_errors=True)
-    n_docs_after = spark.read.parquet(dlen).count()
+    n_docs_after = read_live(spark, dlen, "epoch").count()
     return {
         "live_docs": n_docs_after,
         "purged_docs": n_docs_before - n_docs_after,
         "bytes_before": bytes_before,
-        "bytes_after": sum(_bytes(r) for r in (post, dlen, stat)),
+        "bytes_after": dir_bytes(post, dlen, stat),
     }

@@ -32,6 +32,15 @@ from pyspark.sql import functions as F
 
 from etly_spark.functions import vector as V
 from etly_spark.io.commit import publish_dir, replace_dir, write_file
+from etly_spark.io.compact import (
+    commit_segment,
+    compact_partitions,
+    dir_bytes,
+    live_partitions,
+    parquet_parts,
+    read_live,
+    supersede_partitions,
+)
 from etly_spark.io.staging import run_scratch_dir, stage_table
 from etly_spark.io.tables import load_table
 from etly_spark.queries.catalog import (
@@ -646,28 +655,24 @@ SPLIT_TRIGGER_X = 4.0
 _DRIFT_SIDECAR = "drift_stats.json"
 
 
-def _leaf_counts_pyarrow(index_dir: str, root: str) -> dict:
-    """Per-live-leaf postings counts by reading ONLY the leaf-id column
-    of each parquet part (pyarrow — no SparkSession, so the offline
-    compaction rung can emit drift stats too). Handles both payloads
-    (cent_id = embedding index, cell = codes index) and mixed schema
-    generations."""
+def _leaf_counts_pyarrow(index_dir: str, epoch=None) -> dict:
+    """Per-live-leaf postings counts of the live postings (or of one
+    ``epoch``) by reading ONLY the leaf-id column of each parquet part
+    (pyarrow — no SparkSession, so the offline compaction rung can
+    emit drift stats too). Handles both payloads (cent_id = embedding
+    index, cell = codes index) and mixed schema generations."""
+    import collections
+
     import pyarrow.parquet as pq
 
-    counts: dict[int, int] = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(dirpath, fn)
-            schema = pq.read_schema(fp)
-            key = "cent_id" if "cent_id" in schema.names else "cell"
-            col = pq.read_table(fp, columns=[key])[key]
-            for chunk in col.chunks if hasattr(col, "chunks") else [col]:
-                import collections as _c
-
-                for v, n in _c.Counter(chunk.to_pylist()).items():
-                    counts[int(v)] = counts.get(int(v), 0) + n
+    post = os.path.join(index_dir, "postings")
+    dirs = live_partitions(post, "epoch") if epoch is None else [f"epoch={epoch}"]
+    counts: collections.Counter = collections.Counter()
+    for d in dirs:
+        for fn in parquet_parts(os.path.join(post, d)):
+            fp = os.path.join(post, d, fn)
+            key = "cent_id" if "cent_id" in pq.read_schema(fp).names else "cell"
+            counts.update(pq.read_table(fp, columns=[key])[key].to_pylist())
     split_cells = set(_splits_state(os.path.join(index_dir, "quantizer_splits"))[0])
     return {c: n for c, n in counts.items() if c not in split_cells}
 
@@ -681,7 +686,7 @@ def ivf_drift_stats(index_dir: str, counts: dict | None = None) -> dict:
     import pyarrow.parquet as _pq  # noqa: F401 — parquet presence check
 
     if counts is None:
-        counts = _leaf_counts_pyarrow(index_dir, os.path.join(index_dir, "postings"))
+        counts = _leaf_counts_pyarrow(index_dir)
     qdir = os.path.join(index_dir, "quantizer")
     nlist = 0
     if os.path.isdir(qdir):
@@ -725,7 +730,6 @@ def record_fold_drift(index_dir: str, epoch) -> dict:
     recount via ivf_drift_stats."""
     import json as _json
 
-    post = os.path.join(index_dir, "postings")
     sc_path = os.path.join(index_dir, _DRIFT_SIDECAR)
     state = {"epochs": {}, "alert": None}
     if os.path.isfile(sc_path):
@@ -737,15 +741,15 @@ def record_fold_drift(index_dir: str, epoch) -> dict:
     else:
         # sidecar lost or first fold: one full recount baselines the
         # counts BEFORE this epoch is added (keyed "_base")
-        base = _leaf_counts_pyarrow(index_dir, post)
-        ep_now = _leaf_counts_pyarrow(index_dir, os.path.join(post, f"epoch={epoch}"))
+        base = _leaf_counts_pyarrow(index_dir)
+        ep_now = _leaf_counts_pyarrow(index_dir, epoch)
         for c, n in ep_now.items():
             if c in base:
                 base[c] -= n
                 if base[c] <= 0:
                     del base[c]
         state["epochs"]["_base"] = {str(c): n for c, n in base.items()}
-    ep_counts = _leaf_counts_pyarrow(index_dir, os.path.join(post, f"epoch={epoch}"))
+    ep_counts = _leaf_counts_pyarrow(index_dir, epoch)
     state["epochs"][str(epoch)] = {str(c): n for c, n in ep_counts.items()}
     cum: dict[int, int] = {}
     for _eid, cc in state["epochs"].items():
@@ -773,22 +777,14 @@ def compact_ivf_postings(index_dir: str, threshold: int = 64) -> None:
     never-rewritten compacted segments once their count exceeds
     ``threshold`` (io/compact.py — the signature-index tiering).
     Contract: run with NO active writer, exactly like
-    compact_signature_index. Crash window (r12, ADVICE): a crash
-    between the segment rename and the loose-dir removal duplicates
-    postings rows — unlike the presence-based compaction consumers,
-    the probe's top-k does NOT tolerate duplicates, so (a) every later
-    compact run heals the window first via the segment's _folded.json
-    manifest (io/compact.recover_covered_partitions) and (b)
-    _probe_ivf_index dedupes its candidate set defensively in between.
-    Tombstoned rows are NOT purged here (purging needs the tombstone
-    set to be final; the anti-join stays correct either way) — that is
-    ``purge_ivf_tombstones``, a separate offline rung.
+    compact_signature_index. Tombstoned rows are NOT purged here
+    (purging needs the tombstone set to be final; the anti-join stays
+    correct either way) — that is ``purge_ivf_tombstones``, a separate
+    offline rung.
 
     Returns the index's drift stats (r13 — ivf_drift_stats: the
     compaction rung already walks the postings, so the operator gets
     the split-trigger metric for free from every maintenance pass)."""
-    from etly_spark.io.compact import compact_partitions
-
     compact_partitions(os.path.join(index_dir, "postings"), "epoch", threshold)
     compact_partitions(os.path.join(index_dir, "tombstones"), "epoch", threshold)
     return ivf_drift_stats(index_dir)
@@ -806,32 +802,16 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
 
     Contract: a DRAINED stream (no active writer), like
     compact_ivf_postings — the tombstone set must be final, because
-    purged ids are forgotten. Crash safety is the compaction story: the
-    segment commits with one rename carrying a _folded.json manifest of
-    everything it supersedes (including earlier _compacted-* segments —
-    segment numbering is max+1 so covered names never come back), the
-    next compact/purge/recovery call heals a half-finished removal, and
-    _probe_ivf_index tolerates the in-between duplicates via its
-    candidate dedup. A crash AFTER the postings swap but BEFORE the
-    tombstone removal is benign: re-applying final tombstones to
-    already-purged postings anti-joins nothing.
+    purged ids are forgotten. The new segment covers every live
+    postings partition (io/compact.supersede_partitions); a crash
+    after it but before the tombstone removal is benign: re-applying
+    final tombstones to already-purged postings anti-joins nothing.
 
     Returns {"live_rows", "purged_rows", "bytes_before", "bytes_after"}.
     """
-    from etly_spark.io.compact import commit_segment, recover_covered_partitions
-
     post = os.path.join(index_dir, "postings")
     tomb = os.path.join(index_dir, "tombstones")
-    recover_covered_partitions(post, "epoch")
-
-    def _bytes(root: str) -> int:
-        total = 0
-        for dirpath, _dirs, files in os.walk(root):
-            total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-        return total
-
-    bytes_before = _bytes(post) + (_bytes(tomb) if os.path.isdir(tomb) else 0)
-    superseded = [d for d in os.listdir(post) if d.startswith("epoch=")]
+    bytes_before = dir_bytes(post, tomb)
     # split-aware (r12) and PAYLOAD-AGNOSTIC (r13): the mergeSchema
     # read preserves the split segments' parent column (a plain read
     # would sample a gen-0 file's schema and silently drop it,
@@ -840,7 +820,7 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
     # index (ivf_inc: cent_id) and the codes-payload index (ivfpq_inc:
     # cell, 2m-byte binary codes); gen-0 rows a split superseded are
     # dead weight the purge compacts away along with the tombstoned.
-    live = spark.read.option("mergeSchema", "true").parquet(post)
+    live = read_live(spark, post, "epoch", merge_schema=True)
     n_before = live.count()
     split_parents, _tok = _splits_state(os.path.join(index_dir, "quantizer_splits"))
     if split_parents:
@@ -852,25 +832,25 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
         )
     if os.path.isdir(tomb):
         live = live.join(
-            F.broadcast(spark.read.parquet(tomb).select("vec_id")),
+            F.broadcast(read_live(spark, tomb, "epoch").select("vec_id")),
             "vec_id",
             "left_anti",
         )
     # one distributed write, cluster parallelism preserved (an EMPTY
     # live set still writes a schema-carrying part file — SPARK-23271)
-    commit_segment(post, "epoch", lambda tmp: live.write.parquet(tmp), superseded)
+    supersede_partitions(post, "epoch", lambda tmp, _n: live.write.parquet(tmp))
     if os.path.isdir(tomb):
         shutil.rmtree(tomb, ignore_errors=True)
     try:  # purged rows invalidate the drift sidecar's counts
         os.remove(os.path.join(index_dir, _DRIFT_SIDECAR))
     except FileNotFoundError:
         pass
-    n_after = spark.read.parquet(post).count()
+    n_after = read_live(spark, post, "epoch").count()
     return {
         "live_rows": n_after,
         "purged_rows": n_before - n_after,
         "bytes_before": bytes_before,
-        "bytes_after": _bytes(post),
+        "bytes_after": dir_bytes(post),
     }
 
 
@@ -883,7 +863,7 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
 # postings so a purge rewrite doubles the embedding bytes on disk
 # (caught by test_purge_ivf_tombstones' bytes assertion).
 def _read_postings(spark: SparkSession, post: str) -> DataFrame:
-    df = spark.read.option("mergeSchema", "true").parquet(post)
+    df = read_live(spark, post, "epoch", merge_schema=True)
     if "parent" not in df.columns:
         df = df.withColumn("parent", F.lit(None).cast("long"))
     return df.select("vec_id", "embedding", "nrm", "cent_id", "parent")
@@ -912,14 +892,13 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
     - the leaf's existing postings are re-assigned to its sub-cells by
       one bounded pass over THAT LEAF ONLY and written as a new
       never-rewritten segment (``epoch=_split-<batch>`` — underscore
-      partitions are invisible to compaction's loose-dir fold);
+      partitions are never concat-folded by compaction);
     - the sub-centroids append to ``quantizer_splits/<batch>.parquet``
       rows (parent=node cell, cent_id=child, ce, cn) — append-only;
       gen-0 quantizer untouched, every existing epoch stays valid;
     - commit order is segment THEN splits-entry: the segment is inert
       until the splits table names its node, so a crash in between
-      leaves an invisible segment an idempotent re-run reuses — and
-      the probes' candidate dedup covers the overlap window;
+      leaves an inert segment an idempotent re-run reuses;
     - later arrivals route through the split CHAIN at fold time
       (fold_ivf_epoch / fold_ivfpq_epoch) — fold stays
       O(shard * chain depth).
@@ -941,7 +920,7 @@ def split_hot_cells(spark: SparkSession, index_dir: str, cap: int | None = None)
     post = os.path.join(index_dir, "postings")
     splits_dir = os.path.join(index_dir, "quantizer_splits")
     already = _splits_state(splits_dir)[0]
-    posts = spark.read.option("mergeSchema", "true").parquet(post)
+    posts = read_live(spark, post, "epoch", merge_schema=True)
     codes_mode = "codes" in posts.columns
     if codes_mode and "embedding" in posts.columns:
         raise ValueError(
@@ -1262,7 +1241,7 @@ def _probe_ivf_index(
         # the deletion side-table is result-density-sized; broadcast it
         # so the anti-join never shuffles the postings scan
         assign = assign.join(
-            F.broadcast(spark.read.parquet(tomb_dir).select("vec_id")),
+            F.broadcast(read_live(spark, tomb_dir, "epoch").select("vec_id")),
             "vec_id",
             "left_anti",
         )
@@ -1310,15 +1289,6 @@ def _probe_ivf_index(
         .join(assign, cond)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), _cos_pair().alias("cos_sim"))
     )
-    # defensive dedup (r12, ADVICE): a compaction crash between the
-    # segment rename and the loose-dir removal can leave a postings row
-    # duplicated until the next compact run's manifest recovery removes
-    # the covered loose dir (io/compact.py). _topk's row_number would
-    # then rank the same neighbor twice. Duplicate rows are bit-exact
-    # copies (same vector, same deterministic score), so deduping the
-    # (query, neighbor) pair is lossless; the aggregate runs on the
-    # CANDIDATE set (Q x probed cells), never the full postings scan.
-    scored = scored.dropDuplicates(["query_id", "neighbor_id"])
     return _topk(scored, 5)
 
 
@@ -3152,25 +3122,18 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
       order = batch-major, cb_id within batch — functions/vector.
       _staged_books), so codes written against an earlier book state
       stay valid forever;
-    - the segment commits with one rename carrying a _folded.json
-      content-marker manifest of the raw dirs it absorbed (the
-      compaction crash contract — recovery heals a half-finished
-      removal, the probe's dedup covers the window);
+    - the segment commits with one rename carrying a content-marker
+      manifest of the raw dirs it absorbed, which readers stop seeing
+      at that instant (io/compact.py);
     - cost is O(rows encoded) per run — the compaction amortization,
       never O(index).
 
     Offline contract like compact/purge: NO active writer. Returns
     {"encoded_rows", "book_rows_added", "segments", "raw_dirs"}."""
-    from etly_spark.io.compact import commit_segment, recover_covered_partitions
     from etly_spark.operators.prefix import banded_row_number
 
     post = os.path.join(index_dir, "postings")
-    recover_covered_partitions(post, "epoch")
-    raw_dirs = sorted(
-        d
-        for d in os.listdir(post)
-        if d.startswith("epoch=") and not d.startswith("epoch=_")
-    )
+    raw_dirs = [d for d in live_partitions(post, "epoch") if not d.startswith("epoch=_")]
     if not raw_dirs:
         return {"encoded_rows": 0, "book_rows_added": 0, "segments": 0,
                 "raw_dirs": 0}
@@ -3207,7 +3170,7 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
     # rows counted too — the target tracks the whole index, the quota
     # is what this batch may add)
     cb_dir, token, have, nxt = _book_state(index_dir)
-    live = spark.read.option("mergeSchema", "true").parquet(post)
+    live = read_live(spark, post, "epoch", merge_schema=True)
     if "parent" not in live.columns:
         live = live.withColumn("parent", F.lit(None).cast("long"))
     parents, _tok = _splits_state(splits_dir)
@@ -3269,7 +3232,9 @@ def encode_ivfpq_postings(spark: SparkSession, index_dir: str) -> dict:
     return {
         "encoded_rows": spark.read.parquet(seg).count(),
         "book_rows_added": added,
-        "segments": sum(d.startswith("epoch=_codes-") for d in os.listdir(post)),
+        "segments": sum(
+            d.startswith("epoch=_codes-") for d in live_partitions(post, "epoch")
+        ),
         "raw_dirs": len(raw_dirs),
     }
 
@@ -3340,9 +3305,7 @@ def _probe_ivfpq_index(
     pairs = V.probe_cells(q_pdf, cent_pdf, nprobe)
     splits_dir = os.path.join(d, "quantizer_splits")
     parents, _token = _splits_state(splits_dir)
-    posts = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(d, "postings")
-    )
+    posts = read_live(spark, os.path.join(d, "postings"), "epoch", merge_schema=True)
     if parents:
         splits_pdf = V._read_parquet_dir(splits_dir)
         triples = _expand_probes(q_pdf, pairs, splits_pdf, set(parents), nprobe)
@@ -3355,7 +3318,7 @@ def _probe_ivfpq_index(
     tomb_dir = os.path.join(d, "tombstones")
     if os.path.isdir(tomb_dir):
         cand = cand.join(
-            F.broadcast(spark.read.parquet(tomb_dir).select("vec_id")),
+            F.broadcast(read_live(spark, tomb_dir, "epoch").select("vec_id")),
             "vec_id",
             "left_anti",
         )
@@ -3406,9 +3369,6 @@ def _probe_ivfpq_index(
     for p_ in parts[1:]:
         scored = scored.unionByName(p_)
     scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    # compaction/encode-crash duplicates are bit-exact copies — dedup
-    # the candidate-density set, the _probe_ivf_index contract
-    scored = scored.dropDuplicates(["query_id", "neighbor_id"])
     if refine_k:
         if refine_src is None:
             raise ValueError("refine_k requires refine_src (the raw vector store)")
@@ -3932,8 +3892,8 @@ _ANN_SQL = _ann_sql()
     "top-k, so the gate exercises deletion); loose epochs fold into "
     "never-rewritten segments via compact_ivf_postings (the signature-"
     "index tiering), purge_ivf_tombstones rewrites live postings and "
-    "drops the tombstone side-table offline (r12), and a compaction "
-    "crash self-heals via the segment's _folded.json manifest. The "
+    "drops the tombstone side-table offline (r12), and readers see "
+    "only partitions no committed segment manifest covers. The "
     "oracle computes the BATCH build-minus-deletes "
     "over the union under the same frozen quantizer, so hash equality "
     "proves append-only maintenance answers queries losslessly; "

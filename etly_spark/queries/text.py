@@ -1411,9 +1411,7 @@ _CURATION_SQL = _CURATION_SQL.replace(
     "branch is partitioned on an unbounded or skewed group "
     "(plan-gated).",
 )
-def text_curation_split(
-    spark: SparkSession, sf_dir: str, shared_base: bool | None = None
-) -> DataFrame:
+def text_curation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etly_spark.queries.catalog import scoped_persist
 
     d = load_table(spark, sf_dir, "documents")
@@ -1421,31 +1419,19 @@ def text_curation_split(
     # Shared tokenized base: five of the ten branches consume the
     # whitespace tokenization of documents.text (curate quality score,
     # decontam 4-grams, ppx unigram tf, spans 5-grams, pack BPE count).
-    # All now read ONE (doc_id, lang, _th, toks) definition; the r8 A/B
-    # (STRESS.md "shared tokenized base") measured whether that base
-    # should also be PERSISTED (tokenize once, cache the token arrays)
-    # or recomputed per branch (Catalyst prunes _th/toks per consumer,
-    # compiling to exactly the old per-branch plans). Measured: persist
-    # wins slightly at sf0.1 (5.46 vs 5.94 s — job overheads dominate)
-    # but LOSES at the 10x corpus (15.3-16.1 lazy / 15.0 eager vs
-    # 12.7-14.0 recompute): unlike ppx's doc-count-sized per_doc
-    # aggregate (where persist wins 2.3x at 10x), the object cached
-    # here IS the token stream — columnar-encoding and rereading it
-    # costs more than the cheap regex tokenize it saves, and at 100 TB
-    # it would also claim ~corpus-sized executor spill. Recompute is
-    # therefore the default; the rule of thumb this pins down is
-    # "persist small derived aggregates, recompute token-stream-sized
-    # projections". Env toggle kept for re-measurement.
-    if shared_base is None:
-        shared_base = os.environ.get("ETLY_CURATION_SHARED_BASE", "0") == "1"
+    # All read ONE (doc_id, lang, _th, toks) definition, recomputed per
+    # branch (Catalyst prunes _th/toks per consumer). Persisting it was
+    # measured slower at the 10x corpus (STRESS.md "shared tokenized
+    # base"): the cached object IS the token stream, and
+    # columnar-encoding and rereading it costs more than the cheap regex
+    # tokenize it saves — persist small derived aggregates, recompute
+    # token-stream-sized projections.
     base = d.select(
         "doc_id",
         "lang",
         F.md5(F.col("text").cast("binary")).alias("_th"),
         T.tokens("text").alias("toks"),
     )
-    if shared_base:
-        base = scoped_persist(base, eager=False)
 
     # The three branches whose CONSTRUCTION runs blocking driver jobs —
     # sexact's partition-boundary collect (it materializes the suffix

@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame
 
 from etly_spark.io.commit import publish_dir
+from etly_spark.io.compact import read_live
 
 
 def start_ivf_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
@@ -183,7 +184,7 @@ def start_bm25_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
                 # silently. The tombstone set is delete-density-sized,
                 # so this is one broadcast join per batch, not O(index).
                 spark_ = adds.sparkSession
-                doomed = spark_.read.parquet(tomb).select("doc_id")
+                doomed = read_live(spark_, tomb, "epoch").select("doc_id")
                 readds = [
                     r["doc_id"]
                     for r in adds.join(F.broadcast(doomed), "doc_id")

@@ -26,14 +26,12 @@ compact_signature_index (drained stream only, same contract).
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etly_spark.io.commit import replace_dir
+from etly_spark.io.compact import live_partitions, read_live
 
 ROLLUP_SPEC = {"n_docs": "count", "kept_chars": "sum:n_chars"}
 
@@ -64,18 +62,15 @@ def read_line_index_before(
     (replay safety: a re-run micro-batch must not probe its own failed
     attempt's contribution). Empty-safe for the first epoch.
 
-    Compaction-safe: compact_signature_index folds drained epochs into
-    ``epoch=_compacted-NNNNNN`` segments, which makes the partition
-    column a STRING — a naive ``epoch < N`` would string-compare and
-    silently EXCLUDE the whole compacted history. Segments can never
-    hold the current epoch (compaction requires a drained stream), so
-    the rule is: keep every non-numeric partition, filter numeric ones
-    by try_cast < epoch."""
-    if not glob.glob(os.path.join(index_dir, "epoch=*")):
+    Compacted segments (``epoch=_compacted-NNNNNN``) make the partition
+    column a STRING, where ``epoch < N`` would string-compare; they only
+    ever hold drained epochs, so every non-numeric partition is kept and
+    numeric ones are filtered by try_cast < epoch."""
+    if not live_partitions(index_dir, "epoch"):
         return spark.createDataFrame([], "line_h string, first_ord long")
     epl = F.expr("try_cast(epoch AS BIGINT)")
     return (
-        spark.read.parquet(index_dir)
+        read_live(spark, index_dir, "epoch")
         .where(epl.isNull() | (epl < F.lit(epoch)))
         .drop("epoch")
         .groupBy("line_h")

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from etly_spark.io.commit import replace_dir
+from etly_spark.io.compact import compact_partitions, read_live
 from etly_spark.operators.sketch import minhash_signatures
 
 
@@ -83,9 +84,9 @@ def start_signature_index(
 
 def read_signature_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """The accumulated sketch table (id, sig) across all ingested
-    epochs — partition-discovered, epoch column dropped (consumers see
+    epochs — live partitions, epoch column dropped (consumers see
     exactly the batch ``minhash_sigs`` shape)."""
-    return spark.read.parquet(index_dir).drop("epoch")
+    return read_live(spark, index_dir, "epoch").drop("epoch")
 
 
 def start_pixel_index(
@@ -113,7 +114,7 @@ def start_pixel_index(
 def read_pixel_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """The accumulated image feature table across all epochs (epoch
     column dropped — consumers see the decode_pixel_features shape)."""
-    return spark.read.parquet(index_dir).drop("epoch")
+    return read_live(spark, index_dir, "epoch").drop("epoch")
 
 
 def start_line_index(
@@ -153,12 +154,12 @@ def start_line_index(
 def read_line_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """The accumulated (line_h, first_ord) table — min across epochs,
     so a line seen in several micro-batches keeps its earliest
-    occurrence (one combinable aggregate over the partition-discovered
-    epochs; compactable exactly like the signature index)."""
+    occurrence (one combinable aggregate over the live epochs;
+    compactable exactly like the signature index)."""
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(index_dir)
+        read_live(spark, index_dir, "epoch")
         .drop("epoch")
         .groupBy("line_h")
         .agg(F.min("first_ord").alias("first_ord"))
@@ -230,6 +231,4 @@ def compact_signature_index(index_dir: str, threshold: int = 64) -> None:
     still pending would let a replayed micro-batch re-create its epoch
     dir next to the segment holding the same rows — duplicate
     signatures inflate band-bucket sizes at probe time."""
-    from etly_spark.io.compact import compact_partitions
-
     compact_partitions(index_dir, "epoch", threshold)

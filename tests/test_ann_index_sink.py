@@ -173,3 +173,28 @@ def test_transfer_cdc_deletes_and_malformed_op(spark, tmp_path):
     )
     res = svc.run(t)
     assert res.status == "ERROR" and "refusing to silently drop" in res.error
+
+
+def test_retried_batch_after_encode_folds_nothing(spark, tmp_path):
+    """A batch retried after the inline encode rung absorbed its raw
+    epoch (a crash before the ledger recorded it) must not fold its
+    vectors a second time: the probe is unchanged and no raw epoch
+    reappears next to the codes segment."""
+    from etly_spark.operators.ann_index_sink import fold_window_into_index
+
+    index_dir = str(tmp_path / "index")
+    opts = {"AnticipatedShards": SHARDS, "EncodeEvery": 1}
+    shards = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    for e in range(2):
+        fold_window_into_index(
+            spark, shards.where(F.col("vec_id") % SHARDS == e), index_dir, f"k{e}", opts
+        )
+    q_pdf = _query_pdf(_normed(load_table(spark, SF, "embeddings")))
+    before = sorted(map(tuple, _probe_ivfpq_index(spark, index_dir, q_pdf).collect()))
+    fold_window_into_index(
+        spark, shards.where(F.col("vec_id") % SHARDS == 1), index_dir, "k1", opts
+    )
+    post = os.path.join(index_dir, "postings")
+    assert sorted(os.listdir(post)) == ["epoch=_codes-000001", "epoch=_codes-000002"]
+    after = sorted(map(tuple, _probe_ivfpq_index(spark, index_dir, q_pdf).collect()))
+    assert after == before and len(before) > 0

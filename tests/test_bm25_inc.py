@@ -225,6 +225,42 @@ def test_compaction_preserves_probe_and_keeps_term_sort(spark, tmp_path):
     assert terms == sorted(terms)
 
 
+def test_probe_ignores_covered_leftovers_after_compaction(spark, tmp_path):
+    """A crash after compact_bm25_index committed its segments but
+    before it removed the folded epochs leaves epoch=0 next to the
+    segments that hold its rows, in postings, doclen and stats alike.
+    The probe reads only live partitions, so it still returns exactly
+    the pre-compaction rows (doubled rows would shift df, n_docs and
+    avgdl, and so every score)."""
+    import shutil
+
+    from etly_spark.operators.bm25 import (
+        compact_bm25_index,
+        fold_bm25_epoch,
+        fold_bm25_tombstones,
+        probe_bm25_index,
+    )
+
+    d = str(tmp_path / "idx")
+    for e in range(4):
+        fold_bm25_epoch(_docs(spark, range(e * 12, e * 12 + 12)), d, e)
+    fold_bm25_tombstones(spark.createDataFrame([(5,)], "doc_id long"), d, 9)
+    pre = sorted(
+        map(tuple, probe_bm25_index(spark, d, ["alpha", "doc2"]).collect())
+    )
+    snaps = {}
+    for sub in ("postings", "doclen", "stats"):
+        snaps[sub] = str(tmp_path / f"{sub}.epoch0")
+        shutil.copytree(os.path.join(d, sub, "epoch=0"), snaps[sub])
+    compact_bm25_index(d, threshold=2)
+    for sub, snap in snaps.items():
+        shutil.copytree(snap, os.path.join(d, sub, "epoch=0"))
+    after = sorted(
+        map(tuple, probe_bm25_index(spark, d, ["alpha", "doc2"]).collect())
+    )
+    assert after == pre and len(pre) > 0
+
+
 def test_purge_drops_dead_rows_and_preserves_probe(spark, tmp_path):
     """purge_bm25_tombstones rewrites live postings/doclen, recomputes
     the stats partials, and drops the tombstone side-table — probe rows

@@ -237,3 +237,133 @@ def test_commit_segment_lost_race_takes_next_number(tmp_path, monkeypatch):
     assert sorted(p.name for p in root.iterdir()) == [
         "k=_compacted-000001", "k=_compacted-000002"
     ]
+
+
+def test_commit_segment_overlapping_rival_raises_and_removes_nothing(tmp_path, monkeypatch):
+    """A rival committed a segment holding some of our covered dirs
+    under the number we wanted: committing ours next to it would publish
+    the shared rows twice, so commit_segment raises, leaves the loose
+    dirs in place, and readers see every row exactly once."""
+    import json
+
+    from etly_spark.io import compact
+
+    root = tmp_path / "root"
+    _seed(root)
+    real = compact.next_segment
+    calls = {"n": 0}
+
+    def racing(r, key, kind="_compacted"):
+        calls["n"] += 1
+        if calls["n"] == 1:  # the rival folds k=1 between naming and commit
+            marker = compact.partition_marker(str(root / "k=1"))
+            rival = real(r, key, kind)
+            os.makedirs(rival)
+            pq.write_table(_TABLE, os.path.join(rival, "part-0.parquet"))
+            with open(os.path.join(rival, "_folded.json"), "w") as f:
+                json.dump({"k=1": marker}, f)
+            return rival
+        return real(r, key, kind)
+
+    monkeypatch.setattr(compact, "next_segment", racing)
+    with pytest.raises(RuntimeError, match="overlapping"):
+        commit_segment(str(root), "k", _write_dir, ["k=1", "k=2"])
+    assert sorted(p.name for p in root.iterdir()) == [
+        "k=1", "k=2", "k=_compacted-000001"
+    ]
+    live = compact.live_partitions(str(root), "k")
+    assert live == ["k=2", "k=_compacted-000001"]
+    rows = [i for d in live for i in pq.read_table(str(root / d))["id"].to_pylist()]
+    assert sorted(rows) == [1, 1, 2, 2, 3, 3]
+
+
+def test_commit_segment_identical_rival_is_ours(tmp_path, monkeypatch):
+    """A rival that committed the very manifest we were about to commit
+    (the same fold, retried) is adopted: no second segment, covered dirs
+    removed."""
+    from etly_spark.io import compact
+
+    root = tmp_path / "root"
+    _seed(root)
+    real_publish = compact.publish_dir
+
+    def twice(final, write):
+        real_publish(final, write)  # the rival's identical commit
+        return real_publish(final, write)
+
+    monkeypatch.setattr(compact, "publish_dir", twice)
+    seg = commit_segment(str(root), "k", _write_dir, ["k=1", "k=2"])
+    assert seg == str(root / "k=_compacted-000001")
+    assert sorted(p.name for p in root.iterdir()) == ["k=_compacted-000001"]
+
+
+def test_live_partitions_hide_covered_dirs_by_content(tmp_path):
+    """A dir a committed manifest covers is invisible while its parts
+    still match the recorded marker — also when the covering segment is
+    itself superseded — and visible again once its content changes (a
+    reused id)."""
+    from etly_spark.io import compact
+
+    root = tmp_path / "root"
+    _seed(root)
+    saved = _files(root)
+    commit_segment(str(root), "k", _write_dir, ["k=1", "k=2"])
+    for name, data in saved.items():  # a crash before the removals
+        (root / name).parent.mkdir(exist_ok=True)
+        (root / name).write_bytes(data)
+    assert compact.live_partitions(str(root), "k") == ["k=_compacted-000001"]
+    pq.write_table(_NEW, str(root / "k=2" / "part-0.parquet"))  # new content
+    assert compact.live_partitions(str(root), "k") == ["k=2", "k=_compacted-000001"]
+    assert compact.recover_covered_partitions(str(root), "k") == ["k=1"]
+    assert sorted(p.name for p in root.iterdir()) == ["k=2", "k=_compacted-000001"]
+
+
+def test_removal_crash_leaves_no_partial_partition(tmp_path, monkeypatch):
+    """A crash part-way through deleting a dir a new segment covers must
+    not leave the remaining parts under the dir's name: their marker no
+    longer matches the manifest, so readers would see them next to the
+    segment that already holds their rows."""
+    import shutil
+
+    root = tmp_path / "root"
+    (root / "k=1").mkdir(parents=True)
+    pq.write_table(_TABLE, str(root / "k=1" / "part-0.parquet"))
+    pq.write_table(_NEW, str(root / "k=1" / "part-1.parquet"))
+
+    def torn(path, *a, **kw):
+        os.remove(os.path.join(path, "part-0.parquet"))
+        raise OSError("crash mid-delete")
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", torn)
+        with pytest.raises(OSError):
+            commit_segment(str(root), "k", _write_dir, ["k=1"])
+    data = ds.dataset(str(root), format="parquet", partitioning="hive")
+    assert sorted(data.to_table()["id"].to_pylist()) == [7, 8]
+
+
+def test_segment_log_internals_stay_in_compact_module():
+    """Gate: under etly_spark/, the segment log's internals — covered-dir
+    recovery, content markers, segment numbering and the manifest file
+    name — appear only in io/compact.py; every other module goes through
+    live_partitions / read_live / commit_segment / compact_partitions."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etly_spark"
+    private = {"recover_covered_partitions", "partition_marker", "next_segment"}
+    allowed = pkg / "io" / "compact.py"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            names = set()
+            if isinstance(node, ast.Name):
+                names = {node.id}
+            elif isinstance(node, ast.Attribute):
+                names = {node.attr}
+            elif isinstance(node, ast.ImportFrom):
+                names = {a.name for a in node.names}
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                names = {"_folded.json"} if "_folded.json" in node.value else set()
+            for n in sorted(names & (private | {"_folded.json"})):
+                found.append(f"{path.relative_to(pkg)}:{node.lineno}:{n}")
+    assert not found, found

@@ -333,9 +333,9 @@ def test_frozen_quantizer_differs_from_batch_selection(spark):
 def test_compaction_crash_recovery_heals_duplicates(spark, tmp_path):
     """r12 (ADVICE medium): a crash between the segment rename and the
     loose-dir removal leaves duplicate postings rows. The probe must
-    answer correctly in the window (candidate dedup), and the next
-    compact call must heal it via the segment's _folded.json manifest —
-    without folding the duplicates into a second segment."""
+    answer correctly in the window (it reads only live partitions), and
+    the next compact call must heal it via the segment's _folded.json
+    manifest — without folding the duplicates into a second segment."""
     import shutil
 
     d = _build_index(spark, str(tmp_path / "idx"))
@@ -352,7 +352,7 @@ def test_compaction_crash_recovery_heals_duplicates(spark, tmp_path):
         os.path.join(post, "epoch=_compacted-000001")
     ).count()
     assert n_dup > n_seg, "precondition: duplicates are really present"
-    assert _rows(_probe_ivf_index(spark, d)) == before  # dedup holds
+    assert _rows(_probe_ivf_index(spark, d)) == before  # leftover invisible
     compact_ivf_postings(d, threshold=64)  # recovery, below threshold
     names = [n for n in os.listdir(post) if n.startswith("epoch=")]
     assert names == ["epoch=_compacted-000001"], names

@@ -34,19 +34,12 @@ QC_WHERE = "vec_id % 16 = 0 AND vec_id < 128"  # 8 queries, 8 clusters
 
 
 def recall_at5(brute, approx) -> float:
-    b = brute.select("query_id", "neighbor_id")
-    a = approx.select(
-        F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n")
-    )
-    hits = (
-        b.join(a, (b.query_id == a._q) & (b.neighbor_id == a._n), "left")
-        .groupBy("query_id")
-        .agg(F.count("_n").alias("h"))
-        .agg(F.avg(F.col("h") / F.lit(5.0)).alias("r"))
-        .collect()[0]
-        .r
-    )
-    return round(float(hits), 4)
+    """Mean per-query recall@5 of ``approx`` against ``brute``, from the
+    same recall rows ``sim_ann_methods`` emits."""
+    from etly_spark.queries.similarity import TOP5, _recall_rows
+
+    rows = _recall_rows(approx, "probe", brute, TOP5)
+    return round(float(rows.agg(F.avg("cos_sim")).first()[0]), 4)
 
 
 def main() -> int:

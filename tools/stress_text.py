@@ -145,17 +145,6 @@ def main() -> int:
     )
     release_cache()
 
-    # --- r8: shared tokenized base, persist vs recompute --------------
-    # (VERDICT r7 item 1; see STRESS.md "Shared tokenized base A/B" —
-    # recompute is the shipped default, this keeps the number fresh)
-    out["curation_base_recompute"] = best_of(
-        runs, spark, lambda: TX.text_curation_split(spark, corpus, shared_base=False)
-    )
-    out["curation_base_persist"] = best_of(
-        runs, spark, lambda: TX.text_curation_split(spark, corpus, shared_base=True)
-    )
-    release_cache()
-
     # --- the whole catalog row at 10x ---------------------------------
     out["text_curation_split"] = best_of(
         runs, spark, lambda: REGISTRY["text_curation_split"].spark(spark, corpus)

@@ -227,6 +227,13 @@ class Transfer:
                     "re-run does not have (the fold would silently never run)"
                 )
             parse_rollup_spec(self.rollup.aggregates)  # surface bad specs at config time
+        method = (self.target.transfer_method or "").lower()
+        if method == "annindexfold" and self.source.type == "datastore":
+            raise ValueError(
+                "annIndexFold requires a url-type source: fold epochs are "
+                "keyed by the batch's source-file set, which a datastore "
+                "query re-run does not have"
+            )
         if self.datasheet is not None and not self.datasheet.name:
             raise ValueError("Datasheet requires Name (the JSON report path)")
 

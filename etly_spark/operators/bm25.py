@@ -231,7 +231,9 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
         # a compaction — spraying default-parallelism part files would
         # swap dead rows for per-file overhead
         def write(tmp: str, n: int) -> None:
-            w = live_df.coalesce(max(1, n))
+            # the partition dir names the segment: a partition-discovered
+            # epoch column must not land in its files
+            w = live_df.drop("epoch").coalesce(max(1, n))
             if sort_cols:
                 w = w.sortWithinPartitions(*sort_cols)
             w.write.parquet(tmp)

@@ -13,10 +13,15 @@ A group loads its ledger once, lists every window, answers the skip set
 with one sidecar probe over the union of the listings, and runs one plan
 over all windows' eligible files; each file keeps its own window's
 target key, and the sidecar keeps one run_ts partition per window.
-Spark's scheduler provides P1-P4; Catalyst fuses F1-F4 into whole-stage
-codegen. Per-file record counts for the meta ledger come from one extra
-aggregation over the persisted parse stage (the reference counts them
-record-at-a-time in Go, transfer.go:70-77).
+Everything after decode and enrich is one chain step (`_run_chain`:
+keep → count → transform → sink → E1) and one ledger step
+(`_record_ledger`), shared by ledger groups, datastore windows, the
+worker RPC and streaming micro-batches. Spark's scheduler provides
+P1-P4; Catalyst fuses F1-F4 into whole-stage codegen. Per-file record
+counts for the meta ledger come from one extra aggregation job over the
+decoded batch, which reads the source again unless Rollup or Datasheet
+made the group persist it (the reference counts them record-at-a-time
+in Go, transfer.go:70-77).
 
 Scale notes:
 - the parse→write path is one distributed job regardless of file count;
@@ -32,14 +37,14 @@ Scale notes:
 
 from __future__ import annotations
 
-import base64
+import hashlib
 import os
 import re
 import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -67,6 +72,7 @@ from etly_spark.templates import (
     expand_date,
     expand_env,
     expand_pwd,
+    expand_source_url_template,
     expand_target_key,
 )
 
@@ -112,12 +118,14 @@ class TransferResult:
 
 @dataclass
 class _UrlWindow:
-    """One look-back window of a URL source within its ledger group."""
+    """One look-back window of a URL source within its ledger group —
+    also the one-window batch of a datastore window, the worker RPC's
+    object and a streaming micro-batch."""
 
     ts: datetime
-    src_url: str
     target_template: str
-    objects: list[tuple[str, int]]  # the source listing: (url, size)
+    src_url: str = ""
+    objects: list[tuple[str, int]] = field(default_factory=list)  # the listing: (url, size)
     eligible: list[str] = field(default_factory=list)
     pending: int = 0
     n_rec: int = 0  # records this run landed from the window
@@ -158,43 +166,28 @@ class TransferService:
     def run_object(self, transfer: Transfer, source_url: str, now: datetime | None = None) -> dict:
         """Worker RPC semantics (POST /etly/transfer; reference
         transfer_object_service.go:15-33 + server.go:91-96): transfer ONE
-        storage object through the full operator chain and report counts
-        — no meta ledger write (the caller owns the ledger, as the
-        reference's master does). Also the on-demand reprocess hook.
+        storage object through the full operator chain as a one-window
+        batch and report counts — no meta ledger write (the caller owns
+        the ledger, as the reference's master does). Also the on-demand
+        reprocess hook.
         """
         now = now or datetime.now(timezone.utc)
         transfer.validate()
-        target_template = expand_date(
-            expand_env(expand_pwd(transfer.target.name, transfer.base_dir)), now
+        w = _UrlWindow(
+            ts=now,
+            target_template=expand_source_url_template(
+                transfer.target.name, now, transfer.base_dir
+            ),
+            eligible=[source_url],
         )
-        variables = self._master_variables(transfer, source_url)
-        file_keys = {
-            _norm_file_url(source_url): expand_target_key(
-                target_template, source_url, now, variables, transfer.base_dir
-            )
-        }
         df = read_records(self.spark, transfer.source, [_local(source_url)])
         df = self._enrich(df, transfer, source_url)
-        df = df.withColumn(KEEP, self._keep_column(df, transfer))
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
-            F.sum((~F.col(CORRUPT) & F.col(KEEP)).cast("long")).alias("kept"),
-        )
-        out = observed.filter(~F.col(CORRUPT) & F.col(KEEP))
-        out = self._transform(out, transfer)
-        key_col = self._routed_key_column(transfer, file_keys)
-        outputs = self._write_routed(out, key_col, transfer)
-        counts = obs.get
-        total = int(counts["total"] or 0)
-        corrupt = int(counts["corrupt"] or 0)
-        kept = int(counts["kept"] or 0)
+        key_col = self._routed_key_column(transfer, self._file_keys(transfer, [w]))
+        _, _, outputs, counts = self._run_chain(transfer, df, [w], key_col)
         return {
-            "RecordProcessed": kept,
-            "RecordSkipped": total - corrupt - kept,
-            "RecordErrors": corrupt,
+            "RecordProcessed": counts["kept"],
+            "RecordSkipped": counts["total"] - counts["corrupt"] - counts["kept"],
+            "RecordErrors": counts["corrupt"],
             "Outputs": outputs,
             "Error": "",
         }
@@ -258,10 +251,10 @@ class TransferService:
         """The ledger URL a window writes — also the P3 grouping key
         (windows sharing a ledger form one group)."""
         if t.meta:
-            return expand_date(expand_env(expand_pwd(t.meta.name, t.base_dir)), ts)
+            return expand_source_url_template(t.meta.name, ts, t.base_dir)
         if t.source.type == "datastore":
             return ""
-        src_url = expand_date(expand_env(expand_pwd(t.source.name, t.base_dir)), ts)
+        src_url = expand_source_url_template(t.source.name, ts, t.base_dir)
         return os.path.join(_local(src_url), ".etly_meta.json")
 
     # ----------------------------------------------------- time window --
@@ -293,11 +286,11 @@ class TransferService:
         """Expand one window's source and target templates and list its
         source; the rest of the work is shared by the window's ledger
         group (`_run_url_group`)."""
-        src_url = expand_date(expand_env(expand_pwd(t.source.name, t.base_dir)), ts)
+        src_url = expand_source_url_template(t.source.name, ts, t.base_dir)
         return _UrlWindow(
             ts=ts,
             src_url=src_url,
-            target_template=expand_date(expand_env(expand_pwd(t.target.name, t.base_dir)), ts),
+            target_template=expand_source_url_template(t.target.name, ts, t.base_dir),
             objects=list_source_objects(src_url, self.spark),
         )
 
@@ -396,18 +389,13 @@ class TransferService:
             )
             if not bad:
                 raise
+        stats = {
+            _norm_file_url(u): {"error": f"failed to read source object {u}: {bad[u]}"}
+            for u in bad
+        }
+        failed = [replace(w, eligible=sorted(u for u in w.eligible if u in bad)) for w in batch]
+        self._record_ledger(meta, meta_url, failed, stats, {}, result)
         for w in batch:
-            entries = []
-            for url in sorted(u for u in w.eligible if u in bad):
-                msg = f"failed to read source object {url}: {bad[url]}"
-                meta.add_error(msg)
-                om = ObjectMeta(source=url, error=msg, message=msg)
-                meta.record(om)
-                entries.append(om)
-                result.progress.file_processed += 1
-            # error entries reach the durable sidecar too — the skip-set
-            # source of truth must remember them past the JSON bound
-            _append_ledger_sidecar(sidecar_dir(meta_url), w.ts.isoformat(), entries)
             w.eligible = [u for u in w.eligible if u not in bad]
         meta.save()  # bad entries survive even if the retry fails too
         healthy = [w for w in batch if w.eligible]
@@ -423,158 +411,146 @@ class TransferService:
         result: TransferResult,
     ) -> None:
         """Transfer a ledger group's eligible files in one plan: read →
-        operator chain → routed write → per-file ledger records, each
-        under its own window. Batch-scoped stages (DedupLines,
-        RemoveSpans, AttachRobots, the E1 error count, the rollup
-        compaction) see the whole batch. Sets each window's ``n_rec``."""
-        # R1-R6 master side: per-file target key (its window's template
-        # + sourceUrl vars)
-        file_keys: dict[str, str] = {}
-        for w in batch:
-            for url in w.eligible:
-                variables = self._master_variables(t, url)
-                file_keys[_norm_file_url(url)] = expand_target_key(
-                    w.target_template, url, w.ts, variables, t.base_dir
-                )
+        operator chain → sink → per-file ledger records, each under its
+        own window. Batch-scoped stages (DedupLines, RemoveSpans,
+        AttachRobots, the E1 error count, the rollup compaction) see the
+        whole batch. Sets each window's ``n_rec``."""
+        keys = self._file_keys(t, batch)
         eligible = [u for w in batch for u in w.eligible]
-
         df = read_records(self.spark, t.source, [_local(u) for u in eligible])
         df = self._enrich(df, t, batch[0].src_url, [w.src_url for w in batch])
-        df = df.withColumn(KEEP, self._keep_column(df, t))
-        if t.rollup or t.datasheet:
-            # extra consumers beyond the routed write (per-file rollup
-            # partials / the datasheet report pass / per-file ledger
-            # stats): cache the decoded batch (MEMORY_AND_DISK; bounded
-            # by MaxTransfers x MaxAllowedSize per window) so the source
-            # is read and decoded once, not once per consumer. Released
-            # in the finally below.
+        persist = bool(t.rollup or t.datasheet)
+        if persist:
+            # extra consumers beyond the sink (per-file rollup partials,
+            # the datasheet report pass): cache the decoded batch
+            # (MEMORY_AND_DISK; bounded by MaxTransfers x MaxAllowedSize
+            # per window) so the source is read and decoded once, not
+            # once per consumer
             df = df.persist()
         try:
-
-            # E1 + progress counters ride the write job itself (observe():
-            # CollectMetrics below the keep/corrupt filter, so the metrics see
-            # every decoded row) — no persist of the decoded input, no second
-            # full pass for global counts. Reference parity: the reference
-            # also counts while streaming the transfer (transfer.go:17-25) —
-            # an abort happens after work was spent; meta is then NOT
-            # recorded, so the next run reprocesses the batch.
-            obs = Observation()
-            observed = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
-                F.sum((~F.col(CORRUPT) & F.col(KEEP)).cast("long")).alias("kept"),
+            flagged, out, outputs, _ = self._run_chain(
+                t, df, batch, self._routed_key_column(t, keys)
             )
-            out = observed.filter(~F.col(CORRUPT) & F.col(KEEP))
-            out = self._transform(out, t)
-            if (t.target.transfer_method or "").lower() == "annindexfold":
-                # config-owned ANN index maintenance (r14): the batch
-                # folds into the Target index instead of a file sink —
-                # the reference's special-sink dispatch shape
-                # (transfer_service.go:566-663, the BQ load path).
-                # Epoch key = md5 of the batch's sorted source set, so
-                # a crashed-then-retried batch overwrites its own
-                # partition (the rollup per-file-epoch idempotence
-                # rule).
-                import hashlib as _hashlib
-
-                from etly_spark.operators.ann_index_sink import (
-                    fold_window_into_index,
-                )
-
-                outputs = []
-                for target, ws, rows in _window_slices(
-                    out, batch, lambda w: w.target_template
-                ):
-                    epoch_key = _hashlib.md5(
-                        "|".join(
-                            sorted(_norm_file_url(u) for w in ws for u in w.eligible)
-                        ).encode()
-                    ).hexdigest()[:12]
-                    outputs += fold_window_into_index(
-                        self.spark,
-                        rows,
-                        _local(target),
-                        epoch_key,
-                        t.target.index_options,
-                    )
-            else:
-                key_col = self._routed_key_column(t, file_keys)
-                outputs = self._write_routed(out, key_col, t)
-            counts = obs.get
-            total_corrupt = int(counts["corrupt"] or 0)
-            # E1 bounded error tolerance (transfer.go:17-25): nil ⇒ tolerate all
-            if t.max_error_counts is not None and 0 < total_corrupt and total_corrupt >= max(
-                t.max_error_counts, 1
-            ):
-                raise MaxErrorsExceeded(
-                    f"reached max errors {total_corrupt} >= {t.max_error_counts}"
-                )
             result.outputs.extend(outputs)
-
             if t.rollup:
                 self._fold_rollup(t, eligible, out)
             if t.datasheet:
                 self._ship_datasheet(t, batch, out)
+            self._record_ledger(meta, meta_url, batch, _file_stats(flagged), keys, result)
+        finally:
+            if persist:
+                df.unpersist()
 
-            # M1: per-file ledger (meta.go:6-26; transfer_service.go:739-757).
-            # Per-file stats are ONE distributed aggregate collected once —
-            # bounded by the group's ≤ MaxTransfers files per window, so
-            # nothing per-record ever sits on the driver. The collected rows
-            # feed (a) the BOUNDED JSON ledger (the reference-compatible
-            # status surface — most recent MAX_JSON_PROCESSED entries) and
-            # (b) the run_ts-partitioned parquet sidecar, one partition per
-            # window, which is the DURABLE full history and the skip-set
-            # source of truth (meta.ProcessedIndex): appends are O(this
-            # run's files) forever — ledger cost is flat at any history
-            # size, vs the reference's full Processed-map rewrite per
-            # window. The sidecar file itself is written with Arrow on the
-            # driver — the rows are already here and bounded, so launching a
-            # Spark write job (with its per-task commit protocol) for a few
-            # rows is pure overhead.
-            per_file_df = df.groupBy(FILE).agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
-                F.sum((~F.col(CORRUPT) & F.col(KEEP)).cast("long")).alias("kept"),
-                F.first(F.when(F.col(CORRUPT), F.col(RAW)), ignorenulls=True).alias(
-                    "corrupt_sample"
-                ),
+    def _run_chain(
+        self, t: Transfer, df: DataFrame, batch: list[_UrlWindow], key_col
+    ) -> tuple[DataFrame, DataFrame, list[str], dict[str, int]]:
+        """The operator chain after decode and enrich, shared by every
+        entry point — a URL ledger group, and as one-window batches a
+        datastore window, the worker RPC's object and a streaming
+        micro-batch: flag F1 keep, count, drop corrupt and skipped rows,
+        F3 transform, sink, E1. Returns the keep-flagged input (for the
+        per-file ledger stats), the transformed rows, the sink's outputs
+        and the batch's ``total``/``corrupt``/``kept`` counts.
+
+        The counters ride the sink job itself (observe(): CollectMetrics
+        below the keep/corrupt filter sees every decoded row) — no second
+        pass for global counts, and a datastore query executes once.
+
+        The sink follows Target.TransferMethod. ``annIndexFold`` folds
+        each window's rows into its target index (ann_index_sink — the
+        reference's special-sink dispatch shape, transfer_service.go:
+        566-663) under an epoch keyed by the md5 of those windows' sorted
+        source set, so a crashed-then-retried batch overwrites its own
+        partition. Anything else is the routed write keyed by ``key_col``.
+
+        E1 (transfer.go:17-25; MaxErrorCounts unset tolerates all) is
+        checked after the sink, like the reference, which also counts
+        while streaming the transfer: the abort comes after work was
+        spent, the caller records no ledger entry, and the next run
+        reprocesses the batch."""
+        flagged = df.withColumn(KEEP, self._keep_column(df, t))
+        obs = Observation()
+        out = flagged.observe(obs, *_counters()).filter(~F.col(CORRUPT) & F.col(KEEP))
+        out = self._transform(out, t)
+        if (t.target.transfer_method or "").lower() == "annindexfold":
+            from etly_spark.operators.ann_index_sink import fold_window_into_index
+
+            outputs = []
+            for target, ws, rows in _window_slices(out, batch, lambda w: w.target_template):
+                sources = sorted(_norm_file_url(u) for w in ws for u in w.eligible)
+                epoch_key = hashlib.md5("|".join(sources).encode()).hexdigest()[:12]
+                outputs += fold_window_into_index(
+                    self.spark, rows, _local(target), epoch_key, t.target.index_options
+                )
+        else:
+            outputs = self._write_routed(out, key_col, t)
+        counts = {k: int(v or 0) for k, v in obs.get.items()}
+        if t.max_error_counts is not None and 0 < counts["corrupt"] >= max(
+            t.max_error_counts, 1
+        ):
+            raise MaxErrorsExceeded(
+                f"reached max errors {counts['corrupt']} >= {t.max_error_counts}"
             )
-            per_file = {r[FILE]: r for r in per_file_df.collect()}
+        return flagged, out, outputs, counts
 
-            for w in batch:
-                w.n_rec = 0
-                entries: list[ObjectMeta] = []
-                for url in w.eligible:
-                    norm = _norm_file_url(url)
-                    r = per_file.get(norm)
-                    total = r["total"] if r is not None else 0
-                    corrupt = int(r["corrupt"]) if r is not None else 0
-                    kept = int(r["kept"]) if r is not None else 0
-                    err_msg = ""
-                    if corrupt and r is not None and r["corrupt_sample"]:
-                        err_msg = f"failed to decode json ({corrupt} times): {r['corrupt_sample'][:200]}"
-                        meta.add_error(err_msg)
-                    om = ObjectMeta(
+    def _record_ledger(
+        self,
+        meta: Meta | None,
+        meta_url: str,
+        batch: list[_UrlWindow],
+        stats: dict[str, dict],
+        keys: dict[str, str],
+        result: TransferResult,
+    ) -> None:
+        """M1 (meta.go:6-26; transfer_service.go:739-757): one ObjectMeta
+        per eligible file of each window, built from the file's stats row
+        (``total``/``corrupt``/``kept``, a ``corrupt_sample`` line or a
+        read ``error``) and target key, both keyed like FILE
+        (``_norm_file_url``). Every file counts in ``result``'s progress
+        and its window's ``n_rec``. With a ``meta``, each window's
+        entries go to both ledgers: the BOUNDED JSON (the reference-
+        compatible status surface, the most recent MAX_JSON_PROCESSED
+        entries) and the run_ts-partitioned parquet sidecar, one
+        partition per window — the durable full history and the skip-set
+        source of truth (meta.ProcessedIndex), appended in O(the
+        window's files) at any history size, vs the reference's full
+        Processed-map rewrite per window."""
+        progress = result.progress
+        for w in batch:
+            w.n_rec = 0
+            entries: list[ObjectMeta] = []
+            for url in w.eligible:
+                fid = _norm_file_url(url)
+                s = stats.get(fid) or {}
+                total, corrupt, kept = (int(s.get(k) or 0) for k in ("total", "corrupt", "kept"))
+                error = s.get("error") or ""
+                message = error
+                if corrupt and s.get("corrupt_sample"):
+                    message = f"failed to decode json ({corrupt} times): {s['corrupt_sample'][:200]}"
+                entries.append(
+                    ObjectMeta(
                         source=url,
-                        target=file_keys[norm],
+                        target=keys.get(fid, ""),
                         record_processed=kept,
                         record_skipped=total - corrupt - kept,
                         record_errors=corrupt,
-                        message=err_msg,
+                        message=message,
+                        error=error,
                     )
-                    meta.record(om)
-                    entries.append(om)
-                    w.n_rec += kept
-                    result.progress.record_read += total
-                    result.progress.record_processed += kept
-                    result.progress.record_skipped += total - corrupt - kept
-                    result.progress.record_errors += corrupt
-                    result.progress.file_processed += 1
-                _append_ledger_sidecar(sidecar_dir(meta_url), w.ts.isoformat(), entries)
-        finally:
-            if t.rollup or t.datasheet:
-                df.unpersist()
+                )
+                w.n_rec += kept
+                progress.record_read += total
+                progress.record_processed += kept
+                progress.record_skipped += total - corrupt - kept
+                progress.record_errors += corrupt
+                progress.file_processed += 1
+            if meta is None:
+                continue
+            for om in entries:
+                if om.message:
+                    meta.add_error(om.message)
+                meta.record(om)
+            _append_ledger_sidecar(sidecar_dir(meta_url), w.ts.isoformat(), entries)
 
     def _ship_datasheet(self, t: Transfer, batch: list[_UrlWindow], out) -> None:
         """Config-addressable datasheet report (r12 — Transfer.Datasheet):
@@ -626,15 +602,12 @@ class TransferService:
         URL-source transfers only: batch identity comes from the
         exactly-once file ledger (a datastore query re-run has no such
         identity — config validation rejects the combination)."""
-        import hashlib
-
         from etly_spark.operators import incremental_agg as IA
-        from etly_spark.sources.storage import FILE as _FILE
 
         spec = t.rollup
         state = expand_env(expand_pwd(spec.state_dir, t.base_dir))
         partial_cols, merges = IA.rollup_plan(spec.aggregates)
-        agg = out.groupBy(F.col(_FILE).alias("__file"), *spec.keys).agg(*partial_cols)
+        agg = out.groupBy(F.col(FILE).alias("__file"), *spec.keys).agg(*partial_cols)
         pdf = agg.toPandas()
         # pyarrow needs bytes, not bytearray (HLL sketch partials)
         for c in merges:
@@ -662,13 +635,18 @@ class TransferService:
     # ------------------------------------------------ datastore source --
 
     def _run_datastore_window(self, t: Transfer, ts: datetime, result: TransferResult) -> None:
-        src = t.source
-        # resolve <pwd>/env/date templates inside DsConfig parameter values
-        params = dict((src.ds_config or {}).get("Parameters") or {})
-        for k, v in params.items():
-            if isinstance(v, str):
-                params[k] = expand_date(expand_env(expand_pwd(v, t.base_dir)), ts)
-        src.ds_config = {**(src.ds_config or {}), "Parameters": params}
+        """One datastore window: the SQL source is one logical file, a
+        one-window batch through the shared chain and ledger steps."""
+        # <pwd>/env/date templates inside DsConfig parameter values expand
+        # into this window's copy of the source: written back into
+        # t.source they would pin every later window and run to this
+        # window's date, and race between concurrent groups
+        ds = t.source.ds_config or {}
+        params = {
+            k: expand_source_url_template(v, ts, t.base_dir) if isinstance(v, str) else v
+            for k, v in (ds.get("Parameters") or {}).items()
+        }
+        src = replace(t.source, ds_config={**ds, "Parameters": params})
 
         df = read_datastore(self.spark, src)
         data_cols = list(df.columns)
@@ -678,52 +656,23 @@ class TransferService:
             .withColumn(CORRUPT, F.lit(False))
         )
         df = self._enrich(df, t, src.name)
-        df = df.withColumn(KEEP, self._keep_column(df, t))
-
-        target_template = expand_date(expand_env(expand_pwd(t.target.name, t.base_dir)), ts)
-        meta_url = (
-            expand_date(expand_env(expand_pwd(t.meta.name, t.base_dir)), ts) if t.meta else ""
+        w = _UrlWindow(
+            ts=ts,
+            target_template=expand_source_url_template(t.target.name, ts, t.base_dir),
+            eligible=[src.name],
         )
-
-        # Counters ride the write job via observe() — the datastore/JDBC
-        # source query executes exactly ONCE (a live or non-deterministic
-        # SQL source must not be re-run for the counts, and source load
-        # must not double).
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col(KEEP).cast("long")).alias("kept"),
-        )
-        out = observed.filter(F.col(KEEP))
-        out = self._transform(out, t)
-        key_col = self._record_key_column(t, F.lit(target_template))
-        outputs = self._write_routed(out, key_col, t)
+        key_col = self._record_key_column(t, F.lit(w.target_template))
+        _, _, outputs, counts = self._run_chain(t, df, [w], key_col)
         result.outputs.extend(outputs)
 
-        # progress: one logical "file" = the SQL source
-        counts = obs.get
-        result.progress.record_read += counts["total"]
-        result.progress.record_processed += int(counts["kept"] or 0)
-        result.progress.record_skipped += counts["total"] - int(counts["kept"] or 0)
-        result.progress.file_processed += 1
-
-        if meta_url:
-            meta = Meta.load(meta_url)
-            om = ObjectMeta(
-                source=src.name,
-                target=target_template,
-                record_processed=int(counts["kept"] or 0),
-                record_skipped=counts["total"] - int(counts["kept"] or 0),
-            )
-            meta.record(om)
-            _append_ledger_sidecar(sidecar_dir(meta_url), ts.isoformat(), [om])
+        meta_url = self._meta_url_for(t, ts)
+        meta = Meta.load(meta_url) if meta_url else None
+        fid = _norm_file_url(src.name)
+        self._record_ledger(meta, meta_url, [w], {fid: counts}, {fid: w.target_template}, result)
+        if meta is not None:
             meta.put_status(
                 src.name,
-                ProcessingStatus(
-                    resource_processed=1,
-                    record_processed=int(counts["kept"] or 0),
-                ),
+                ProcessingStatus(resource_processed=1, record_processed=counts["kept"]),
             )
             meta.save()
 
@@ -791,6 +740,17 @@ class TransferService:
                 m = re.search(ve.reg_expr, source_url)
                 out[ve.name] = m.group(1) if m else ""
         return out
+
+    def _file_keys(self, t: Transfer, batch: list[_UrlWindow]) -> dict[str, str]:
+        """R1-R6 master side: each eligible file's target key (its
+        window's template + sourceUrl vars), keyed like FILE."""
+        return {
+            _norm_file_url(u): expand_target_key(
+                w.target_template, u, w.ts, self._master_variables(t, u), t.base_dir
+            )
+            for w in batch
+            for u in w.eligible
+        }
 
     def _routed_key_column(self, t: Transfer, file_keys: dict[str, str], batch_count: int = 0):
         """R1: per-file key via a literal map on input_file_name, then
@@ -1090,6 +1050,26 @@ def _merge_result(total: TransferResult, w: TransferResult) -> None:
     tp.record_skipped += wp.record_skipped
     tp.record_errors += wp.record_errors
     tp.file_processed += wp.file_processed
+
+
+def _counters() -> list:
+    """The chain's three counters — the batch observation and the
+    per-file ledger stats aggregate the same ones."""
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
+        F.sum((~F.col(CORRUPT) & F.col(KEEP)).cast("long")).alias("kept"),
+    ]
+
+
+def _file_stats(flagged: DataFrame) -> dict[str, dict]:
+    """The ledger's per-file stats rows, keyed by FILE: ONE distributed
+    aggregate of the chain's counters plus a sample corrupt line,
+    collected once — bounded by the batch's files, so nothing
+    per-record ever sits on the driver."""
+    sample = F.first(F.when(F.col(CORRUPT), F.col(RAW)), ignorenulls=True)
+    agg = flagged.groupBy(FILE).agg(*_counters(), sample.alias("corrupt_sample"))
+    return {r[FILE]: r.asDict() for r in agg.collect()}
 
 
 def _window_slices(out: DataFrame, batch: list[_UrlWindow], path_of):

@@ -837,7 +837,10 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
             "left_anti",
         )
     # one distributed write, cluster parallelism preserved (an EMPTY
-    # live set still writes a schema-carrying part file — SPARK-23271)
+    # live set still writes a schema-carrying part file — SPARK-23271);
+    # the segment's dir names its epoch, so the partition-discovered
+    # column stays out of its files
+    live = live.drop("epoch")
     supersede_partitions(post, "epoch", lambda tmp, _n: live.write.parquet(tmp))
     if os.path.isdir(tomb):
         shutil.rmtree(tomb, ignore_errors=True)

@@ -6,12 +6,15 @@ The reference's whole scheduler/meta machinery — frequency polling
 per-file ledger (meta.go:6-26) — is, in Spark terms, exactly the
 streaming file source + checkpoint: new files discovered per trigger,
 each file processed exactly once across restarts, progress in the commit
-log. This service swaps the batch source for `readStream` and reuses the
-batch operator chain (enrich → filter → transform → routed write) inside
-`foreachBatch`, so both modes share one code path for F1-F4/R1-R6
-semantics. The meta ledger is still written per micro-batch — the
-*status surface* stays etly-compatible while exactly-once is carried by
-the checkpoint.
+log. This service swaps the batch source for `readStream`; both modes
+share the decode kernels (sources/storage), the enricher, and inside
+`foreachBatch` the batch engine's chain step and ledger step: each
+micro-batch is a one-window batch through keep → count → transform →
+sink (routed write or ``annIndexFold``) → E1 (MaxErrorCounts), then per
+file one ObjectMeta into the JSON ledger and the parquet sidecar. So
+F1-F4, R1-R6, E1 and M1 mean the same in both modes; exactly-once is
+carried by the checkpoint, and the ledger stays the etly-compatible
+status surface and the batch skip-set's source of truth.
 
 Scale: the file source lists incrementally (maxFilesPerTrigger bounds
 per-trigger work); state lives in the checkpoint, not the driver heap;
@@ -28,10 +31,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etly_spark.config import Transfer
-from etly_spark.meta import Meta, ObjectMeta
-from etly_spark.pipeline import TransferService, _local, _norm_file_url
+from etly_spark.meta import Meta
+from etly_spark.pipeline import (
+    TransferResult,
+    TransferService,
+    _file_stats,
+    _local,
+    _UrlWindow,
+)
 from etly_spark.sources.storage import (
-    CORRUPT,
     FILE,
     RAW,
     _decode_ndjson,
@@ -41,7 +49,7 @@ from etly_spark.sources.storage import (
     line_records,
     warc_records,
 )
-from etly_spark.templates import expand_date, expand_env, expand_pwd, expand_target_key
+from etly_spark.templates import expand_source_url_template
 
 
 class StreamingTransferService:
@@ -67,22 +75,22 @@ class StreamingTransferService:
         ``now`` is UTC, matching the batch engine (pipeline.py run()) so
         <dateFormat:> expansion resolves identically in both modes."""
         now = now or datetime.now(timezone.utc)
-        src_url = expand_date(expand_env(expand_pwd(t.source.name, t.base_dir)), now)
-        target_template = expand_date(expand_env(expand_pwd(t.target.name, t.base_dir)), now)
-        meta_url = (
-            expand_date(expand_env(expand_pwd(t.meta.name, t.base_dir)), now)
-            if t.meta
-            else os.path.join(_local(src_url), ".etly_meta.json")
-        )
+        src_url = expand_source_url_template(t.source.name, now, t.base_dir)
+        target_template = expand_source_url_template(t.target.name, now, t.base_dir)
+        meta_url = self._batch._meta_url_for(t, now)
         checkpoint = checkpoint or os.path.join(_local(src_url), ".etly_checkpoint")
 
         fmt = (t.source.data_format or "ndjson").lower()
         cap = max_files_per_trigger or t.max_transfers
-        if fmt in ("warc", "wet", "cdx"):
-            # web archives stream too: the binaryFile source is a file
-            # source like text, so the checkpointed exactly-once file
-            # discovery is identical; each new .warc[.gz] object is one
-            # task through the shared warc kernel (storage.warc_records)
+        schema = get_schema(t.source.data_type) if t.source.data_type else None
+        if fmt in ("warc", "wet", "cdx") or t.source.compression:
+            # web archives and Source.Compression objects stream through
+            # the binaryFile file source — the same checkpointed
+            # exactly-once file discovery as text — and the shared
+            # kernels: each new .warc[.gz] object is one task through
+            # storage.warc_records, and a forced codec (which the text
+            # source would pick by EXTENSION only) decodes through the
+            # batch forced-codec route's line kernel
             reader = self.spark.readStream.format("binaryFile").schema(
                 # the binaryFile source's fixed schema — streaming file
                 # sources require it stated up front
@@ -98,44 +106,20 @@ class StreamingTransferService:
             # length column, same contract
             bin_df = reader.load(_local(src_url)).filter(F.col("length") > 0)
             if t.source.filter_reg_exp:
-                # S2 filter BEFORE the parse — a non-warc sidecar the
-                # regex excludes (manifest.json, README) must never
-                # reach decode_warc, where its ValueError would poison
-                # the micro-batch on every checkpoint retry. Matches
-                # against the source's Hadoop URI (path column); the
-                # batch path filters the same pattern at list time.
-                bin_df = bin_df.filter(
-                    F.col("path").rlike(t.source.filter_reg_exp)
-                )
+                # S2 filter BEFORE the parse — a sidecar the regex
+                # excludes (manifest.json, README) must never reach a
+                # decoder, where its error would poison the micro-batch
+                # on every checkpoint retry. Matches against the
+                # source's Hadoop URI (path column); the batch path
+                # filters the same pattern at list time.
+                bin_df = bin_df.filter(F.col("path").rlike(t.source.filter_reg_exp))
             if fmt == "cdx":
                 decoded = cdx_records(bin_df)
-            else:
+            elif fmt in ("warc", "wet"):
                 decoded = warc_records(bin_df, main=(fmt == "wet"))
-        elif t.source.compression:
-            # Source.Compression set: the text file source selects
-            # codecs by EXTENSION only, so extension-less/python-codec
-            # objects must stream through binaryFile + the shared line
-            # kernel (same codec registry, archives included) — the
-            # streaming twin of the batch forced-codec route
-            reader = self.spark.readStream.format("binaryFile").schema(
-                "path string, modificationTime timestamp, "
-                "length long, content binary"
-            )
-            if cap:
-                reader = reader.option("maxFilesPerTrigger", cap)
-            # length > 0: batch skips zero-byte objects at list time
-            # (upload markers); a forced-codec decompress of b'' would
-            # raise and poison every checkpoint retry
-            bin_df = reader.load(_local(src_url)).filter(F.col("length") > 0)
-            if t.source.filter_reg_exp:
-                bin_df = bin_df.filter(
-                    F.col("path").rlike(t.source.filter_reg_exp)
-                )
-            raw = line_records(
-                bin_df, forced_ext=_forced_codec_ext(t.source)
-            )
-            schema = get_schema(t.source.data_type) if t.source.data_type else None
-            decoded = _decode_ndjson(raw, t.source, schema)
+            else:
+                raw = line_records(bin_df, forced_ext=_forced_codec_ext(t.source))
+                decoded = _decode_ndjson(raw, t.source, schema)
         else:
             reader = self.spark.readStream.format("text")
             if cap:
@@ -149,8 +133,6 @@ class StreamingTransferService:
                 # S2 regex filter — same regex semantics as the batch
                 # path (transfer_service.go:488-495), on the file URL.
                 raw = raw.filter(F.col(FILE).rlike(t.source.filter_reg_exp))
-
-            schema = get_schema(t.source.data_type) if t.source.data_type else None
             decoded = _decode_ndjson(raw, t.source, schema)
         decoded = self._batch._enrich(decoded, t, src_url)
 
@@ -178,67 +160,24 @@ class StreamingTransferService:
         meta_url: str,
         ts: datetime,
     ) -> None:
-        """One micro-batch = one etly worker sweep: per-file keys computed
-        driver-side (bounded by maxFilesPerTrigger), records filtered,
-        transformed, routed, and the meta ledger appended."""
+        """One micro-batch = one etly worker sweep, a one-window batch
+        through the batch engine's chain and ledger steps; $batchCount
+        is the micro-batch id. The micro-batch is persisted: the sink
+        and the per-file ledger stats both read it."""
         bdf = bdf.persist()
         try:
             files = [r[0] for r in bdf.select(FILE).distinct().collect()]
             if not files:
                 return
-            file_keys = {
-                _norm_file_url(u): expand_target_key(
-                    target_template,
-                    u,
-                    ts,
-                    self._batch._master_variables(t, u),
-                    t.base_dir,
-                )
-                for u in files
-            }
-
-            keep = self._batch._keep_column(bdf, t)
-            flagged = bdf.withColumn("__keep__", keep)
-            per_file = {
-                r[FILE]: r
-                for r in flagged.groupBy(FILE)
-                .agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.col(CORRUPT).cast("long")).alias("corrupt"),
-                    F.sum((~F.col(CORRUPT) & F.col("__keep__")).cast("long")).alias("kept"),
-                    F.first(F.when(F.col(CORRUPT), F.col(RAW)), ignorenulls=True).alias(
-                        "corrupt_sample"
-                    ),
-                )
-                .collect()
-            }
-
-            out = flagged.filter(~F.col(CORRUPT) & F.col("__keep__")).drop("__keep__")
-            out = self._batch._transform(out, t)
-            key_col = self._batch._routed_key_column(t, file_keys, batch_count=epoch_id)
-            self._batch._write_routed(out, key_col, t)
-
+            svc = self._batch
+            w = _UrlWindow(ts=ts, target_template=target_template, eligible=files)
+            keys = svc._file_keys(t, [w])
+            key_col = svc._routed_key_column(t, keys, batch_count=epoch_id)
+            flagged, _, _, _ = svc._run_chain(t, bdf, [w], key_col)
             meta = Meta.load(meta_url)
-            for u in files:
-                norm = _norm_file_url(u)
-                r = per_file.get(norm)
-                total = r["total"] if r is not None else 0
-                corrupt = int(r["corrupt"]) if r is not None else 0
-                kept = int(r["kept"]) if r is not None else 0
-                msg = ""
-                if corrupt and r is not None and r["corrupt_sample"]:
-                    msg = f"failed to decode json ({corrupt} times): {r['corrupt_sample'][:200]}"
-                    meta.add_error(msg)
-                meta.record(
-                    ObjectMeta(
-                        source=norm,
-                        target=file_keys[norm],
-                        record_processed=kept,
-                        record_skipped=total - corrupt - kept,
-                        record_errors=corrupt,
-                        message=msg,
-                    )
-                )
+            svc._record_ledger(
+                meta, meta_url, [w], _file_stats(flagged), keys, TransferResult(name=t.name)
+            )
             meta.save()
         finally:
             bdf.unpersist()

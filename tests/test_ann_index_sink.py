@@ -198,3 +198,36 @@ def test_retried_batch_after_encode_folds_nothing(spark, tmp_path):
     assert sorted(os.listdir(post)) == ["epoch=_codes-000001", "epoch=_codes-000002"]
     after = sorted(map(tuple, _probe_ivfpq_index(spark, index_dir, q_pdf).collect()))
     assert after == before and len(before) > 0
+
+
+def test_worker_rpc_folds_into_index(spark, tmp_path):
+    """The worker RPC (run_object) follows Target.TransferMethod like a
+    batch run: an annIndexFold target folds the object into its index
+    under the epoch a batch of that one file gets (md5 of its source
+    set), and no ndjson file lands at the index path."""
+    import hashlib
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (tmp_path / "out").mkdir()
+    rows = [r for r in _corpus_rows(spark) if r["vec_id"] % SHARDS == 0]
+    _write_shard(src, "shard0.json", rows)
+    url = "file://" + str(src / "shard0.json")
+    resp = TransferService(spark).run_object(_transfer(tmp_path), url)
+    assert resp["Error"] == "" and resp["RecordProcessed"] == len(rows)
+    index_dir = tmp_path / "out" / "index"
+    assert index_dir.is_dir() and (index_dir / "quantizer").is_dir()
+    epoch = f"epoch={hashlib.md5(url.encode()).hexdigest()[:12]}"
+    assert resp["Outputs"] == [str(index_dir / "postings" / epoch)]
+    assert os.listdir(index_dir / "postings") == [epoch]
+    assert os.listdir(tmp_path / "out") == ["index"]
+
+
+def test_datastore_source_rejected(tmp_path):
+    """annIndexFold keys its fold epochs by the batch's source files; a
+    datastore query re-run has none, so the config is refused up front
+    (the Rollup rule)."""
+    t = _transfer(tmp_path)
+    t.source.type = "datastore"
+    with pytest.raises(ValueError, match="annIndexFold requires a url-type source"):
+        t.validate()

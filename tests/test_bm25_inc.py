@@ -261,6 +261,18 @@ def test_probe_ignores_covered_leftovers_after_compaction(spark, tmp_path):
     assert after == pre and len(pre) > 0
 
 
+def _segment_columns(root: str) -> list[list[str]]:
+    """Column names of every parquet file in ``root``'s segments."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return [
+        pq.read_schema(f).names
+        for f in sorted(glob.glob(os.path.join(root, "epoch=_*", "*.parquet")))
+    ]
+
+
 def test_purge_drops_dead_rows_and_preserves_probe(spark, tmp_path):
     """purge_bm25_tombstones rewrites live postings/doclen, recomputes
     the stats partials, and drops the tombstone side-table — probe rows
@@ -292,6 +304,10 @@ def test_purge_drops_dead_rows_and_preserves_probe(spark, tmp_path):
     for sub in ("postings", "doclen", "stats"):
         dirs = os.listdir(os.path.join(d, sub))
         assert sum(1 for x in dirs if not x.startswith("epoch=_")) == 0
+        # the segment's dir names its epoch; its files carry no epoch column
+        assert _segment_columns(os.path.join(d, sub)) and all(
+            "epoch" not in cols for cols in _segment_columns(os.path.join(d, sub))
+        )
     assert not os.path.isdir(os.path.join(d, "tombstones"))
     post = sorted(
         map(tuple, probe_bm25_index(spark, d, ["alpha", "doc2"]).collect())

@@ -367,3 +367,54 @@ def test_segment_log_internals_stay_in_compact_module():
             for n in sorted(names & (private | {"_folded.json"})):
                 found.append(f"{path.relative_to(pkg)}:{node.lineno}:{n}")
     assert not found, found
+
+
+def test_transfer_chain_steps_are_the_only_sites():
+    """Gate: under etly_spark/, the Transfer chain's invariants live in
+    its two shared steps, so no entry point (ledger group, datastore
+    window, worker RPC, streaming micro-batch) grows its own copy:
+    the batch Observation, the E1 raise and the sink calls
+    (fold_window_into_index, _write_routed) appear only in
+    pipeline.TransferService._run_chain, and an ObjectMeta built from
+    per-file stats only in pipeline.TransferService._record_ledger."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etly_spark"
+    home = {
+        "Observation": "_run_chain",
+        "MaxErrorsExceeded": "_run_chain",
+        "fold_window_into_index": "_run_chain",
+        "_write_routed": "_run_chain",
+        "ObjectMeta": "_record_ledger",
+    }
+    stats_kw = {"record_processed", "record_skipped", "record_errors"}
+
+    def callee(node) -> str | None:
+        if isinstance(node, ast.Name):
+            return node.id
+        return node.attr if isinstance(node, ast.Attribute) else None
+
+    found, seen = [], set()
+
+    def visit(node, where: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = None
+            if isinstance(child, ast.Raise) and child.exc is not None:
+                exc = child.exc.func if isinstance(child.exc, ast.Call) else child.exc
+                name = callee(exc) if callee(exc) == "MaxErrorsExceeded" else None
+            elif isinstance(child, ast.Call):
+                name = callee(child.func)
+                if name == "MaxErrorsExceeded" or (
+                    name == "ObjectMeta" and not stats_kw & {k.arg for k in child.keywords}
+                ):
+                    name = None  # the raise is checked; other ObjectMetas are not stats rows
+            if name in home:
+                if (where, fn) == ("pipeline.py", home[name]):
+                    seen.add(name)
+                else:
+                    found.append(f"{where}:{child.lineno}:{fn}:{name}")
+            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            visit(child, where, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(path.read_text(), str(path)), str(path.relative_to(pkg)), "")
+    assert not found, found
+    assert seen == set(home), set(home) - seen

@@ -773,3 +773,52 @@ def test_orc_dataset_sink_and_datastore_source(spark, workdir):
     )
     rows = read_datastore(spark, src).collect()
     assert [r.Key for r in rows] == sorted(r.Key for r in rows) and len(rows) >= 1
+
+
+def test_datastore_windows_expand_their_own_dates(spark, tmp_path):
+    """Each look-back window of a datastore source reads its own date's
+    data: the <dateFormat:> in a DsConfig Parameter expands per window,
+    and the Transfer's own DsConfig is left as configured (a second
+    window, a later run and a concurrent group all start from it)."""
+    import copy
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etly_spark.config import transfer_from_dict
+
+    days = {"20260101": [1, 2], "20260102": [3]}
+    for day, ids in days.items():
+        (tmp_path / "ds" / day).mkdir(parents=True)
+        pq.write_table(
+            pa.table({"APP_ID": [str(i) for i in ids], "NAME": [f"n{i}" for i in ids],
+                      "URL": [f"u{i}" for i in ids]}),
+            str(tmp_path / "ds" / day / "apps.parquet"),
+        )
+    t = transfer_from_dict(
+        {
+            "Name": "ds-dated",
+            "Source": {
+                "Name": "SELECT * FROM apps",
+                "Type": "datastore",
+                "DataType": "test.AppLog1",
+                "DsConfig": {
+                    "DriverName": "parquet",
+                    "Parameters": {"url": "file://<pwd>ds/<dateFormat:yyyyMMdd>"},
+                },
+            },
+            "Target": {"Name": "file://<pwd>out/<dateFormat:yyyyMMdd>/apps.log"},
+            "Transformer": "test.AppLog1ToLog2",
+            "TimeWindow": {"Duration": 2, "Unit": "day"},
+        },
+        base_dir=str(tmp_path) + os.sep,
+    )
+    configured = copy.deepcopy(t.source.ds_config)
+    result = TransferService(spark).run(t, now=datetime(2026, 1, 2, 12, tzinfo=timezone.utc))
+    assert result.status == DONE, result.error
+    for day, ids in days.items():
+        out = tmp_path / "out" / day / "apps.log"
+        assert sorted(json.loads(l)["AppId"] for l in out.read_text().splitlines()) == ids
+    assert result.progress.record_processed == 3
+    assert t.source.ds_config == configured

@@ -380,6 +380,14 @@ def test_purge_ivf_tombstones(spark, tmp_path):
         if n.startswith("epoch=") and not n.startswith("epoch=_compacted-")
     ]
     assert not loose, f"superseded loose epochs survived: {loose}"
+    # the segment's dir names its epoch; its files carry no epoch column
+    import glob
+
+    import pyarrow.parquet as pq
+
+    seg_files = glob.glob(os.path.join(post, "epoch=_compacted-*", "*.parquet"))
+    assert seg_files
+    assert all("epoch" not in pq.read_schema(f).names for f in seg_files)
     assert stats["bytes_after"] < stats["bytes_before"]
     assert stats["live_rows"] == spark.read.parquet(post).count()
     assert _rows(_probe_ivf_index(spark, d)) == before and len(before) > 0

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,8 +63,17 @@ def read_datastore(spark: SparkSession, source: Source) -> DataFrame:
             )
         else:
             df = spark.read.json(path)
-        df.createOrReplaceTempView(table)
-        return spark.sql(sql)
+        # a per-call view name: the session is shared by concurrent
+        # window groups, so a view under the bare table name could be
+        # replaced by another group's read between registration and
+        # analysis (or replace a caller's own view of that name); the
+        # analyzed query keeps its plan after the view is dropped
+        view = f"etly_ds_{uuid.uuid4().hex}"
+        df.createTempView(view)
+        try:
+            return spark.sql(sql[: m.start(1)] + view + sql[m.end(1) :])
+        finally:
+            spark.catalog.dropTempView(view)
 
     if driver == "jdbc":
         reader = spark.read.format("jdbc").option("url", params.get("url", ""))

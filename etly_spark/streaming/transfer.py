@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from etly_spark.config import Transfer
 from etly_spark.meta import Meta
 from etly_spark.pipeline import (
+    KEEP,
     TransferResult,
     TransferService,
     _file_stats,
@@ -162,22 +163,23 @@ class StreamingTransferService:
     ) -> None:
         """One micro-batch = one etly worker sweep, a one-window batch
         through the batch engine's chain and ledger steps; $batchCount
-        is the micro-batch id. The micro-batch is persisted: the sink
-        and the per-file ledger stats both read it."""
+        is the micro-batch id. The micro-batch is persisted: the
+        per-file ledger stats and the sink both read it. The stats run
+        first, as the batch's one driver collect: their rows name the
+        batch's files (routing keys, ledger entries) and carry the
+        ledger counts."""
         bdf = bdf.persist()
         try:
-            files = [r[0] for r in bdf.select(FILE).distinct().collect()]
-            if not files:
-                return
             svc = self._batch
-            w = _UrlWindow(ts=ts, target_template=target_template, eligible=files)
+            stats = _file_stats(bdf.withColumn(KEEP, svc._keep_column(bdf, t)))
+            if not stats:
+                return
+            w = _UrlWindow(ts=ts, target_template=target_template, eligible=sorted(stats))
             keys = svc._file_keys(t, [w])
             key_col = svc._routed_key_column(t, keys, batch_count=epoch_id)
-            flagged, _, _, _ = svc._run_chain(t, bdf, [w], key_col)
+            svc._run_chain(t, bdf, [w], key_col)
             meta = Meta.load(meta_url)
-            svc._record_ledger(
-                meta, meta_url, [w], _file_stats(flagged), keys, TransferResult(name=t.name)
-            )
+            svc._record_ledger(meta, meta_url, [w], stats, keys, TransferResult(name=t.name))
             meta.save()
         finally:
             bdf.unpersist()

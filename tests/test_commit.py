@@ -376,7 +376,11 @@ def test_transfer_chain_steps_are_the_only_sites():
     the batch Observation, the E1 raise and the sink calls
     (fold_window_into_index, _write_routed) appear only in
     pipeline.TransferService._run_chain, and an ObjectMeta built from
-    per-file stats only in pipeline.TransferService._record_ledger."""
+    per-file stats only in pipeline.TransferService._record_ledger. The
+    per-file stats job (_file_stats) is used once in _run_chain, which
+    runs it beside the sink, and once in the streaming _process_batch,
+    as the micro-batch's one collect: a sequential second stats pass
+    after the sink cannot come back."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "etly_spark"
     home = {
         "Observation": "_run_chain",
@@ -393,9 +397,12 @@ def test_transfer_chain_steps_are_the_only_sites():
         return node.attr if isinstance(node, ast.Attribute) else None
 
     found, seen = [], set()
+    stats_uses: dict[tuple[str, str], int] = {}
 
     def visit(node, where: str, fn: str) -> None:
         for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Name) and child.id == "_file_stats":
+                stats_uses[(where, fn)] = stats_uses.get((where, fn), 0) + 1
             name = None
             if isinstance(child, ast.Raise) and child.exc is not None:
                 exc = child.exc.func if isinstance(child.exc, ast.Call) else child.exc
@@ -418,3 +425,7 @@ def test_transfer_chain_steps_are_the_only_sites():
         visit(ast.parse(path.read_text(), str(path)), str(path.relative_to(pkg)), "")
     assert not found, found
     assert seen == set(home), set(home) - seen
+    assert stats_uses == {
+        ("pipeline.py", "_run_chain"): 1,
+        ("streaming/transfer.py", "_process_batch"): 1,
+    }, stats_uses

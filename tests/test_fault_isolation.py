@@ -87,6 +87,10 @@ def test_bad_file_isolated_good_file_lands(spark, faultdir):
     svc = TransferService(spark)
     result = svc.run(cfg.transfers[0])
     assert result.status == DONE, result.error
+    # the failed batch's per-file stats job (a helper thread beside the
+    # sink) was joined before the run returned: no job outlives it
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
 
     # healthy file's records landed
     out = faultdir / "out" / "good.log.gz"

@@ -822,3 +822,29 @@ def test_datastore_windows_expand_their_own_dates(spark, tmp_path):
         assert sorted(json.loads(l)["AppId"] for l in out.read_text().splitlines()) == ids
     assert result.progress.record_processed == 3
     assert t.source.ds_config == configured
+
+
+def test_datastore_read_leaves_session_views_alone(spark, tmp_path):
+    """read_datastore resolves its table under a view name of its own:
+    a session view already registered under the table's name (another
+    window group's read, or the caller's own view) is neither replaced
+    nor read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etly_spark.config import Source
+    from etly_spark.sources.datastore import read_datastore
+
+    pq.write_table(pa.table({"APP_ID": ["1", "2"]}), str(tmp_path / "apps.parquet"))
+    spark.createDataFrame([("sentinel",)], "APP_ID string").createOrReplaceTempView("apps")
+    try:
+        src = Source(
+            name="SELECT APP_ID FROM apps",
+            type="datastore",
+            ds_config={"DriverName": "parquet", "Parameters": {"url": f"file://{tmp_path}"}},
+        )
+        rows = read_datastore(spark, src).collect()
+        assert sorted(r.APP_ID for r in rows) == ["1", "2"]
+        assert [r.APP_ID for r in spark.table("apps").collect()] == ["sentinel"]
+    finally:
+        spark.catalog.dropTempView("apps")

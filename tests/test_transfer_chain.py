@@ -9,6 +9,8 @@ batch path."""
 from __future__ import annotations
 
 import os
+import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,3 +141,72 @@ def test_stream_ledger_reaches_sidecar(spark, tmp_path):
     sources = set(Meta.load(str(tmp_path / "meta.json")).processed)
     assert len(sources) == len(FILES)
     assert ProcessedIndex(str(tmp_path / "meta.json")).processed_among(sources) == sources
+
+
+def _drain_listener_bus(spark) -> None:
+    """The status tracker is fed asynchronously by the listener bus;
+    drain it so job starts and ends submitted so far are visible."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_ledger_stats_jobs_run_in_the_callers_job_group(spark, tmp_path):
+    """The per-file stats job runs on a helper driver thread beside the
+    sink; it inherits the caller's job group, so a TimeOut cancel
+    (service._run_bounded cancels by job group) reaches it too. Every
+    job submitted between two marker jobs — the run's sink and stats
+    jobs at least — is in the run's group."""
+    t = _transfer(tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex
+
+    def in_group(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    in_group(f"before-{tag}", lambda: spark.range(1).collect())
+    res = in_group(f"run-{tag}", lambda: TransferService(spark).run(t))
+    assert res.status == DONE, res.error
+    in_group(f"after-{tag}", lambda: spark.range(1).collect())
+    _drain_listener_bus(spark)
+
+    lo = max(tracker.getJobIdsForGroup(f"before-{tag}"))
+    hi = min(tracker.getJobIdsForGroup(f"after-{tag}"))
+    during = set(range(lo + 1, hi))
+    assert len(during) >= 2, during  # the sink job and the stats job
+    assert during <= set(tracker.getJobIdsForGroup(f"run-{tag}")), during
+
+
+def test_stream_micro_batch_collects_once(spark, tmp_path, monkeypatch):
+    """A streaming micro-batch makes ONE driver collect: the per-file
+    stats rows name the batch's files and carry the ledger counts (no
+    separate distinct-FILE collect)."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    per_batch: list[int] = []
+    inside = threading.local()
+    collect = ClassicDataFrame.collect
+    process = StreamingTransferService._process_batch
+
+    def counted_collect(self):
+        if getattr(inside, "on", False):
+            per_batch[-1] += 1
+        return collect(self)
+
+    def counted_process(self, *args, **kwargs):
+        per_batch.append(0)
+        inside.on = True
+        try:
+            return process(self, *args, **kwargs)
+        finally:
+            inside.on = False
+
+    monkeypatch.setattr(ClassicDataFrame, "collect", counted_collect)
+    monkeypatch.setattr(StreamingTransferService, "_process_batch", counted_process)
+    t = _transfer(tmp_path)
+    assert _stream(spark, t).exception() is None
+    assert per_batch == [1], per_batch
+    assert {name: c for name, (c, _) in _ledger(tmp_path).items()} == COUNTS

@@ -2,11 +2,12 @@
 
 Shared by the meta ledger sidecar (one ``run_ts=…`` partition per
 window, pipeline.py), the streaming indices (one ``epoch=…`` partition
-per micro-batch, streaming/dedup.py) and the incremental ANN and BM25
-indices (queries/similarity.py, operators/bm25.py): all append one
-small partition per unit of work — the write pattern that is O(new)
-per run but accumulates directories forever. When loose partitions
-exceed ``threshold`` they fold into a numbered
+per micro-batch, streaming/dedup.py), the incremental ANN and BM25
+indices (queries/similarity.py, operators/bm25.py) and the rollup
+state (one ``epoch=…`` partial per fold, operators/incremental_agg.py):
+all append one small partition per unit of work — the write pattern
+that is O(new) per run but accumulates directories forever. When loose
+partitions exceed ``threshold`` they fold into a numbered
 ``<key>=_compacted-NNNNNN`` segment that is NEVER rewritten (tiered),
 so amortized compaction cost per run stays O(that run's rows) and
 directory count stays bounded at any run count.
@@ -21,12 +22,20 @@ covered dir are seen once, inside its segment, from the instant the
 segment commits. Removing covered dirs is storage cleanup that
 ``commit_segment`` and ``compact_partitions`` do; no reader waits for
 it.
+
+Manifests are cumulative: a segment covering other segments (a purge,
+a rollup compaction) carries their entries forward, so
+``folded_partitions`` — a retried fold's refusal list — names every
+partition the root ever folded. ``commit_segment`` also reclaims the
+root's day-old ``_tmp-*``/``_old-*`` crash leftovers.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import time
 from collections.abc import Callable
 
 from etly_spark.io.commit import publish_dir, remove_dir
@@ -83,7 +92,7 @@ def _covered(root: str, key: str, names: list[str]) -> dict[str, list]:
 
 def folded_partitions(root: str, key: str) -> set[str]:
     """Names whose rows a committed segment holds, whether or not the
-    dir is still on disk."""
+    dir — or the segment that first absorbed it — is still on disk."""
     return set(_covered(root, key, _partitions(root, key)))
 
 
@@ -134,6 +143,27 @@ def next_segment(root: str, key: str, kind: str = "_compacted") -> str:
     return os.path.join(root, f"{pre}{hi + 1:06d}")
 
 
+def _sweep_leftovers(root: str) -> None:
+    """Delete the ``_tmp-*``/``_old-*`` leftovers of crashed io/commit
+    writes under ``root`` once nothing in them is newer than a day:
+    another process may still be writing its tmp, and a Spark write's
+    _temporary/ files keep a live tmp's newest mtime fresh."""
+    for d in os.listdir(root):
+        if not d.startswith(("_tmp-", "_old-")):
+            continue
+        p = os.path.join(root, d)
+        try:
+            files = [os.path.join(dp, f) for dp, _dd, ff in os.walk(p) for f in ff]
+            if max(map(os.path.getmtime, [p, *files])) >= time.time() - 86400:
+                continue
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.unlink(p)
+        except OSError:
+            continue  # vanished mid-listing (its writer finished)
+
+
 def commit_segment(
     root: str,
     key: str,
@@ -144,7 +174,8 @@ def commit_segment(
     """Publish a never-rewritten segment under the next
     ``<key>=<kind>-NNNNNN`` name: ``write(tmp)`` fills it, the
     ``_folded.json`` manifest records the content marker of every
-    ``covered`` dir, and the covered dirs are removed after the commit.
+    ``covered`` dir plus every entry of the covered segments' own
+    manifests, and the covered dirs are removed after the commit.
     Dirs an earlier segment already covers are removed first, so
     removing a covered segment never uncovers anything.
 
@@ -153,7 +184,8 @@ def commit_segment(
     overlapping one raises RuntimeError and removes nothing (its
     segment already holds some of our rows). Returns the segment path."""
     recover_covered_partitions(root, key)
-    markers = {d: partition_marker(os.path.join(root, d)) for d in covered}
+    markers = _covered(root, key, covered)
+    markers.update({d: partition_marker(os.path.join(root, d)) for d in covered})
 
     def _write(tmp: str) -> None:
         write(tmp)
@@ -170,6 +202,7 @@ def commit_segment(
             raise RuntimeError(f"{seg}: overlapping segment committed concurrently")
     for d in covered:
         remove_dir(os.path.join(root, d))
+    _sweep_leftovers(root)
     return seg
 
 
@@ -177,7 +210,7 @@ def supersede_partitions(
     root: str, key: str, write: Callable[[str, int], object]
 ) -> str:
     """Commit one segment covering every live partition of ``root``
-    (the tombstone purge's rewrite). ``write(tmp, n)`` fills it from
+    (a tombstone purge's rewrite, a rollup compaction). ``write(tmp, n)`` fills it from
     those ``n`` partitions' rows."""
     covered = live_partitions(root, key)
     return commit_segment(root, key, lambda tmp: write(tmp, len(covered)), covered)

@@ -40,6 +40,7 @@ from etly_spark.io.commit import replace_dir
 from etly_spark.io.compact import (
     compact_partitions,
     dir_bytes,
+    live_partitions,
     read_live,
     supersede_partitions,
 )
@@ -114,7 +115,7 @@ def probe_bm25_index(
     tot = stats.agg(
         F.sum("n_docs").alias("_n"), F.sum("sum_dl").alias("_s")
     )
-    if os.path.isdir(tomb_dir):
+    if live_partitions(tomb_dir, "epoch"):
         doomed = read_live(spark, tomb_dir, "epoch").select("doc_id").distinct()
         dead = dl.join(F.broadcast(doomed), "doc_id").agg(
             F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("_dn"),
@@ -221,7 +222,7 @@ def purge_bm25_tombstones(spark, index_dir: str) -> dict:
     bytes_before = dir_bytes(post, dlen, stat, tomb)
     doomed = (
         read_live(spark, tomb, "epoch").select("doc_id").distinct()
-        if os.path.isdir(tomb)
+        if live_partitions(tomb, "epoch")
         else None
     )
     n_docs_before = read_live(spark, dlen, "epoch").count()

@@ -11,19 +11,20 @@ per-run work is O(batch + key cardinality), never O(history).
 This module is the batch twin of the streaming epoch fold
 (streaming/dedup.py:start_feature_index) with the one property record
 indexes don't need: MERGE-AWARENESS. A replayed or compacted partial
-must never double-count, so the store tracks which epochs each
-compacted segment covers.
+must never double-count, so a fold refuses any epoch a committed
+segment already holds.
 
-Layout under ``state_dir``::
+Layout under ``state_dir``: an io/compact segment log keyed ``epoch``::
 
-    epoch=<K>/        one parquet dir per fold (partial agg rows,
-                      key-cardinality sized; replay overwrites its own
-                      epoch — idempotent)
-    base-<N>/         compacted segment: the merge of every epoch in
-                      its ``_covered.json``; reader uses ONLY the
-                      highest-numbered base + loose epochs not covered
-                      by it, so a crash between commit and cleanup
-                      cannot double-count
+    epoch=<K>/              one parquet dir per fold (partial agg rows,
+                            key-cardinality sized; replay overwrites its
+                            own epoch — idempotent)
+    epoch=_compacted-<N>/   the merge of the previous segment and the
+                            loose epochs; its cumulative manifest names
+                            every epoch ever merged
+
+The reader merges the live partitions (io/compact.live_partitions), so
+a crash between a segment's commit and its cleanup cannot double-count.
 
 Aggregates are declared as ``merges: {column: 'sum'|'min'|'max'}`` over
 partial columns the caller computes (count -> sum of partial counts,
@@ -38,20 +39,19 @@ to the relational surface.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import threading
-import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etly_spark.io.commit import publish_dir, replace_dir
+from etly_spark.io.commit import replace_dir
+from etly_spark.io.compact import folded_partitions, live_partitions, supersede_partitions
 
 # One lock per state dir (process-level): concurrent driver threads may
 # share one rollup state, and two unsynchronized compact() calls would
-# race for the same base-N name. Folds of distinct epochs are
+# race for the same segment name. Folds of distinct epochs are
 # write-disjoint but cheap to serialize alongside.
 _STATE_LOCKS: dict[str, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
@@ -79,33 +79,36 @@ def hll_estimate(col) -> F.Column:
     return F.hll_sketch_estimate(col)
 
 
-def _bases(state_dir: str) -> list[str]:
+def _check_layout(state_dir: str) -> None:
+    """Refuse a state dir holding a dir other than ``epoch=`` partitions
+    and hidden ``_``/``.`` entries: the segment-log reader would skip
+    the compacted bases of the earlier layout and undercount."""
     if not os.path.isdir(state_dir):
-        return []
-    return sorted(d for d in os.listdir(state_dir) if d.startswith("base-"))
+        return
+    for d in sorted(os.listdir(state_dir)):
+        if not d.startswith(("epoch=", "_", ".")) and os.path.isdir(
+            os.path.join(state_dir, d)
+        ):
+            raise ValueError(
+                f"rollup state {state_dir} holds {d}/, a compacted base of an "
+                "earlier layout: compacted rollups are now epoch=_compacted-* "
+                "segments of one segment log. Refold into a fresh state dir."
+            )
 
 
-def _covered(state_dir: str) -> set[str]:
-    """Epochs already merged into the highest-numbered base. Epoch ids
-    are strings (ints from streaming epoch_ids and test folds stringify;
-    the pipeline's per-file folds use full md5 hex — collision-free
-    without squeezing into an int)."""
-    bases = _bases(state_dir)
-    if not bases:
-        return set()
-    manifest = os.path.join(state_dir, bases[-1], "_covered.json")
-    with open(manifest) as fh:
-        return {str(e) for e in json.load(fh)["epochs"]}
-
-
-def _loose_epochs(state_dir: str) -> dict[str, str]:
-    if not os.path.isdir(state_dir):
-        return {}
-    out = {}
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch="):
-            out[d.split("=", 1)[1]] = os.path.join(state_dir, d)
-    return out
+def _fold_epoch(state_dir: str, epoch: int | str, write: Callable[[str], object]) -> bool:
+    """Commit ``write``'s partial as ``epoch=<epoch>``, replacing a
+    replayed one, unless a committed segment already holds that epoch
+    (applying it again would double-count). Epoch ids are strings (ints
+    from streaming epoch_ids and test folds stringify; the pipeline's
+    per-file folds use full md5 hex — collision-free without squeezing
+    into an int)."""
+    with _state_lock(state_dir):
+        _check_layout(state_dir)
+        if f"epoch={epoch}" in folded_partitions(state_dir, "epoch"):
+            return False
+        replace_dir(os.path.join(state_dir, f"epoch={epoch}"), write)
+        return True
 
 
 def fold(
@@ -120,19 +123,13 @@ def fold(
 
     ``partial`` must already be aggregated per ``keys`` (one shuffle
     over the BATCH only — history is never read). Replaying an epoch
-    overwrites its own directory; an epoch already merged into a base
-    segment is skipped entirely. Returns True if the fold was applied,
-    False if it was a no-op replay of a compacted epoch."""
-    epoch = str(epoch)
-    with _state_lock(state_dir):
-        if epoch in _covered(state_dir):
-            return False
-        cols = list(keys) + list(merges)
-        replace_dir(
-            os.path.join(state_dir, f"epoch={epoch}"),
-            lambda tmp: partial.select(*cols).write.parquet(tmp),
-        )
-        return True
+    overwrites its own directory; an epoch already merged into a
+    compacted segment is skipped entirely. Returns True if the fold was
+    applied, False if it was a no-op replay of a compacted epoch."""
+    cols = list(keys) + list(merges)
+    return _fold_epoch(
+        state_dir, epoch, lambda tmp: partial.select(*cols).write.parquet(tmp)
+    )
 
 
 def read(
@@ -142,18 +139,17 @@ def read(
     keys: list[str],
     merges: dict[str, str],
 ) -> DataFrame:
-    """The current aggregate: highest base segment + uncovered loose
-    epochs, merged. Input rows number (covered keys + per-epoch keys),
-    so this is a small-table merge at any history length."""
-    bases = _bases(state_dir)
-    covered = _covered(state_dir)
-    parts = []
-    if bases:
-        parts.append(os.path.join(state_dir, bases[-1], "data"))
-    parts += [p for e, p in sorted(_loose_epochs(state_dir).items()) if e not in covered]
-    if not parts:
+    """The current aggregate: the live partitions (the compacted segment
+    + the loose epochs it does not cover), merged. Input rows number
+    (segment keys + per-epoch keys), so this is a small-table merge at
+    any history length."""
+    _check_layout(state_dir)
+    live = live_partitions(state_dir, "epoch")
+    if not live:
         raise FileNotFoundError(f"no folded state under {state_dir}")
-    df = spark.read.parquet(*parts)
+    # leaf paths, no basePath: a partition-discovered epoch column would
+    # override a rollup key of the same name
+    df = spark.read.parquet(*(os.path.join(state_dir, d) for d in live))
     return df.groupBy(*keys).agg(
         *[_MERGE_FNS[kind](c).alias(c) for c, kind in merges.items()]
     )
@@ -167,57 +163,21 @@ def compact(
     merges: dict[str, str],
     threshold: int = 16,
 ) -> bool:
-    """Merge base + loose epochs into one new base segment once loose
-    epochs exceed ``threshold``. Aggregate rows are key-cardinality
-    sized, so full re-merge is cheap; the new base is published BEFORE
-    old dirs are removed, and the reader's
-    highest-base-wins rule makes the worst crash outcome some
-    un-reclaimed disk, never a double count."""
+    """Supersede every live partition (the previous segment + the
+    loose epochs) with one merged segment once loose epochs exceed
+    ``threshold`` (io/compact.supersede_partitions). Aggregate rows are
+    key-cardinality sized, so the full re-merge is cheap; the segment
+    is committed before the dirs it covers are removed, so the worst
+    crash outcome is some un-reclaimed disk, never a double count."""
     with _state_lock(state_dir):
-        loose = _loose_epochs(state_dir)
-        covered = _covered(state_dir)
-        fresh = {e: p for e, p in loose.items() if e not in covered}
-        if len(fresh) <= threshold:
+        _check_layout(state_dir)
+        loose = [
+            d for d in live_partitions(state_dir, "epoch") if not d.startswith("epoch=_")
+        ]
+        if len(loose) <= threshold:
             return False
         merged = read(spark, state_dir, keys=keys, merges=merges)
-        bases = _bases(state_dir)
-        n_next = (int(bases[-1].split("-")[1]) + 1) if bases else 1
-        epochs = covered | set(fresh)
-
-        def write(tmp: str) -> None:
-            merged.write.parquet(os.path.join(tmp, "data"))
-            with open(os.path.join(tmp, "_covered.json"), "w") as fh:
-                json.dump({"epochs": sorted(epochs)}, fh)
-
-        final = publish_dir(os.path.join(state_dir, f"base-{n_next:06d}"), write)
-        if _covered(state_dir) != epochs:
-            # another process committed this base first: its coverage
-            # differs, so the loose epochs below are not ours to drop
-            raise RuntimeError(f"{final}: committed by a concurrent compaction")
-        # cleanup (best-effort: reader ignores superseded dirs
-        # regardless); loose dirs of already-covered epochs are crash
-        # leftovers — sweep
-        for b in bases:
-            shutil.rmtree(os.path.join(state_dir, b), ignore_errors=True)
-        for e in loose:
-            shutil.rmtree(os.path.join(state_dir, f"epoch={e}"), ignore_errors=True)
-        # sweep crash leftovers (_tmp-*/_old-*, see io/commit). Another
-        # process sharing this state_dir may still be writing its _tmp,
-        # so only dirs with no file newer than a day go: a Spark write's
-        # _temporary/ files keep a live tmp's recursive mtime fresh.
-        cutoff = time.time() - 86400
-        for d in os.listdir(state_dir):
-            if d.startswith(("_tmp-", "_old-")):
-                p = os.path.join(state_dir, d)
-                try:
-                    newest = os.path.getmtime(p)
-                    for root, _dirs, files in os.walk(p):
-                        for f in files:
-                            newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-                except OSError:
-                    continue  # vanished mid-listing (its writer finished)
-                if newest < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
+        supersede_partitions(state_dir, "epoch", lambda tmp, _n: merged.write.parquet(tmp))
         return True
 
 
@@ -320,36 +280,27 @@ def fold_rows(
     pyarrow Schema in cols order) pins the parquet types. Without it a
     ZERO-ROW partial (a file whose rows were all filtered/corrupt)
     arrow-infers every column as null — and if compact() runs while
-    only such empty epochs are uncovered, the base segment commits with
+    only such empty epochs are loose, the compacted segment commits with
     the wrong schema and every later read/compact fails permanently
     with a parquet type mismatch. Callers that can see a Spark schema
     must pass it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    epoch = str(epoch)
-    with _state_lock(state_dir):
-        if epoch in _covered(state_dir):
-            return False
-        cols = list(keys) + list(merges)
-        arrow_schema = None
-        if schema is not None:
-            if isinstance(schema, pa.Schema):
-                arrow_schema = schema
-            else:
-                from pyspark.sql.pandas.types import to_arrow_schema
-                from pyspark.sql.types import StructType
+    cols = list(keys) + list(merges)
+    arrow_schema = None
+    if schema is not None:
+        if isinstance(schema, pa.Schema):
+            arrow_schema = schema
+        else:
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
 
-                arrow_schema = to_arrow_schema(
-                    StructType([schema[c] for c in cols])
-                )
-        table = pa.Table.from_pandas(
-            pdf[cols], schema=arrow_schema, preserve_index=False
-        )
+            arrow_schema = to_arrow_schema(StructType([schema[c] for c in cols]))
 
-        def write(tmp: str) -> None:
-            os.makedirs(tmp)
-            pq.write_table(table, os.path.join(tmp, "part-0.parquet"))
+    def write(tmp: str) -> None:
+        table = pa.Table.from_pandas(pdf[cols], schema=arrow_schema, preserve_index=False)
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-0.parquet"))
 
-        replace_dir(os.path.join(state_dir, f"epoch={epoch}"), write)
-        return True
+    return _fold_epoch(state_dir, epoch, write)

@@ -830,7 +830,7 @@ def purge_ivf_tombstones(spark: SparkSession, index_dir: str) -> dict:
         live = live.where(
             ~(F.col("parent").isNull() & F.col(key).isin(split_parents))
         )
-    if os.path.isdir(tomb):
+    if live_partitions(tomb, "epoch"):
         live = live.join(
             F.broadcast(read_live(spark, tomb, "epoch").select("vec_id")),
             "vec_id",
@@ -1240,7 +1240,7 @@ def _probe_ivf_index(
         # the cell id alone at ANY split depth.
         assign = assign.where(~F.col("cent_id").isin(parents))
     tomb_dir = os.path.join(d, "tombstones")
-    if os.path.isdir(tomb_dir):
+    if live_partitions(tomb_dir, "epoch"):
         # the deletion side-table is result-density-sized; broadcast it
         # so the anti-join never shuffles the postings scan
         assign = assign.join(
@@ -3319,7 +3319,7 @@ def _probe_ivfpq_index(
     probed = sorted({leaf for _q, leaf in leaf_pairs})
     cand = posts.where(F.col("cent_id").isin(probed))
     tomb_dir = os.path.join(d, "tombstones")
-    if os.path.isdir(tomb_dir):
+    if live_partitions(tomb_dir, "epoch"):
         cand = cand.join(
             F.broadcast(read_live(spark, tomb_dir, "epoch").select("vec_id")),
             "vec_id",

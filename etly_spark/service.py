@@ -302,14 +302,14 @@ class Service:
                 state = expand_env(expand_pwd(t.rollup.state_dir, t.base_dir))
                 _, merges = IA.rollup_plan(t.rollup.aggregates)
                 try:
-                    # a concurrent compact()'s post-rename cleanup can
+                    # a concurrent compact()'s post-commit cleanup can
                     # delete the dirs a read just resolved — a
                     # transient race. Holding IA's state lock across
                     # the collect would fix it but stalls every fold()
                     # behind a monitoring poll's Spark job; instead
                     # retry once (the second resolve sees the
-                    # post-compact state, which is complete by the
-                    # highest-base-wins rule).
+                    # post-compact state, which is complete: the new
+                    # segment's manifest covers every dir it merged).
                     from pyspark.sql import functions as F
 
                     last_exc: Exception | None = None
@@ -334,15 +334,15 @@ class Service:
                             break
                         except Exception as retry_exc:
                             # FileNotFoundError is ALSO retried: the
-                            # compact-cleanup race can surface as the
-                            # old base's _covered.json vanishing, which
+                            # compact-cleanup race can surface as a
+                            # covered dir vanishing mid-listing, which
                             # must not masquerade as an empty state
                             last_exc = retry_exc
                     if collected is None:
                         if isinstance(last_exc, FileNotFoundError) and not (
                             os.path.isdir(state)
                             and any(
-                                d.startswith(("base-", "epoch="))
+                                d.startswith("epoch=")
                                 for d in os.listdir(state)
                             )
                         ):

@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame
 
 from etly_spark.io.commit import publish_dir
-from etly_spark.io.compact import read_live
+from etly_spark.io.compact import live_partitions, read_live
 
 
 def start_ivf_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
@@ -177,7 +177,7 @@ def start_bm25_index(stream: DataFrame, index_dir: str, checkpoint_dir: str):
         if has_adds:
             adds = adds.select("doc_id", "text")
             tomb = os.path.join(index_dir, "tombstones")
-            if os.path.isdir(tomb):
+            if live_partitions(tomb, "epoch"):
                 # ADD-ONCE/DELETE-FINAL enforcement (r14, ADVICE): an
                 # 'add' of an already-tombstoned doc_id would fold rows
                 # the probe's global anti-join hides forever — corrupt

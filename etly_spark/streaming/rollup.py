@@ -19,7 +19,16 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from etly_spark.io.commit import write_file
 from etly_spark.operators import incremental_agg as IA
+
+
+def _write_json(path: str, obj: dict) -> None:
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+
+    write_file(path, write)
 
 
 def _bind_checkpoint(state_dir: str, checkpoint: str) -> None:
@@ -55,12 +64,10 @@ def _bind_checkpoint(state_dir: str, checkpoint: str) -> None:
     import uuid
 
     bind_id = uuid.uuid4().hex
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(cp, exist_ok=True)
-    with open(cp_sentinel, "w") as fh:
-        json.dump({"bind_id": bind_id}, fh)
-    with open(marker, "w") as fh:
-        json.dump({"checkpoint": cp, "bind_id": bind_id}, fh)
+    # sentinel first, marker last: a crash between (or inside) the two
+    # commits leaves no marker, so the next start binds afresh
+    _write_json(cp_sentinel, {"bind_id": bind_id})
+    _write_json(marker, {"checkpoint": cp, "bind_id": bind_id})
 
 
 def start_rollup(

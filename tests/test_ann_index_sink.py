@@ -200,6 +200,35 @@ def test_retried_batch_after_encode_folds_nothing(spark, tmp_path):
     assert after == before and len(before) > 0
 
 
+def test_retried_batch_after_purge_folds_nothing(spark, tmp_path):
+    """A purge supersedes the codes segment that absorbed a batch's raw
+    epoch. The segment's manifest carries that epoch forward, so a
+    retry of the batch still folds no adds, and the probe lists each
+    neighbour once per query, as before the retry."""
+    from etly_spark.operators.ann_index_sink import fold_window_into_index
+    from etly_spark.queries.similarity import purge_ivf_tombstones
+
+    index_dir = str(tmp_path / "index")
+    opts = {"AnticipatedShards": SHARDS, "EncodeEvery": 1}
+    shards = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+
+    def batch(e: int):
+        return shards.where(F.col("vec_id") % SHARDS == e)
+
+    for e in range(2):
+        fold_window_into_index(spark, batch(e), index_dir, f"k{e}", opts)
+    q_pdf = _query_pdf(_normed(load_table(spark, SF, "embeddings")))
+    before = sorted(map(tuple, _probe_ivfpq_index(spark, index_dir, q_pdf).collect()))
+    purge_ivf_tombstones(spark, index_dir)
+    assert fold_window_into_index(spark, batch(1), index_dir, "k1", opts) == []
+    post = os.path.join(index_dir, "postings")
+    assert os.listdir(post) == ["epoch=_compacted-000001"]
+    probe = _probe_ivfpq_index(spark, index_dir, q_pdf).collect()
+    pairs = [(r["query_id"], r["neighbor_id"]) for r in probe]
+    assert len(pairs) == len(set(pairs))
+    assert sorted(map(tuple, probe)) == before and len(before) > 0
+
+
 def test_worker_rpc_folds_into_index(spark, tmp_path):
     """The worker RPC (run_object) follows Target.TransferMethod like a
     batch run: an annIndexFold target folds the object into its index

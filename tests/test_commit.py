@@ -346,14 +346,15 @@ def test_segment_log_internals_stay_in_compact_module():
     """Gate: under etly_spark/, the segment log's internals — covered-dir
     recovery, content markers, segment numbering and the manifest file
     name — appear only in io/compact.py; every other module goes through
-    live_partitions / read_live / commit_segment / compact_partitions."""
+    live_partitions / read_live / commit_segment / compact_partitions.
+    No module anywhere keeps a second coverage format: the rollup
+    store's old ``_covered.json`` manifest and ``base-`` segment prefix
+    may not come back."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "etly_spark"
     private = {"recover_covered_partitions", "partition_marker", "next_segment"}
     allowed = pkg / "io" / "compact.py"
     found = []
     for path in sorted(pkg.rglob("*.py")):
-        if path == allowed:
-            continue
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             names = set()
             if isinstance(node, ast.Name):
@@ -363,10 +364,54 @@ def test_segment_log_internals_stay_in_compact_module():
             elif isinstance(node, ast.ImportFrom):
                 names = {a.name for a in node.names}
             elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                names = {"_folded.json"} if "_folded.json" in node.value else set()
-            for n in sorted(names & (private | {"_folded.json"})):
+                names = {n for n in ("_folded.json", "_covered.json") if n in node.value}
+                if node.value.startswith("base-"):
+                    names.add("base-")
+            banned = {"_covered.json", "base-"}
+            if path != allowed:
+                banned |= private | {"_folded.json"}
+            for n in sorted(names & banned):
                 found.append(f"{path.relative_to(pkg)}:{node.lineno}:{n}")
     assert not found, found
+
+
+def test_folded_partitions_survive_a_supersede(tmp_path):
+    """Manifests are cumulative: after a purge supersedes the segment
+    that absorbed ``k=abc``, ``folded_partitions`` still names it (a
+    retried fold of that epoch must be refused), and the content-marker
+    rule still shows a fresh dir under a reused name."""
+    from etly_spark.io import compact
+
+    root = tmp_path / "root"
+    (root / "k=abc").mkdir(parents=True)
+    pq.write_table(_TABLE, str(root / "k=abc" / "part-0.parquet"))
+    commit_segment(str(root), "k", _write_dir, ["k=abc"], kind="_codes")
+    assert compact.folded_partitions(str(root), "k") == {"k=abc"}
+    compact.supersede_partitions(str(root), "k", lambda tmp, _n: _write_dir(tmp))
+    assert sorted(p.name for p in root.iterdir()) == ["k=_compacted-000001"]
+    assert compact.folded_partitions(str(root), "k") == {"k=abc", "k=_codes-000001"}
+    (root / "k=abc").mkdir()
+    pq.write_table(_NEW.slice(0, 1), str(root / "k=abc" / "part-0.parquet"))
+    assert compact.live_partitions(str(root), "k") == ["k=_compacted-000001", "k=abc"]
+
+
+def test_segment_commit_sweeps_day_old_leftovers(tmp_path):
+    """A segment commit deletes the ``_tmp-*``/``_old-*`` leftovers of
+    crashed commits once nothing in them is newer than a day, and keeps
+    a fresh one (another writer may still be filling it)."""
+    import time
+
+    root = tmp_path / "root"
+    _seed(root)
+    stale, fresh = root / "_old-0123456789ab", root / "_tmp-ba9876543210"
+    for d in (stale, fresh):
+        (d / "sub").mkdir(parents=True)
+        (d / "sub" / "part-0").write_bytes(b"x")
+    day_old = time.time() - 2 * 86400
+    for p in (stale / "sub" / "part-0", stale / "sub", stale):
+        os.utime(p, (day_old, day_old))
+    commit_segment(str(root), "k", _write_dir, ["k=1", "k=2"])
+    assert sorted(p.name for p in root.iterdir()) == [fresh.name, "k=_compacted-000001"]
 
 
 def test_transfer_chain_steps_are_the_only_sites():

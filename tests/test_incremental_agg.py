@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from etly_spark.io.compact import folded_partitions
 from etly_spark.operators import incremental_agg as IA
 
 
@@ -93,15 +94,14 @@ def test_compaction_preserves_values_and_skips_covered_replays(spark, tmp_path):
     before = _current(spark, state)
     assert IA.compact(spark, state, keys=KEYS, merges=MERGES, threshold=1)
     assert _current(spark, state) == before
-    # one base, no loose epochs
+    # one compacted segment, no loose epochs
     names = os.listdir(state)
-    assert [d for d in names if d.startswith("base-")] == ["base-000001"]
-    assert not [d for d in names if d.startswith("epoch=")]
+    assert [d for d in names if d.startswith("epoch=")] == ["epoch=_compacted-000001"]
     # replaying a compacted epoch is a refused no-op (it is already
-    # merged into the base — applying it again would double-count)
+    # merged into the segment — applying it again would double-count)
     assert not IA.fold(state, _partial(_batch(spark, BATCHES[0])), 0, keys=KEYS, merges=MERGES)
     assert _current(spark, state) == before
-    # new epochs keep folding on top of the base
+    # new epochs keep folding on top of the segment
     IA.fold(state, _partial(_batch(spark, [("a", 100)])), 9, keys=KEYS, merges=MERGES)
     after = _current(spark, state)
     assert after["a"] == (before["a"][0] + 1, before["a"][1] + 100, before["a"][2], 100)
@@ -315,7 +315,7 @@ def test_any_fold_compact_interleaving_reads_exactly(spark, tmp_path_factory, op
                 state, _partial(_batch(spark, rows)), epoch, keys=KEYS, merges=MERGES
             )
             # a fold is refused exactly when its epoch is compacted
-            assert applied == (str(epoch) not in IA._covered(state))
+            assert applied == (f"epoch={epoch}" not in folded_partitions(state, "epoch"))
             if applied:
                 effective[epoch] = rows
                 folded_any = True
@@ -446,6 +446,81 @@ def test_streaming_rollup_refuses_foreign_checkpoint(spark, tmp_path):
     drain(ck1)  # same checkpoint: fine
     with pytest.raises(ValueError, match="bound to checkpoint"):
         drain(ck2)
+
+
+def test_streaming_rollup_binds_after_torn_marker_write(spark, tmp_path, monkeypatch):
+    """A crash part-way through writing the bind marker leaves no torn
+    ``_stream.json``: the next start binds afresh and folds, instead of
+    failing every later start in json.load."""
+    import json
+
+    from etly_spark.streaming.rollup import start_rollup
+
+    src = tmp_path / "s"
+    src.mkdir()
+    spark.createDataFrame([("a", 1)], "k string, v long").write.parquet(
+        str(src / "p.parquet")
+    )
+    state, ck = str(tmp_path / "st"), str(tmp_path / "ck")
+
+    def drain():
+        stream = spark.readStream.schema("k string, v long").parquet(str(src / "*.parquet"))
+        q = start_rollup(stream, state, ck, keys=["k"], aggregates={"n": "count"})
+        q.awaitTermination(120)
+
+    real_dump = json.dump
+
+    def torn_marker(obj, fh, *a, **kw):
+        if isinstance(obj, dict) and "checkpoint" in obj:
+            text = json.dumps(obj)
+            fh.write(text[: len(text) // 2])
+            raise OSError("crash mid-write")
+        return real_dump(obj, fh, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_marker)
+        with pytest.raises(OSError, match="crash mid-write"):
+            drain()
+    drain()
+    cur = IA.read(spark, state, keys=["k"], merges={"n": "sum"}).collect()
+    assert {r["k"]: r["n"] for r in cur} == {"a": 1}
+
+
+def test_state_in_the_earlier_base_layout_fails_loudly(spark, tmp_path):
+    """A state dir holding a compacted ``base-*`` dir of the earlier
+    layout is refused by read, fold and compact, naming the dir: the
+    segment-log reader would skip it and silently undercount."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    state = tmp_path / "state"
+    IA.fold(str(state), _partial(_batch(spark, BATCHES[1])), 1, keys=KEYS, merges=MERGES)
+    base = state / "base-000001"
+    (base / "data").mkdir(parents=True)
+    table = pa.Table.from_pandas(_partial(_batch(spark, BATCHES[0])).toPandas())
+    pq.write_table(table, str(base / "data" / "part-0.parquet"))
+    (base / "_covered.json").write_text(json.dumps({"epochs": ["0"]}))
+    with pytest.raises(ValueError, match="base-000001.*layout"):
+        IA.read(spark, str(state), keys=KEYS, merges=MERGES)
+    with pytest.raises(ValueError, match="base-000001.*layout"):
+        IA.fold(str(state), _partial(_batch(spark, BATCHES[2])), 2, keys=KEYS, merges=MERGES)
+    with pytest.raises(ValueError, match="base-000001.*layout"):
+        IA.compact(spark, str(state), keys=KEYS, merges=MERGES, threshold=0)
+
+
+def test_rollup_key_named_epoch_keeps_its_values(spark, tmp_path):
+    """The state's partitions are named ``epoch=…``; a rollup keyed by
+    its own ``epoch`` column must still group by that column's values,
+    not by the partition names."""
+    state = str(tmp_path / "state")
+    partial = spark.createDataFrame([("x", 2)], "epoch string, n long")
+    for i, n in enumerate((2, 3)):
+        pdf = spark.createDataFrame([("x", n)], partial.schema).toPandas()
+        IA.fold_rows(state, pdf, i, keys=["epoch"], merges={"n": "sum"}, schema=partial.schema)
+    got = IA.read(spark, state, keys=["epoch"], merges={"n": "sum"}).collect()
+    assert [tuple(r) for r in got] == [("x", 5)]
 
 
 def test_snapshot_delta_equals_interim_folds(spark, tmp_path):
@@ -704,12 +779,12 @@ def test_fold_commits_epoch_dir_atomically(spark, tmp_path):
 
 
 def test_compact_lost_race_keeps_loose_epochs(spark, tmp_path, monkeypatch):
-    """Another process publishing the same base-N with a different
+    """Another process publishing the same segment with an overlapping
     coverage wins the name: compact must fail and keep the loose epochs
-    its base does not cover, not drop them."""
+    its segment does not hold, not drop them."""
     import json
 
-    from etly_spark.io import commit
+    from etly_spark.io import commit, compact
 
     state = str(tmp_path / "state")
     for i, rows in enumerate(BATCHES):
@@ -718,18 +793,20 @@ def test_compact_lost_race_keeps_loose_epochs(spark, tmp_path, monkeypatch):
 
     def rival_first(final, write):
         def rival(tmp):
-            os.makedirs(os.path.join(tmp, "data"))
-            with open(os.path.join(tmp, "_covered.json"), "w") as fh:
-                json.dump({"epochs": ["0"]}, fh)
+            os.makedirs(tmp)
+            with open(os.path.join(tmp, "_folded.json"), "w") as fh:
+                json.dump({"epoch=0": []}, fh)
 
         commit.publish_dir(final, rival)
         return commit.publish_dir(final, write)
 
-    monkeypatch.setattr(IA, "publish_dir", rival_first)
-    with pytest.raises(RuntimeError, match="concurrent compaction"):
+    monkeypatch.setattr(compact, "publish_dir", rival_first)
+    with pytest.raises(RuntimeError, match="committed concurrently"):
         IA.compact(spark, state, keys=KEYS, merges=MERGES, threshold=1)
-    loose = {d for d in os.listdir(state) if d.startswith("epoch=")}
+    loose = {
+        d for d in os.listdir(state) if d.startswith("epoch=") and not d.startswith("epoch=_")
+    }
     assert loose == {f"epoch={i}" for i in range(len(BATCHES))}
     monkeypatch.undo()
-    shutil.rmtree(os.path.join(state, "base-000001"))
+    shutil.rmtree(os.path.join(state, "epoch=_compacted-000001"))
     assert _current(spark, state) == before

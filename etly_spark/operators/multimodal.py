@@ -343,8 +343,11 @@ def entropy_roundtrip_features(
     → html_to_text — operators/warc.py, operators/htmltext.py).
     Fusing them keeps the sampled-branch overhead of
     `mm_binary_metadata` at one filter, one balance repartition, one
-    Python-worker stage (measured ~0.5 s of the ~0.9 s two-stage cost
-    at sf0.1 was worker round-trip, not codec).
+    Python-worker stage: at sf0.1 on local[4] one more Python stage
+    costs 0.16-0.24 s of worker start-up and round-trip with
+    pyspark.daemon and 0.06-0.07 s with `etly_spark/worker_daemon.py`
+    (a no-op mapInPandas over a repartitioned docs slice, beyond its
+    shuffle).
     Columns are the superset: width/height carry image dims for webp
     rows, frames/channels for flac rows, and (http_status,
     records_parsed) for warc rows; ``hdr`` carries the parsed WARC
@@ -950,12 +953,14 @@ def synthesize_y4m_payload(
 
 FRAME_SAMPLE_SCHEMA = StructType(
     [
+        StructField("variant", StringType()),
         StructField("doc_id", LongType()),
         StructField("frame_no", LongType()),
+        StructField("byte_len", LongType()),
+        StructField("byte_sum", LongType()),
         StructField("width", LongType()),
         StructField("height", LongType()),
         StructField("n_frames", LongType()),
-        StructField("f_sum", LongType()),
     ]
 )
 
@@ -968,54 +973,60 @@ def decode_frame_samples(
     """Arrow-batched REAL frame sampling: decode each row's video
     payload (`operators.codecs.decode_video` — Y4M or AVI/MJPEG) and
     emit one row per SAMPLED frame (every ``step``-th) with that
-    frame's decoded luma sum, tagged with the container variant.
+    frame's byte count (w*h) and decoded luma sum, tagged with the
+    container variant. The byte-level featurizer (`_decode_batch`) also
+    runs over each row's ``text`` bytes and samples every ``step``-th
+    of its ``n_frames`` — rows tagged 'stub'.
 
     ``avi`` (dict: w, h, n_frames, every, offset) additionally runs
     the compressed-container round-trip for the 1-in-``every`` doc
-    sample IN THE SAME Python stage: the sampled doc's text is packed
-    into gray frames, wrapped in a REAL AVI container with
-    lossless-JPEG (SOF3) frames (`codecs.encode_mjpeg_avi
-    (lossless=True)`), and fully decoded back through the RIFF walk +
-    JPEG entropy decoder — rows tagged 'avi'. Riding the existing
-    stage instead of spawning its own saves the per-stage
-    Python-worker round-trip that dominated the separate-operator
-    form (~0.5 s of its 0.78 s at sf0.1 — same measurement as the
-    entropy_roundtrip_features fusion).
+    sample: the sampled doc's text is packed into gray frames, wrapped
+    in a REAL AVI container with lossless-JPEG (SOF3) frames
+    (`codecs.encode_mjpeg_avi(lossless=True)`), and fully decoded back
+    through the RIFF walk + JPEG entropy decoder — rows tagged 'avi'.
+
+    All variants ride the one Python stage, for the per-stage worker
+    cost measured at `entropy_roundtrip_features`: `mm_decode_frames`
+    with the stub featurizer in a stage of its own took 0.99 s at sf0.1 on
+    local[4] with pyspark.daemon, fused 0.83-0.87 s, and fused under
+    the worker daemon 0.74-0.76 s (medians of 7 runs per process).
 
     Pure map; per-record memory bounded by the decoder's frame cap;
-    corrupt payloads contribute no rows (a count-level oracle catches
-    silent drops)."""
+    corrupt payloads contribute no frame rows (a count-level oracle
+    catches silent drops)."""
     import pandas as pd
 
     from etly_spark.operators import codecs
 
-    schema = StructType(
-        [StructField("variant", StringType())] + list(FRAME_SAMPLE_SCHEMA.fields)
-    )
-    cols = ["doc_id", "payload"] + (["text"] if avi else [])
     # balance the CPU-heavy decode map across cores: the documents
     # scan is 1-2 files at small SFs, which would serialize the whole
     # per-doc codec work onto as many tasks (same rationale and knob
     # as entropy_roundtrip_features — a keyless shuffle of a slim
     # projected slice)
-    df = df.select(*cols).repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = df.select("doc_id", "payload", "text").repartition(
+        df.sparkSession.sparkContext.defaultParallelism
+    )
+
+    def add(out, *row):
+        for k, v in zip(FRAME_SAMPLE_SCHEMA.names, row):
+            out[k].append(v)
 
     def emit(out, variant, doc_id, frames):
         n, h, w = frames.shape
         for f in range(0, n, step):
-            out["variant"].append(variant)
-            out["doc_id"].append(int(doc_id))
-            out["frame_no"].append(f)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_frames"].append(n)
-            out["f_sum"].append(int(frames[f].astype("int64").sum()))
+            add(out, variant, int(doc_id), f, w * h, int(frames[f].astype("int64").sum()), w, h, n)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
 
         for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in schema.fields}
+            out: dict[str, list] = {k: [] for k in FRAME_SAMPLE_SCHEMA.names}
+            feats = _decode_batch(
+                pd.DataFrame({"doc_id": pdf["doc_id"], "payload": pdf["text"].map(str.encode)})
+            )
+            for r in feats.itertuples(index=False):
+                for f in range(0, r.n_frames, step):
+                    add(out, "stub", r.doc_id, f, r.byte_len, r.byte_sum, r.width, r.height, r.n_frames)
             for row in pdf.itertuples(index=False):
                 dec = codecs.decode_video(row.payload)
                 if dec is not None:
@@ -1030,12 +1041,11 @@ def decode_frame_samples(
                     adec = codecs.decode_video(payload)
                     assert adec is not None and adec[1].shape == frames.shape
                     emit(out, "avi", row.doc_id, adec[1])
-            ints = {f.name for f in FRAME_SAMPLE_SCHEMA.fields}
             yield pd.DataFrame(
                 {
-                    k: (pd.array(v, dtype="int64") if k in ints else v)
+                    k: (v if k == "variant" else pd.array(v, dtype="int64"))
                     for k, v in out.items()
                 }
             )
 
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(run, FRAME_SAMPLE_SCHEMA)

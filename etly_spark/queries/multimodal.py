@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from etly_spark.io.tables import load_table
 from etly_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_features,
     decode_frame_samples,
     decode_pixel_features,
     entropy_roundtrip_features,
@@ -276,9 +275,9 @@ def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY variant, doc_id, frame_no
     """,
     doc="Decode → frame-sample, three tagged variants in one checked "
-    "row. 'stub' — Arrow-batched pandas decode stand-in (byte stats, "
-    "resize geometry) + every-2nd-frame sampling as an explode (the "
-    "plan shape, codec stubbed). 'y4m' — the SAME pipeline with a REAL "
+    "row, all from ONE Arrow-batched Python stage. 'stub' — pandas "
+    "decode stand-in (byte stats, resize geometry) + every-2nd-frame "
+    "sampling (codec stubbed). 'y4m' — the SAME pipeline with a REAL "
     "codec in the loop: each doc's text is packed into a valid "
     "YUV4MPEG2 stream (6 frames of 8x8 luma), decoded back frame by "
     "frame by the pure-numpy Y4M decoder (operators/codecs.py), and "
@@ -291,55 +290,36 @@ def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fully decoded back through the RIFF walk + JPEG entropy decoder "
     "(decode_video); losslessness makes the byte-arithmetic oracle "
     "exact. Baseline (lossy) MJPEG through the identical path is "
-    "pytest-covered (tests/test_mjpeg.py). All variants: pure map, no "
-    "shuffle before the explode.",
+    "pytest-covered (tests/test_mjpeg.py). All variants: one pure map "
+    "after a keyless balance shuffle of the slim (doc_id, text, y4m) "
+    "slice.",
 )
 def mm_decode_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    d = attach_binary_payload(docs)
-    feats = decode_features(d)
-    stub = (
-        feats.withColumn(
-            "frame_no",
-            F.explode(F.sequence(F.lit(0), (F.col("n_frames") - 1).cast("int"), F.lit(2))),
-        )
-        .select(
-            F.lit("stub").alias("variant"),
-            "doc_id",
-            F.col("frame_no").cast("long").alias("frame_no"),
-            "byte_len",
-            "byte_sum",
-            # HALF_UP rounding on the Spark side (= SQL round): the
-            # decode kernel emits raw doubles; see operators/multimodal
-            F.round("mean_byte", 6).alias("mean_byte"),
-            "width",
-            "height",
-            "n_frames",
-            F.round("resize_scale", 6).alias("resize_scale"),
-        )
-    )
-    # one Python stage decodes the y4m container for every doc AND
-    # runs the lossless-JPEG-in-AVI round-trip for the 1-in-50 sample
+    # one Python stage over one repartitioned docs frame: the stub
+    # featurizer for every doc, the y4m container decode for every doc
+    # AND the lossless-JPEG-in-AVI round-trip for the 1-in-50 sample
     samples = decode_frame_samples(
         synthesize_y4m_payload(docs, w=8, h=8, n_frames=6),
         avi={"w": 8, "h": 8, "n_frames": 6, "every": 50, "offset": 13},
     )
-    decoded = samples.select(
-        "variant",
-        "doc_id",
-        "frame_no",
-        (F.col("width") * F.col("height")).alias("byte_len"),
-        F.col("f_sum").alias("byte_sum"),
-        F.round(F.col("f_sum") / (F.col("width") * F.col("height")), 6).alias("mean_byte"),
-        "width",
-        "height",
-        "n_frames",
-        F.round(F.lit(32.0) / F.greatest("width", "height"), 6).alias("resize_scale"),
-    )
     # the shuffle lets orderBy's range sampler read shuffle files instead
-    # of running both Python decodes a second time
+    # of running the Python decode a second time
     return (
-        stub.unionByName(decoded)
+        samples.select(
+            "variant",
+            "doc_id",
+            "frame_no",
+            "byte_len",
+            "byte_sum",
+            # HALF_UP rounding on the Spark side (= SQL round): numpy's
+            # .round is half-to-even; see operators/multimodal
+            F.round(F.col("byte_sum") / F.greatest("byte_len", F.lit(1)), 6).alias("mean_byte"),
+            "width",
+            "height",
+            "n_frames",
+            F.round(F.lit(32.0) / F.greatest("width", "height"), 6).alias("resize_scale"),
+        )
         .repartition("doc_id")
         .orderBy("variant", "doc_id", "frame_no")
     )

@@ -9,8 +9,13 @@ the configs that matter for a 100 TB run and for deterministic tests.
 from __future__ import annotations
 
 import os
+import weakref
 
+from py4j.java_gateway import java_import
 from pyspark.sql import SparkSession
+
+# The package root, for Python workers that start outside the repo.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Configs that are safe (and desirable) to set on an existing session at
 # runtime — e.g. the session the correctness driver hands us.
@@ -76,7 +81,46 @@ BUILD_CONFS: dict[str, str] = {
     # query context"; the Python traceback still has it. Static conf:
     # it takes effect only when the session is created.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Python workers fork from etly_spark/worker_daemon.py, which stops
+    # each task's importlib.invalidate_caches() from re-reading Spark's
+    # zip archives: 97-159 ms per task on a 4 vCPU host, 0.1 ms with
+    # it; a 4-partition mapInPandas noop fell from 0.34-0.41 s to
+    # 0.19-0.25 s. Workers import the daemon through the package root
+    # on their PYTHONPATH (Spark merges it with its own zips and the
+    # JVM's PYTHONPATH), so they find it from any cwd and in
+    # local-cluster executors. Static conf: sessions built elsewhere
+    # keep pyspark.daemon.
+    "spark.python.daemon.module": "etly_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+    # Catalyst's generated-class cache holds 100 classes by default,
+    # fewer than the catalog's working set: each perfbench catalog
+    # iteration recompiled 6 classes for text_quality and 3 for
+    # q9_set_ops (about 10 ms each, CodegenMetrics' compilation count);
+    # at 1000 both recompile none. Static conf.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
+
+# JVM classes PySpark names on hot paths through star imports: without
+# a single import each py4j lookup first misses Class.forName over every
+# star-imported package (~287 jars on the classpath here), 0.16 ms for
+# PythonUtils and 0.4-0.6 ms for PythonSQLUtils instead of a 0.08 ms
+# round trip. PySpark 4.1 already imports `functions` this way.
+HOT_JVM_CLASSES = (
+    "org.apache.spark.sql.functions",
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.api.python.PythonSQLUtils",
+)
+_IMPORTED_VIEWS: "weakref.WeakSet" = weakref.WeakSet()
+
+
+def import_hot_jvm_classes(spark: SparkSession) -> None:
+    """Single-import HOT_JVM_CLASSES into the session's JVM view, once."""
+    jvm = getattr(spark, "_jvm", None)  # None on Spark Connect
+    if jvm is None or jvm in _IMPORTED_VIEWS:
+        return
+    for fqn in HOT_JVM_CLASSES:
+        java_import(jvm, fqn)
+    _IMPORTED_VIEWS.add(jvm)
 
 
 def get_spark(app_name: str = "etly_spark", master: str | None = None) -> SparkSession:
@@ -93,6 +137,7 @@ def get_spark(app_name: str = "etly_spark", master: str | None = None) -> SparkS
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    import_hot_jvm_classes(spark)
     return spark
 
 
@@ -107,4 +152,5 @@ def tune_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in this deployment — keep going
+    import_hot_jvm_classes(spark)
     return spark
